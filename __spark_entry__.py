@@ -1574,8 +1574,8 @@ def _transcript_frame(spark, sf_dir):
                 F.lit("search"), F.lit("code"),
                 F.lit("browse"), F.lit("none"),
             ),
-            (half * half + (F.col("doc_id") / 10).cast("long"))
-            .cast("int") % 4 + 1,
+            ((half * half + (F.col("doc_id") / 10).cast("long")) % 4)
+            .cast("int") + 1,
         ),
     )
     return _docs(spark, sf_dir).select(

@@ -277,9 +277,9 @@ def tool_bigrams(
     bounded by turns-per-conversation, never corpus-sized) + one
     count aggregate; no arrays are materialized per conversation."""
     w = Window.partitionBy(conv_col).orderBy(turn_col)
-    t = df.where(
-        F.col(tool_col).isNotNull() & ~F.col(tool_col).isin(*skip)
-    )
+    t = df.where(F.col(tool_col).isNotNull())
+    if skip:  # isin() of nothing is an error, not an empty filter
+        t = t.where(~F.col(tool_col).isin(*skip))
     pairs = t.withColumn("_next", F.lead(tool_col).over(w)).where(
         F.col("_next").isNotNull()
     )

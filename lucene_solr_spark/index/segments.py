@@ -39,8 +39,10 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -85,6 +87,8 @@ DECODED_SCHEMA = StructType(
         StructField("norm_byte", IntegerType(), False),
     ]
 )
+
+_DECODED_ARROW = to_arrow_schema(DECODED_SCHEMA)
 
 
 def _bucket_col(term_col, n_buckets: int):
@@ -1018,6 +1022,18 @@ def read_manifest(
         return json.load(f)
 
 
+def _empty_decoded() -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "term": pd.Series([], dtype="object"),
+            "doc_id": pd.Series([], dtype="int64"),
+            "tf": pd.Series([], dtype="int32"),
+            "positions": pd.Series([], dtype="object"),
+            "norm_byte": pd.Series([], dtype="int32"),
+        }
+    )
+
+
 def _decode_partitions(want_positions: bool):
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1040,15 +1056,7 @@ def _decode_partitions(want_positions: bool):
                 else:
                     out_pos.extend([None] * len(d))
             if not out_doc:
-                yield pd.DataFrame(
-                    {
-                        "term": pd.Series([], dtype="object"),
-                        "doc_id": pd.Series([], dtype="int64"),
-                        "tf": pd.Series([], dtype="int32"),
-                        "positions": pd.Series([], dtype="object"),
-                        "norm_byte": pd.Series([], dtype="int32"),
-                    }
-                )
+                yield _empty_decoded()
                 continue
             yield pd.DataFrame(
                 {
@@ -1186,16 +1194,22 @@ class SegmentIndex:
         want_positions: bool = False,
         splits: list[int] | None = None,
     ) -> DataFrame:
-        """Pruned decode: bucket partition pruning + term row-group
-        pruning happen BEFORE decode (the .tip/FST lookup analogue).
-        ``splits``: optionally restrict to the given doc-range splits
-        (first_doc // split_range) — the skip-list analogue the WAND
-        paths use to decode only bound-surviving splits.
+        """Pruned decode of the given terms' postings (decode_postings),
+        after an optional bloom prune. ``splits``: optionally restrict
+        to the given doc-range splits (first_doc // split_range) — the
+        skip-list analogue the WAND paths use to decode only
+        bound-surviving splits.
 
         With blooms attached (attach_blooms), the candidate splits are
         further intersected with the bloom's maybe-set — the
         BloomFilteringPostingsFormat.java:324 NO-answer short-circuit:
-        a term absent from every split never touches the blocks scan."""
+        a term absent from every split never touches the blocks scan
+        and comes back as an empty local frame.
+
+        The WAND cost model (search/wand.py) also picks where decode
+        runs: a fetch of at most ``wand.overhead_eq_postings()``
+        postings is decoded eagerly on the driver, so the returned
+        frame is a local table rather than a lazy Python stage."""
         if self.blooms is not None:
             maybe = self.blooms.splits_for(list(terms))
             n_splits = self.stats.max_doc // self.split_range + 1
@@ -1205,26 +1219,79 @@ class SegmentIndex:
                 splits = sorted(
                     maybe if splits is None else (set(splits) & maybe)
                 )
-                if not splits:
-                    return self.blocks.where(F.lit(False)).mapInPandas(
-                        _decode_partitions(False), DECODED_SCHEMA
-                    )
-        pruned = self.blocks.where(
+        return self.decode_postings(terms, want_positions, splits)
+
+    def block_scan(
+        self, terms: list[str], splits: list[int] | None = None
+    ) -> DataFrame:
+        """The encoded blocks of ``terms`` (restricted to ``splits`` when
+        given): bucket partition pruning + term row-group pruning happen
+        in the scan, before any decode (the .tip/FST lookup
+        analogue)."""
+        scan = self.blocks.where(
             F.col("bucket").isin(self.buckets_of(terms))
             & F.col("term").isin(list(terms))
         )
         if splits is not None:
-            pruned = pruned.where(
+            scan = scan.where(
                 (F.col("first_doc") / F.lit(self.split_range))
                 .cast("long")
                 .isin(list(splits))
             )
-        return pruned.mapInPandas(
-            _decode_partitions(
-                want_positions and self.manifest["keep_positions"]
-            ),
-            DECODED_SCHEMA,
+        return scan
+
+    def decode_postings(
+        self,
+        terms: list[str],
+        want_positions: bool = False,
+        splits: list[int] | None = None,
+    ) -> DataFrame:
+        """The one decode entry point for a term (and split) restricted
+        fetch: DECODED_SCHEMA rows of ``block_scan(terms, splits)``.
+
+        Where decode runs is chosen by the WAND cost model. The fetch
+        size is Σ num_docs over the memoized split_meta rows of its
+        terms and splits. At or under ``wand.overhead_eq_postings()``
+        postings (the decode work one extra Spark job's fixed overhead
+        buys), the scan is pulled through Arrow ``toPandas`` — JVM only,
+        just the columns decode needs — decoded here with the same
+        kernel and returned as a local frame: the query then never
+        crosses into a Python worker for postings. Driver memory is
+        bounded by that cap. Larger fetches decode distributed in
+        ``mapInPandas``. A fetch with no blocks scans nothing."""
+        from ..search.wand import overhead_eq_postings  # wand imports us
+
+        want_positions = want_positions and self.manifest["keep_positions"]
+        n_postings = 0
+        if terms:
+            meta = self.split_meta(list(terms))
+            if splits is not None:
+                meta = meta[meta["split"].isin(list(splits))]
+            n_postings = int(meta["nd"].sum())
+        if n_postings == 0:
+            return self._local_postings(_empty_decoded())
+        scan = self.block_scan(terms, splits)
+        if n_postings > overhead_eq_postings():
+            return scan.mapInPandas(
+                _decode_partitions(want_positions), DECODED_SCHEMA
+            )
+        cols = ["term", "first_doc", "num_docs", "docs_bin", "tfs_bin",
+                "norms_bin"] + (["pos_bin"] if want_positions else [])
+        (decoded,) = _decode_partitions(want_positions)(
+            [scan.select(*cols).toPandas()]
         )
+        return self._local_postings(decoded)
+
+    def _local_postings(self, decoded: pd.DataFrame) -> DataFrame:
+        """A driver-decoded frame as a one-partition LocalTableScan.
+        It goes through an Arrow table because pandas input of zero rows
+        skips Arrow and would come back as an RDD scan. One partition:
+        the frame is at most a bounded fetch, and every extra partition
+        is one more task in each stage that reads it."""
+        table = pa.Table.from_pandas(
+            decoded, schema=_DECODED_ARROW, preserve_index=False
+        )
+        return self.spark.createDataFrame(table, DECODED_SCHEMA).coalesce(1)
 
     def postings_for_matched(
         self, matched: DataFrame, want_positions: bool = False

@@ -39,7 +39,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..index.segments import DECODED_SCHEMA, SegmentIndex, _decode_partitions
+from ..index.segments import SegmentIndex
 from .executor import Searcher
 
 # ---- cost model for the seed-then-prune engagement decision -----------
@@ -67,6 +67,14 @@ from .executor import Searcher
 # (skipInterval in Lucene40SkipListWriter.java:53-93); this replaces
 # round-4's fixed _SEED_MIN_SPLITS/_SEED_MIN_POSTINGS constants with
 # the measured break-even point.
+# The same break-even also picks WHERE a postings fetch decodes
+# (SegmentIndex.decode_postings): a fetch of at most
+# overhead_eq_postings() postings is decoded eagerly on the driver from
+# an Arrow toPandas of its pruned block scan and handed back as a local
+# frame, because the JVM->Python task boundary of a mapInPandas stage
+# costs about one such job overhead while the decode itself is small.
+# Larger fetches keep the distributed mapInPandas decode. Driver memory
+# is bounded by the same cap.
 # Defaults measured 2026-08-19 on local[8] over the sf0.1 gate segment
 # store (split_range=128): job overhead median 0.22 s; marginal decode
 # throughput 12.8-13.8k postings/s (Δpostings/Δwall between 4- and
@@ -183,16 +191,9 @@ def wand_or_search(
         )
 
     def score_splits(split_ids: list[int]) -> DataFrame:
-        pruned = index.blocks.where(
-            F.col("bucket").isin(index.buckets_of(present))
-            & F.col("term").isin(present)
-            & (F.col("first_doc") / F.lit(index.split_range))
-            .cast("long")
-            .isin(split_ids)
+        decoded = index.decode_postings(present, splits=split_ids).select(
+            "term", "doc_id", "tf", "norm_byte"
         )
-        decoded = pruned.mapInPandas(
-            _decode_partitions(False), DECODED_SCHEMA
-        ).select("term", "doc_id", "tf", "norm_byte")
         scored = searcher._apply_score_col(decoded, weights)
         return scored.groupBy("doc_id").agg(F.sum("score").alias("score"))
 
@@ -356,16 +357,9 @@ def wand_and_search(
         )
 
     def score_splits(split_ids: list[int]) -> DataFrame:
-        pruned = index.blocks.where(
-            F.col("bucket").isin(index.buckets_of(musts))
-            & F.col("term").isin(musts)
-            & (F.col("first_doc") / F.lit(index.split_range))
-            .cast("long")
-            .isin(split_ids)
+        decoded = index.decode_postings(musts, splits=split_ids).select(
+            "term", "doc_id", "tf", "norm_byte"
         )
-        decoded = pruned.mapInPandas(
-            _decode_partitions(False), DECODED_SCHEMA
-        ).select("term", "doc_id", "tf", "norm_byte")
         scored = searcher._apply_score_col(decoded, weights)
         return (
             scored.groupBy("doc_id")

@@ -30,14 +30,26 @@ def _plan(df) -> str:
     )
 
 
-def test_block_scan_is_bucket_and_term_pruned(seg):
-    pruned = seg.postings_for_terms(["error"])
+def test_block_scan_is_bucket_and_term_pruned(seg, monkeypatch):
+    pruned = seg.block_scan(["error"])
     plan = _plan(pruned)
     # partition pruning on the bucket directory column
     assert "PartitionFilters" in plan and "bucket" in plan, plan
     # term equality/IN reaches the parquet row-group stats
     pf = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert pf and "term" in pf[0], plan
+    # and a postings fetch reads exactly that scan, whichever side of
+    # the driver-decode bound it falls on
+    calls = []
+    scan = type(seg).block_scan
+
+    def spy(self, terms, splits=None):
+        calls.append((list(terms), splits))
+        return scan(self, terms, splits)
+
+    monkeypatch.setattr(type(seg), "block_scan", spy)
+    assert seg.postings_for_terms(["error"]).count() > 0
+    assert calls == [(["error"], None)]
 
 
 def test_doc_store_predicate_pushdown(spark):

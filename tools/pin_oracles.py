@@ -92,7 +92,26 @@ def _values_block(rows, cols, types) -> str:
     return f"SELECT {casts} FROM (VALUES\n{tuples}\n) t({alias})"
 
 
+def requested_gates(argv: list[str]) -> set[str]:
+    """The gate subset named on argv. Any name that is not a pinned
+    gate exits non-zero, listing the names, before a pin is touched —
+    re-pinning a subset keeps only the OTHER gates' pins, so an unknown
+    name would otherwise silently drop its existing pin."""
+    only = set(argv)
+    unknown = sorted(only - set(PINNED_GATES))
+    if unknown:
+        sys.exit(
+            f"not pinned gates: {' '.join(unknown)}\n"
+            f"pinned gates: {' '.join(PINNED_GATES)}"
+        )
+    return only
+
+
 def main() -> None:
+    # optional argv subset: re-pin only the named gates, keep the rest
+    # of the existing PINS verbatim (fast iteration on one gate)
+    only = requested_gates(sys.argv[1:])
+
     from lucene_solr_spark.session import get_spark
 
     import __spark_entry__ as E
@@ -101,9 +120,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
 
-    # optional argv subset: re-pin only the named gates, keep the rest
-    # of the existing PINS verbatim (fast iteration on one gate)
-    only = set(sys.argv[1:])
     pins: dict[str, str] = {}
     if only:
         from lucene_solr_spark.oracle_pins import PINS as _existing
