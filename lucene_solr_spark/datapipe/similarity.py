@@ -14,6 +14,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..functions.literals import const_array
+
 
 def dot(a: Column, b: Column) -> Column:
     """Left-fold double dot product — deterministic summation order
@@ -41,7 +43,7 @@ def knn_cosine_bruteforce(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k neighbors of a literal query vector: (vec_id, cos)."""
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
+    qv = const_array(query_vec, "double")
     scored = embeddings.select(
         F.col(id_col),
         F.round(cosine(F.col(vec_col), qv), 4).alias("cos"),
@@ -527,7 +529,7 @@ def knn_cosine_ivf(
         i for _, i in sorted(sims, key=lambda t: (-t[0], t[1]))
     ][:nprobe]
     cand = assigned.where(F.col("centroid_id").isin(probe))
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
+    qv = const_array(query_vec, "double")
     scored = cand.select(
         F.col(id_col),
         F.round(cosine(F.col(vec_col), qv), 4).alias("cos"),

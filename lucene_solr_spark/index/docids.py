@@ -29,6 +29,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ..functions.literals import const_array
+
 _SAMPLE_CAP = 100_000
 
 
@@ -83,16 +85,21 @@ def assign_doc_ids(
         bases.append(acc)
         acc += counts.get(b, 0)
 
-    base_arr = F.array(*[F.lit(v) for v in bases])
+    return _number_buckets(bucketed, bases, order_cols, doc_id_col)
+
+
+def _number_buckets(
+    bucketed: DataFrame,
+    bases: list[int],
+    order_cols: list[str],
+    doc_id_col: str,
+) -> DataFrame:
+    """doc_id = bases[_bkt] + row_number() within the bucket - 1. The
+    bases are bigint literals, so the sum is long arithmetic: ids past
+    2^31 never pass through an int."""
+    base_arr = const_array(bases, "bigint")
     w = Window.partitionBy("_bkt").orderBy(*order_cols)
-    return (
-        bucketed.withColumn(
-            doc_id_col,
-            (
-                F.element_at(base_arr, F.col("_bkt") + 1)
-                + F.row_number().over(w)
-                - 1
-            ).cast("long"),
-        )
-        .drop("_bkt")
-    )
+    return bucketed.withColumn(
+        doc_id_col,
+        F.element_at(base_arr, F.col("_bkt") + 1) + F.row_number().over(w) - 1,
+    ).drop("_bkt")

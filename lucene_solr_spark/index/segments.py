@@ -54,6 +54,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.literals import sql_in
 from ..search.bm25 import avg_field_length
 from .norms import NORM_TABLE
 from .builder import CollectionStats, InvertedIndex
@@ -88,7 +89,19 @@ DECODED_SCHEMA = StructType(
     ]
 )
 
-_DECODED_ARROW = to_arrow_schema(DECODED_SCHEMA)
+
+def local_frame(
+    spark: SparkSession, pdf: pd.DataFrame, schema: StructType
+) -> DataFrame:
+    """A driver-side pandas frame as a one-partition LocalTableScan.
+    It goes through an Arrow table because pandas input of zero rows
+    skips Arrow and would come back as an RDD scan. One partition: the
+    frame is at most a bounded fetch, and every extra partition is one
+    more task in each stage that reads it."""
+    table = pa.Table.from_pandas(
+        pdf, schema=to_arrow_schema(schema), preserve_index=False
+    )
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def _bucket_col(term_col, n_buckets: int):
@@ -1115,8 +1128,9 @@ class SegmentIndex:
     _SPLIT_META_CACHE_MAX = 4096  # terms; FIFO evict past this
 
     def split_meta(self, terms: list[str]) -> "pd.DataFrame":
-        """Per-(term, split) block metadata for the WAND bound pass:
-        columns (term, split, max_tf, min_nb, nd), one row per block.
+        """Per-(term, split) block metadata for the WAND bound pass and
+        the term statistics: columns (term, split, max_tf, min_nb, nd,
+        sum_tf), one row per block.
 
         Memoized per TERM on the driver — the TermStates / skip-data
         cache analogue (Lucene readers keep term metadata hot per
@@ -1129,6 +1143,7 @@ class SegmentIndex:
         missing = sorted(
             {t for t in terms if t not in self._split_meta_cache}
         )
+        fetched = None
         if missing:
             fetched = (
                 self.blocks.where(
@@ -1143,20 +1158,25 @@ class SegmentIndex:
                     "max_tf",
                     "min_nb",
                     F.col("num_docs").alias("nd"),
+                    "sum_tf",
                 )
                 .toPandas()
             )
-            for t in missing:
-                self._split_meta_cache[t] = fetched[
-                    fetched["term"] == t
-                ].reset_index(drop=True)
-            while (
-                len(self._split_meta_cache) > self._SPLIT_META_CACHE_MAX
-            ):
-                self._split_meta_cache.pop(
-                    next(iter(self._split_meta_cache))
-                )
-        frames = [self._split_meta_cache[t] for t in sorted(set(terms))]
+        # the result is built before eviction: one call may ask for
+        # more terms than the cache holds
+        frames = []
+        for t in sorted(set(terms)):
+            frame = self._split_meta_cache.get(t)
+            if frame is None:
+                frame = fetched[fetched["term"] == t].reset_index(drop=True)
+                self._split_meta_cache[t] = frame
+            frames.append(frame)
+        while len(self._split_meta_cache) > self._SPLIT_META_CACHE_MAX:
+            self._split_meta_cache.pop(next(iter(self._split_meta_cache)))
+        if not frames:
+            return pd.DataFrame(
+                columns=["term", "split", "max_tf", "min_nb", "nd", "sum_tf"]
+            )
         return pd.concat(frames, ignore_index=True)
 
     @classmethod
@@ -1210,16 +1230,35 @@ class SegmentIndex:
         runs: a fetch of at most ``wand.overhead_eq_postings()``
         postings is decoded eagerly on the driver, so the returned
         frame is a local table rather than a lazy Python stage."""
-        if self.blooms is not None:
-            maybe = self.blooms.splits_for(list(terms))
-            n_splits = self.stats.max_doc // self.split_range + 1
-            if splits is None and len(maybe) >= n_splits:
-                pass  # bloom excludes nothing — keep the unpruned scan
-            else:
-                splits = sorted(
-                    maybe if splits is None else (set(splits) & maybe)
-                )
-        return self.decode_postings(terms, want_positions, splits)
+        return self.decode_postings(
+            terms, want_positions, self._bloom_splits(terms, splits)
+        )
+
+    def postings_for_terms_local(
+        self,
+        terms: list[str],
+        want_positions: bool = False,
+        splits: list[int] | None = None,
+    ) -> "pd.DataFrame | None":
+        """postings_for_terms as a driver-side pandas frame, or None
+        when the fetch is above the bound (decode_postings_local)."""
+        return self.decode_postings_local(
+            terms, want_positions, self._bloom_splits(terms, splits)
+        )
+
+    def _bloom_splits(
+        self, terms: list[str], splits: list[int] | None
+    ) -> list[int] | None:
+        """``splits`` intersected with the attached blooms' maybe-set
+        (unchanged without blooms, or when the bloom excludes
+        nothing)."""
+        if self.blooms is None:
+            return splits
+        maybe = self.blooms.splits_for(list(terms))
+        n_splits = self.stats.max_doc // self.split_range + 1
+        if splits is None and len(maybe) >= n_splits:
+            return None  # bloom excludes nothing — keep the unpruned scan
+        return sorted(maybe if splits is None else (set(splits) & maybe))
 
     def block_scan(
         self, terms: list[str], splits: list[int] | None = None
@@ -1228,17 +1267,19 @@ class SegmentIndex:
         given): bucket partition pruning + term row-group pruning happen
         in the scan, before any decode (the .tip/FST lookup
         analogue)."""
-        scan = self.blocks.where(
-            F.col("bucket").isin(self.buckets_of(terms))
-            & F.col("term").isin(list(terms))
-        )
+        cond = [
+            sql_in("bucket", self.buckets_of(terms), "int"),
+            sql_in("term", terms, "string"),
+        ]
         if splits is not None:
-            scan = scan.where(
-                (F.col("first_doc") / F.lit(self.split_range))
-                .cast("long")
-                .isin(list(splits))
+            cond.append(
+                sql_in(
+                    f"CAST(first_doc / {self.split_range} AS BIGINT)",
+                    splits,
+                    "bigint",
+                )
             )
-        return scan
+        return self.blocks.where(" AND ".join(cond))
 
     def decode_postings(
         self,
@@ -1249,49 +1290,56 @@ class SegmentIndex:
         """The one decode entry point for a term (and split) restricted
         fetch: DECODED_SCHEMA rows of ``block_scan(terms, splits)``.
 
-        Where decode runs is chosen by the WAND cost model. The fetch
-        size is Σ num_docs over the memoized split_meta rows of its
-        terms and splits. At or under ``wand.overhead_eq_postings()``
+        Where decode runs is chosen by the WAND cost model: a bounded
+        fetch is decode_postings_local's frame, handed back as a local
+        table, so the query never crosses into a Python worker for
+        postings. Larger fetches decode distributed in ``mapInPandas``."""
+        decoded = self.decode_postings_local(terms, want_positions, splits)
+        if decoded is not None:
+            return local_frame(self.spark, decoded, DECODED_SCHEMA)
+        return self.block_scan(terms, splits).mapInPandas(
+            _decode_partitions(
+                want_positions and self.manifest["keep_positions"]
+            ),
+            DECODED_SCHEMA,
+        )
+
+    def decode_postings_local(
+        self,
+        terms: list[str],
+        want_positions: bool = False,
+        splits: list[int] | None = None,
+    ) -> "pd.DataFrame | None":
+        """A bounded fetch decoded on the driver: the DECODED_SCHEMA rows
+        of ``block_scan(terms, splits)`` as pandas, or None when the
+        fetch is too large to pull.
+
+        The fetch size is Σ num_docs over the memoized split_meta rows of
+        its terms and splits. At or under ``wand.overhead_eq_postings()``
         postings (the decode work one extra Spark job's fixed overhead
         buys), the scan is pulled through Arrow ``toPandas`` — JVM only,
-        just the columns decode needs — decoded here with the same
-        kernel and returned as a local frame: the query then never
-        crosses into a Python worker for postings. Driver memory is
-        bounded by that cap. Larger fetches decode distributed in
-        ``mapInPandas``. A fetch with no blocks scans nothing."""
+        just the columns decode needs — and decoded here with the same
+        kernel the distributed path runs. Driver memory is bounded by
+        that cap. The same bound lets bounded sloppy phrases finish on
+        the driver (Searcher._score_phrase_sloppy). A fetch with no
+        blocks scans nothing."""
         from ..search.wand import overhead_eq_postings  # wand imports us
 
         want_positions = want_positions and self.manifest["keep_positions"]
-        n_postings = 0
-        if terms:
-            meta = self.split_meta(list(terms))
-            if splits is not None:
-                meta = meta[meta["split"].isin(list(splits))]
-            n_postings = int(meta["nd"].sum())
+        meta = self.split_meta(list(terms))
+        if splits is not None:
+            meta = meta[meta["split"].isin(list(splits))]
+        n_postings = int(meta["nd"].sum())
         if n_postings == 0:
-            return self._local_postings(_empty_decoded())
-        scan = self.block_scan(terms, splits)
+            return _empty_decoded()
         if n_postings > overhead_eq_postings():
-            return scan.mapInPandas(
-                _decode_partitions(want_positions), DECODED_SCHEMA
-            )
+            return None
         cols = ["term", "first_doc", "num_docs", "docs_bin", "tfs_bin",
                 "norms_bin"] + (["pos_bin"] if want_positions else [])
         (decoded,) = _decode_partitions(want_positions)(
-            [scan.select(*cols).toPandas()]
+            [self.block_scan(terms, splits).select(*cols).toPandas()]
         )
-        return self._local_postings(decoded)
-
-    def _local_postings(self, decoded: pd.DataFrame) -> DataFrame:
-        """A driver-decoded frame as a one-partition LocalTableScan.
-        It goes through an Arrow table because pandas input of zero rows
-        skips Arrow and would come back as an RDD scan. One partition:
-        the frame is at most a bounded fetch, and every extra partition
-        is one more task in each stage that reads it."""
-        table = pa.Table.from_pandas(
-            decoded, schema=_DECODED_ARROW, preserve_index=False
-        )
-        return self.spark.createDataFrame(table, DECODED_SCHEMA).coalesce(1)
+        return decoded
 
     def postings_for_matched(
         self, matched: DataFrame, want_positions: bool = False
@@ -1336,9 +1384,18 @@ class SegmentIndex:
         return out
 
     def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
-        rows = (
-            self.terms_stats.where(F.col("term").isin(list(terms)))
-            .select("term", "df", "ttf")
-            .collect()
+        """{term: (df, ttf)} for the indexed ``terms``, from the memoized
+        split_meta rows: df = Σ num_docs and ttf = Σ sum_tf over the
+        term's blocks, the same sums build_segment_store writes to
+        ``terms_stats``. A warm query therefore scans nothing for its
+        statistics (Lucene's TermStates cache)."""
+        sums = (
+            self.split_meta(list(terms))
+            .astype({"nd": "int64", "sum_tf": "int64"})
+            .groupby("term")[["nd", "sum_tf"]]
+            .sum()
         )
-        return {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows}
+        return {
+            t: (int(df), int(ttf))
+            for t, df, ttf in zip(sums.index, sums["nd"], sums["sum_tf"])
+        }

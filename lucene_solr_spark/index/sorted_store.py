@@ -36,6 +36,8 @@ from typing import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from ..functions.literals import const_array
+
 MANIFEST = "sorted_manifest.json"
 
 
@@ -58,7 +60,7 @@ def build_sorted_store(
         ).alias("b")
     ).first()["b"]
     bounds = [float(b) for b in (bounds or [])]
-    barr = F.array(*[F.lit(b) for b in bounds])
+    barr = const_array(bounds, "double")
     bucket = F.size(
         F.filter(barr, lambda b: b <= F.col(sort_col).cast("double"))
     ).cast("int")

@@ -26,8 +26,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
+from ..functions.literals import const_array
 from ..index.builder import InvertedIndex
 from ..index.norms import NORM_TABLE
 from .bm25 import avg_field_length, norm_cache, term_weight
@@ -77,6 +78,26 @@ def _collect_terms(q: Query) -> set[str]:
     if isinstance(q, MultiPhraseQuery):
         return {t for arr in q.positions for t in arr}
     return set()
+
+
+def _clause_offsets(terms: list[str]) -> dict[str, list[int]]:
+    """Phrase term -> the query offsets of the clauses it fills. A
+    repeated term fills several, so its postings feed each of them."""
+    offsets: dict[str, list[int]] = {}
+    for i, t in enumerate(terms):
+        offsets.setdefault(t, []).append(i)
+    return offsets
+
+
+def _clause_col(offsets: dict[str, list[int]]) -> Column:
+    """Per postings row of a phrase fetch, its term's clause offsets."""
+    return F.create_map(
+        *[
+            x
+            for t, offs in offsets.items()
+            for x in (F.lit(t), const_array(offs, "int"))
+        ]
+    )[F.col("term")]
 
 
 class Searcher:
@@ -266,7 +287,7 @@ class Searcher:
                 "score", bm25_f32(F.col("term"), F.col("tf"), F.col("norm_byte"))
             )
         # double path: whole-stage-codegen'd, oracle-SQL-identical math
-        cache_arr = F.array(*[F.lit(float(v)) for v in self.cache64.tolist()])
+        cache_arr = const_array(self.cache64.tolist(), "double")
         wexpr = F.create_map(
             *[x for t, w in weights.items() for x in (F.lit(t), F.lit(float(w)))]
         )
@@ -486,26 +507,30 @@ class Searcher:
         if q.slop > 0:
             return self._score_phrase_sloppy(q, term_stats)
         n = len(terms)
-        parts = []
-        for i, t in enumerate(terms):
-            p = (
-                self._postings_for([t], want_positions=True)
-                .select(
-                    "doc_id",
-                    "norm_byte",
-                    F.explode("positions").alias("pos"),
-                )
-                .select(
-                    "doc_id",
-                    "norm_byte",
-                    (F.col("pos") - F.lit(i)).alias("apos"),
-                    F.lit(i).alias("clause"),
-                )
+        # one fetch for the distinct terms, then one row per clause
+        unioned = (
+            self._postings_for(sorted(set(terms)), want_positions=True)
+            .select(
+                "doc_id",
+                "norm_byte",
+                "positions",
+                F.explode(_clause_col(_clause_offsets(terms))).alias(
+                    "clause"
+                ),
             )
-            parts.append(p)
-        unioned = parts[0]
-        for p in parts[1:]:
-            unioned = unioned.unionByName(p)
+            .select(
+                "doc_id",
+                "norm_byte",
+                F.explode("positions").alias("pos"),
+                "clause",
+            )
+            .select(
+                "doc_id",
+                "norm_byte",
+                (F.col("pos") - F.col("clause")).alias("apos"),
+                "clause",
+            )
+        )
         occ = (
             unioned.groupBy("doc_id", "apos")
             .agg(
@@ -523,37 +548,54 @@ class Searcher:
         self, q: PhraseQuery, term_stats: dict
     ) -> DataFrame:
         """SloppyPhraseScorer path: per-doc greedy walk over the clause
-        position lists (sloppy.py), freq is the float32 slop-factor sum."""
-        from .sloppy import sloppy_freq_partitions
+        position lists (sloppy.py), freq is the float32 slop-factor sum.
+
+        A bounded fetch (the WAND cost model's driver-decode bound) runs
+        the walk on the driver over the decoded frame; a larger one runs
+        it distributed in mapInPandas."""
+        from .sloppy import FREQ_SCHEMA, sloppy_freq_partitions, sloppy_freqs
 
         terms = list(q.terms)
         # hasRpts (SloppyPhraseScorer.java:106-215): clauses sharing a
         # term form repeat groups, sorted by query offset
-        by_term: dict[str, list[int]] = {}
-        for i, t in enumerate(terms):
-            by_term.setdefault(t, []).append(i)
+        by_term = _clause_offsets(terms)
         rpt_groups = [v for v in by_term.values() if len(v) > 1]
         n = len(terms)
-        parts = []
-        for i, t in enumerate(terms):
-            parts.append(
-                self._postings_for([t], want_positions=True).select(
+        distinct = sorted(set(terms))
+        local = None
+        if hasattr(self.index, "postings_for_terms_local"):
+            local = self.index.postings_for_terms_local(
+                distinct, want_positions=True
+            )
+        if local is not None:
+            from ..index.segments import local_frame
+
+            rows = (
+                local.assign(clause=local["term"].map(by_term))
+                .explode("clause")
+                .astype({"clause": "int64"})
+                .sort_values(["doc_id", "clause"], kind="stable")
+            )
+            freqs = local_frame(
+                self.index.spark,
+                sloppy_freqs(rows, n, q.slop, rpt_groups),
+                FREQ_SCHEMA,
+            )
+        else:
+            rows = (
+                self._postings_for(distinct, want_positions=True)
+                .select(
                     "doc_id",
                     "norm_byte",
-                    F.lit(i).alias("clause"),
+                    F.explode(_clause_col(by_term)).alias("clause"),
                     "positions",
                 )
+                .repartition("doc_id")
+                .sortWithinPartitions("doc_id", "clause")
             )
-        unioned = parts[0]
-        for p in parts[1:]:
-            unioned = unioned.unionByName(p)
-        rows = unioned.repartition("doc_id").sortWithinPartitions(
-            "doc_id", "clause"
-        )
-        freqs = rows.mapInPandas(
-            sloppy_freq_partitions(n, q.slop, rpt_groups),
-            "doc_id long, tf double, norm_byte int",
-        )
+            freqs = rows.mapInPandas(
+                sloppy_freq_partitions(n, q.slop, rpt_groups), FREQ_SCHEMA
+            )
         return self._score_phrase_freqs(freqs, terms, q.boost, term_stats)
 
     def _score_multi_phrase(
@@ -630,7 +672,7 @@ class Searcher:
         union enums Lucene's repeat detection keys on the enum, and two
         slots sharing a term would need the hasRpts cell walk over
         merged lists; declared out of scope (raises)."""
-        from .sloppy import sloppy_freq_partitions
+        from .sloppy import FREQ_SCHEMA, sloppy_freq_partitions
 
         seen: set[str] = set()
         for alts in present:
@@ -666,8 +708,7 @@ class Searcher:
             "doc_id", "norm_byte", "clause", "positions"
         ).repartition("doc_id").sortWithinPartitions("doc_id", "clause")
         freqs = rows.mapInPandas(
-            sloppy_freq_partitions(n, q.slop, []),
-            "doc_id long, tf double, norm_byte int",
+            sloppy_freq_partitions(n, q.slop, []), FREQ_SCHEMA
         )
         return self._score_phrase_freqs(freqs, flat, q.boost, term_stats)
 
@@ -703,7 +744,7 @@ class Searcher:
                 w = w + self._idf64(term_stats.get(t, (0, 0))[0])
             weight_value = q_boost * w * (1.2 + 1)
             cache_vals = self.cache64.tolist()
-        cache_arr = F.array(*[F.lit(float(v)) for v in cache_vals])
+        cache_arr = const_array(cache_vals, "double")
         tf = F.col("tf").cast("double")
         denom_add = F.element_at(cache_arr, F.col("norm_byte") + 1)
         return freqs.select(

@@ -25,6 +25,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..functions.literals import const_array
 from ..index.norms import NORM_TABLE
 from .executor import Searcher
 
@@ -62,10 +63,8 @@ def explain(searcher: Searcher, terms: list[str]) -> DataFrame:
     # NORM_TABLE (1/f² of the byte315 float): the quantized doc length
     # the scorer actually used, not the raw stored float
     decode = NORM_TABLE.astype(np.float64)
-    fl_arr = F.array(*[F.lit(float(v)) for v in decode.tolist()])
-    cache_arr = F.array(
-        *[F.lit(float(v)) for v in searcher.cache64.tolist()]
-    )
+    fl_arr = const_array(decode.tolist(), "double")
+    cache_arr = const_array(searcher.cache64.tolist(), "double")
     p = searcher._postings_for(present).select(
         "term", "doc_id", "tf", "norm_byte"
     )

@@ -70,6 +70,8 @@ import re
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..functions.literals import const_array
+
 _TOK = re.compile(
     r"\s*(?:"
     r"(?P<num>-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)"
@@ -334,7 +336,7 @@ def _compile(node, ctx: _Ctx) -> Column:
             .select(
                 "doc_id",
                 F.element_at(
-                    F.array(*[F.lit(float(v)) for v in decode]),
+                    const_array(decode.tolist(), "double"),
                     F.col("__nb") + 1,
                 ).alias(alias),
             )

@@ -31,6 +31,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..functions.literals import const_array
 from ..index.norms import NORM_TABLE
 from .executor import Searcher
 
@@ -71,7 +72,7 @@ def lm_dirichlet_search(
     wmap = F.create_map(
         *[x for t in present for x in (F.lit(t), F.lit(mu_pc[t]))]
     )
-    qdl_arr = F.array(*[F.lit(float(v)) for v in NORM_TABLE.tolist()])
+    qdl_arr = const_array(NORM_TABLE.tolist(), "double")
     dl = F.element_at(qdl_arr, F.col("norm_byte") + 1)
     partial = (
         searcher._postings_for(present)
@@ -138,7 +139,7 @@ def dfr_inl2_search(
     wmap = F.create_map(
         *[x for t in present for x in (F.lit(t), F.lit(basic[t]))]
     )
-    qdl_arr = F.array(*[F.lit(float(v)) for v in NORM_TABLE.tolist()])
+    qdl_arr = const_array(NORM_TABLE.tolist(), "double")
     dl = F.element_at(qdl_arr, F.col("norm_byte") + 1)
     tfn = (
         F.col("tf").cast("double")
@@ -191,7 +192,7 @@ def ib_ll_search(
     wmap = F.create_map(
         *[x for t in present for x in (F.lit(t), F.lit(lam[t]))]
     )
-    qdl_arr = F.array(*[F.lit(float(v)) for v in NORM_TABLE.tolist()])
+    qdl_arr = const_array(NORM_TABLE.tolist(), "double")
     dl = F.element_at(qdl_arr, F.col("norm_byte") + 1)
     tfn = (
         F.col("tf").cast("double")
@@ -254,7 +255,7 @@ def tfidf_search(
         ]
     )
     inv_sqrt_qdl = [1.0 / math.sqrt(float(v)) for v in NORM_TABLE.tolist()]
-    norm_arr = F.array(*[F.lit(v) for v in inv_sqrt_qdl])
+    norm_arr = const_array(inv_sqrt_qdl, "double")
     partial = (
         searcher._postings_for(present)
         .select("term", "doc_id", "tf", "norm_byte")
@@ -366,7 +367,7 @@ def sweetspot_search(
         )
         for x in (float(v) for v in NORM_TABLE.tolist())
     ]
-    norm_arr = F.array(*[F.lit(v) for v in length_norms])
+    norm_arr = const_array(length_norms, "double")
     wmap = F.create_map(
         *[
             x

@@ -29,6 +29,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 
 def sloppy_freq(plists: list[np.ndarray], slop: int) -> float:
@@ -196,44 +203,62 @@ def sloppy_freq_rpts(
     return float(freq)
 
 
-def sloppy_freq_partitions(
-    n_clauses: int, slop: int, rpt_groups: list[list[int]] | None = None
-):
-    """mapInPandas kernel over rows (doc_id, clause, positions, norm_byte)
-    hash-partitioned by doc_id and sorted by (doc_id, clause); a doc's
-    rows never cross partitions, but may cross Arrow batches (carried).
+FREQ_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("tf", DoubleType()),
+        StructField("norm_byte", IntegerType()),
+    ]
+)
+
+
+def sloppy_freqs(
+    pdf: pd.DataFrame,
+    n_clauses: int,
+    slop: int,
+    rpt_groups: list[list[int]] | None = None,
+) -> pd.DataFrame:
+    """(doc_id, tf, norm_byte) of every doc in ``pdf`` with a sloppy
+    match. ``pdf`` holds rows (doc_id, clause, positions, norm_byte),
+    every row of a doc in it, sorted by (doc_id, clause).
 
     ``rpt_groups``: clause offsets sharing a term (hasRpts path); empty
     or None selects the simple no-repeats walk."""
     rpt_groups = [sorted(g) for g in (rpt_groups or [])]
+    out_doc, out_tf, out_nb = [], [], []
+    for doc_id, g in pdf.groupby("doc_id", sort=False):
+        if g["clause"].nunique() != n_clauses:
+            continue  # missing a term -> no phrase candidate
+        plists = [None] * n_clauses
+        for cl, plist in zip(g["clause"], g["positions"]):
+            plists[int(cl)] = np.asarray(plist, dtype=np.int64) - int(cl)
+        if rpt_groups:
+            f = sloppy_freq_rpts(plists, slop, rpt_groups)
+        else:
+            f = sloppy_freq(plists, slop)
+        if f > 0.0:
+            out_doc.append(int(doc_id))
+            out_tf.append(f)
+            out_nb.append(int(g["norm_byte"].iloc[0]))
+    return pd.DataFrame(
+        {
+            "doc_id": pd.Series(out_doc, dtype="int64"),
+            "tf": pd.Series(out_tf, dtype="float64"),
+            "norm_byte": pd.Series(out_nb, dtype="int32"),
+        }
+    )
+
+
+def sloppy_freq_partitions(
+    n_clauses: int, slop: int, rpt_groups: list[list[int]] | None = None
+):
+    """mapInPandas kernel (output FREQ_SCHEMA) running sloppy_freqs over
+    rows hash-partitioned by doc_id and sorted by (doc_id, clause); a
+    doc's rows never cross partitions, but may cross Arrow batches
+    (carried)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None
-
-        def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-            out_doc, out_tf, out_nb = [], [], []
-            for doc_id, g in pdf.groupby("doc_id", sort=False):
-                if g["clause"].nunique() != n_clauses:
-                    continue  # missing a term -> no phrase candidate
-                plists = [None] * n_clauses
-                for cl, plist in zip(g["clause"], g["positions"]):
-                    plists[int(cl)] = np.asarray(plist, dtype=np.int64) - int(cl)
-                if rpt_groups:
-                    f = sloppy_freq_rpts(plists, slop, rpt_groups)
-                else:
-                    f = sloppy_freq(plists, slop)
-                if f > 0.0:
-                    out_doc.append(int(doc_id))
-                    out_tf.append(f)
-                    out_nb.append(int(g["norm_byte"].iloc[0]))
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "tf": pd.Series(out_tf, dtype="float64"),
-                    "norm_byte": pd.Series(out_nb, dtype="int32"),
-                }
-            )
-
         for pdf in batches:
             if carry is not None and len(carry):
                 pdf = pd.concat([carry, pdf], ignore_index=True)
@@ -246,8 +271,8 @@ def sloppy_freq_partitions(
             head = pdf.iloc[: len(pdf) - n_tail]
             carry = pdf.iloc[len(pdf) - n_tail :]
             if len(head):
-                yield emit(head)
+                yield sloppy_freqs(head, n_clauses, slop, rpt_groups)
         if carry is not None and len(carry):
-            yield emit(carry)
+            yield sloppy_freqs(carry, n_clauses, slop, rpt_groups)
 
     return run

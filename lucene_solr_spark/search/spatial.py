@@ -19,6 +19,8 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..functions.literals import const_array
+
 EARTH_RADIUS_KM = 6371.0087714  # GeoDistanceUtils mean earth radius
 
 
@@ -154,7 +156,7 @@ def geohash_encode(lat: Column, lon: Column) -> Column:
     """Precision-12 geohash of (lat, lon) as a string column."""
     lat_i = _gh_cell(lat, 90.0, 180.0)
     lon_i = _gh_cell(lon, 180.0, 360.0)
-    alpha = F.array(*[F.lit(c) for c in GEOHASH_ALPHABET])
+    alpha = const_array(GEOHASH_ALPHABET, "string")
     chars = []
     for c in range(GEOHASH_PRECISION):
         idx: Column | None = None

@@ -68,13 +68,16 @@ from .executor import Searcher
 # round-4's fixed _SEED_MIN_SPLITS/_SEED_MIN_POSTINGS constants with
 # the measured break-even point.
 # The same break-even also picks WHERE a postings fetch decodes
-# (SegmentIndex.decode_postings): a fetch of at most
+# (SegmentIndex.decode_postings_local): a fetch of at most
 # overhead_eq_postings() postings is decoded eagerly on the driver from
-# an Arrow toPandas of its pruned block scan and handed back as a local
-# frame, because the JVM->Python task boundary of a mapInPandas stage
-# costs about one such job overhead while the decode itself is small.
-# Larger fetches keep the distributed mapInPandas decode. Driver memory
-# is bounded by the same cap.
+# an Arrow toPandas of its pruned block scan, because the JVM->Python
+# task boundary of a mapInPandas stage costs about one such job
+# overhead while the decode itself is small. decode_postings hands that
+# frame back as a local table, and a bounded sloppy phrase also runs its
+# position walk (sloppy.sloppy_freqs) on the driver over it, so neither
+# query shape starts a Python worker. Larger fetches keep the
+# distributed mapInPandas decode and walk. Driver memory is bounded by
+# the same cap.
 # Defaults measured 2026-08-19 on local[8] over the sf0.1 gate segment
 # store (split_range=128): job overhead median 0.22 s; marginal decode
 # throughput 12.8-13.8k postings/s (Δpostings/Δwall between 4- and
@@ -435,6 +438,13 @@ class _SplitView:
         self, terms: list[str], want_positions: bool = False
     ):
         return self._seg.postings_for_terms(
+            terms, want_positions, splits=self._splits
+        )
+
+    def postings_for_terms_local(
+        self, terms: list[str], want_positions: bool = False
+    ):
+        return self._seg.postings_for_terms_local(
             terms, want_positions, splits=self._splits
         )
 

@@ -48,14 +48,14 @@ BOUNDED: dict[tuple[str, str], tuple[int, str]] = {
     ("index/docids.py", "assign_doc_ids"): (1, "one row per range bucket"),
     ("index/fields.py", "build_fielded_index"): (1, "one row per field"),
     ("index/segments.py", "SegmentIndex.buckets_of"): (1, QUERY_TERMS),
-    ("index/segments.py", "SegmentIndex.decode_postings"): (
+    ("index/segments.py", "SegmentIndex.decode_postings_local"): (
         1,
         "at most wand.overhead_eq_postings() postings (2,860 at the "
-        "shipped constants), checked on split_meta before the fetch",
+        "shipped constants), checked on split_meta before the fetch; "
+        "a bounded sloppy phrase walks this same frame on the driver",
     ),
     ("index/segments.py", "SegmentIndex.split_meta"):
         (1, "block metadata of the query terms, memoized per term"),
-    ("index/segments.py", "SegmentIndex.term_stats"): (1, QUERY_TERMS),
     ("index/segments.py", "build_segment_store"): (2, ONE_ROW),
     ("index/sorted_store.py", "build_sorted_store"):
         (1, "one row per sort bucket"),

@@ -2,7 +2,8 @@
 
 A fetch of at most ``wand.overhead_eq_postings()`` postings is decoded
 on the driver and returned as a local frame; a larger one keeps the
-distributed ``mapInPandas`` decode. The two sides must be
+distributed ``mapInPandas`` decode. A bounded sloppy phrase also runs
+its position walk on the driver. The two sides must be
 indistinguishable in results, and the bounded side must leave no
 Python stage in the query plan."""
 
@@ -24,6 +25,8 @@ QUERIES = {
     "or": Or("error", "timeout", "zzqabsent"),
     "phrase": PhraseQuery(["spill", "fill3"]),
     "sloppy": PhraseQuery(["fill7", "fill3"], slop=2),
+    # a repeated term: the hasRpts walk
+    "sloppy_rpt": PhraseQuery(["spill", "fill3", "spill"], slop=2),
 }
 
 
@@ -126,12 +129,29 @@ def test_bloom_no_split_can_match_is_empty_local_frame(spark, tmp_path):
     assert df.schema == seg.postings.schema
 
 
+@pytest.mark.parametrize("family", ["sloppy", "sloppy_rpt"])
+def test_sloppy_at_bound_plus_minus_one(seg, monkeypatch, family):
+    """The sloppy walk runs on the driver exactly when its one fetch is
+    at or under the bound, with the same top-k either side."""
+    q = QUERIES[family]
+    n = _fetch_size(seg, sorted(set(q.terms)))
+    s = Searcher(seg)
+    got = {}
+    for delta in (-1, 0, 1):
+        _set_bound(monkeypatch, n + delta)
+        df = s.search(q, 10, prune=False)
+        assert ("MapInPandas" in _plan(df)) == (delta < 0)
+        got[delta] = [(r["doc_id"], r["score"]) for r in df.collect()]
+    assert got[-1], family
+    assert got[-1] == got[0] == got[1]
+
+
 @pytest.mark.parametrize("prune", [True, False])
-@pytest.mark.parametrize("family", ["term", "and", "or", "phrase"])
+@pytest.mark.parametrize("family", sorted(QUERIES))
 def test_bounded_search_plan_has_no_python_node(seg, family, prune):
     """At the shipped constants these fetches are under the bound, so
-    the whole top-k plan runs in the JVM. (The sloppy scorer keeps its
-    own Python kernel, and exact-float32 mode its scoring UDF.)"""
+    the whole top-k plan runs in the JVM, sloppy phrases included.
+    (Exact-float32 mode keeps its scoring UDF.)"""
     from lucene_solr_spark.search.executor import _collect_terms
 
     q = QUERIES[family]

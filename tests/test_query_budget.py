@@ -1,0 +1,90 @@
+"""Plan-time budget of a warm routed query: how many py4j commands the
+driver sends to build and run it, and how many Spark jobs it starts.
+
+Every py4j command is a round trip over the Python/JVM bridge, and on a
+small store they, not Spark work, were most of a query's wall time. A
+warm query (its term metadata memoized by a first run) must stay within
+MAX_JOBS jobs and MAX_PY4J_COMMANDS commands per family."""
+
+from __future__ import annotations
+
+import threading
+
+import pytest
+
+from lucene_solr_spark.search.executor import Searcher
+from lucene_solr_spark.search.query import And, Or, PhraseQuery, TermQuery
+
+MAX_JOBS = 2
+MAX_PY4J_COMMANDS = 1000
+
+QUERIES = {
+    "term": TermQuery("timeout"),
+    "and": And("error", "timeout"),
+    "or": Or("error", "timeout", "zzqabsent"),
+    "phrase": PhraseQuery(["spill", "fill3"]),
+    "sloppy": PhraseQuery(["fill7", "fill3"], slop=2),
+}
+
+
+@pytest.fixture(scope="module")
+def searcher(small_index, tmp_path_factory):
+    from lucene_solr_spark.index.segments import write_segments
+
+    d = str(tmp_path_factory.mktemp("budget"))
+    seg = write_segments(small_index, d, n_buckets=8, split_range=256)
+    seg.attach_blooms(build=True)
+    assert seg.stats.max_doc // seg.split_range + 1 >= (
+        Searcher.MIN_ROUTE_SPLITS
+    ), "store too small for the query to be routed"
+    return Searcher(seg)
+
+
+def _cost(spark, monkeypatch, run, group: str) -> tuple[int, int, list]:
+    """(py4j commands, Spark jobs, result) of ``run()``. Only commands
+    sent from this thread count: py4j's finalizer thread sends detach
+    commands for proxies released by earlier queries at any time."""
+    sc = spark.sparkContext
+    client = sc._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    sent = [0]
+
+    def counting(*args, **kwargs):
+        if threading.get_ident() == me:
+            sent[0] += 1
+        return send(*args, **kwargs)
+
+    sc.setJobGroup(group, group)
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting)
+            rows = run()
+            commands = sent[0]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return commands, jobs, rows
+
+
+@pytest.mark.parametrize("family", sorted(QUERIES))
+def test_warm_routed_query_budget(spark, searcher, monkeypatch, family):
+    from lucene_solr_spark.search import wand as W
+
+    q = QUERIES[family]
+    routed = []
+    for name in ("wand_or_search", "wand_and_search", "wand_phrase_search"):
+        inner = getattr(W, name)
+        monkeypatch.setattr(
+            W, name,
+            lambda *a, _inner=inner, **kw: routed.append(1) or _inner(*a, **kw),
+        )
+    warm = searcher.search(q, 10).collect()  # memoizes term metadata
+    assert routed, f"{family} query was not routed"
+    commands, jobs, rows = _cost(
+        spark, monkeypatch, lambda: searcher.search(q, 10).collect(),
+        f"budget-{family}",
+    )
+    assert rows == warm and rows, family
+    assert jobs <= MAX_JOBS, f"{family}: {jobs} Spark jobs"
+    assert commands <= MAX_PY4J_COMMANDS, f"{family}: {commands} py4j commands"
