@@ -17,6 +17,215 @@ from .index.norms import encode_norm
 from .search.bm25 import avg_field_length, term_weight
 
 
+# ---------------------------------------------------------------------
+# Line-by-line Java transliteration of SloppyPhraseScorer (hasRpts path):
+# real binary heap (PriorityQueue.java add/pop/upHeap/downHeap),
+# PhrasePositions objects, the rptStack re-queue dance — everything the
+# production scan-queue walk (search/sloppy.py) optimizes away. The
+# oracle scores repeated-term phrases with it, and tests/test_sloppy.py
+# pins the production walk to it over randomized inputs.
+# ---------------------------------------------------------------------
+
+
+class _PP:
+    """PhrasePositions.java: position = raw - offset."""
+
+    def __init__(self, arr, offset):
+        self.arr, self.offset = arr, offset
+        self.i = -1
+        self.position = 0
+        self.rptGroup = -1
+        self.rptInd = -1
+
+    def firstPosition(self):
+        self.i = -1
+        self.nextPosition()
+
+    def nextPosition(self):
+        self.i += 1
+        if self.i < len(self.arr):
+            self.position = int(self.arr[self.i]) - self.offset
+            return True
+        return False
+
+
+class _PQ:
+    """PriorityQueue.java binary heap with PhraseQueue.lessThan."""
+
+    def __init__(self, max_size):
+        self.heap = [None] * (max_size + 1)
+        self.size = 0
+
+    @staticmethod
+    def lessThan(a, b):
+        if a.position == b.position:
+            return a.offset < b.offset
+        return a.position < b.position
+
+    def add(self, el):
+        self.size += 1
+        self.heap[self.size] = el
+        self._up()
+
+    def top(self):
+        return self.heap[1]
+
+    def pop(self):
+        r = self.heap[1]
+        self.heap[1] = self.heap[self.size]
+        self.heap[self.size] = None
+        self.size -= 1
+        self._down()
+        return r
+
+    def clear(self):
+        self.size = 0
+
+    def _up(self):
+        i = self.size
+        node = self.heap[i]
+        j = i >> 1
+        while j > 0 and self.lessThan(node, self.heap[j]):
+            self.heap[i] = self.heap[j]
+            i = j
+            j >>= 1
+        self.heap[i] = node
+
+    def _down(self):
+        i = 1
+        node = self.heap[i]
+        j = i << 1
+        k = j + 1
+        if k <= self.size and self.lessThan(self.heap[k], self.heap[j]):
+            j = k
+        while j <= self.size and self.lessThan(self.heap[j], node):
+            self.heap[i] = self.heap[j]
+            i = j
+            j = i << 1
+            k = j + 1
+            if k <= self.size and self.lessThan(
+                self.heap[k], self.heap[j]
+            ):
+                j = k
+        self.heap[i] = node
+
+
+def java_sloppy_freq(terms, term_positions, slop):
+    """Transliterated SloppyPhraseScorer.phraseFreq for one doc.
+    ``term_positions[t]`` = sorted raw positions of term t."""
+    from collections import Counter, defaultdict
+
+    n = len(terms)
+    pps = [_PP(term_positions[t], i) for i, t in enumerate(terms)]
+    for pp in pps:
+        pp.firstPosition()
+    cnt = Counter(terms)
+    groups = defaultdict(list)
+    for pp, t in zip(pps, terms):
+        if cnt[t] >= 2:
+            groups[t].append(pp)
+    rptGroups = []
+    for t in groups:
+        rg = sorted(groups[t], key=lambda p: p.offset)
+        for j, pp in enumerate(rg):
+            pp.rptGroup = len(rptGroups)
+            pp.rptInd = j
+        rptGroups.append(rg)
+    hasRpts = bool(rptGroups)
+    end = -(10**9)
+
+    def advancePP(pp):
+        nonlocal end
+        if not pp.nextPosition():
+            return False
+        if pp.position > end:
+            end = pp.position
+        return True
+
+    for rg in rptGroups:  # advanceRepeatGroups (non-MTP branch)
+        for j in range(1, len(rg)):
+            for _ in range(j):
+                if not rg[j].nextPosition():
+                    return 0.0
+    pq = _PQ(n)
+    pq.clear()
+    for pp in pps:  # fillQueue
+        if pp.position > end:
+            end = pp.position
+        pq.add(pp)
+
+    def tpPos(pp):
+        return pp.position + pp.offset
+
+    def collide(pp):
+        for pp2 in rptGroups[pp.rptGroup]:
+            if pp2 is not pp and tpPos(pp2) == tpPos(pp):
+                return pp2.rptInd
+        return -1
+
+    def lesser(a, b):
+        if a.position < b.position or (
+            a.position == b.position and a.offset < b.offset
+        ):
+            return a
+        return b
+
+    rptStack = [None] * n
+
+    def advanceRpts(pp):
+        if pp.rptGroup < 0:
+            return True
+        rg = rptGroups[pp.rptGroup]
+        bits = set()
+        k0 = pp.rptInd
+        while True:
+            k = collide(pp)
+            if k < 0:
+                break
+            pp = lesser(pp, rg[k])
+            if not advancePP(pp):
+                return False
+            if k != k0:
+                bits.add(k)
+        m = 0
+        while bits:  # re-queue dance
+            pp2 = pq.pop()
+            rptStack[m] = pp2
+            m += 1
+            if pp2.rptGroup >= 0 and pp2.rptInd in bits:
+                bits.discard(pp2.rptInd)
+        for i in range(m - 1, -1, -1):
+            pq.add(rptStack[i])
+        return True
+
+    freq = np.float32(0.0)
+    pp = pq.pop()
+    matchLength = end - pp.position
+    nxt = pq.top().position
+    while advancePP(pp):
+        if hasRpts and not advanceRpts(pp):
+            break
+        if pp.position > nxt:
+            if matchLength <= slop:
+                freq = np.float32(
+                    freq + np.float32(1.0) / np.float32(matchLength + 1)
+                )
+            pq.add(pp)
+            pp = pq.pop()
+            nxt = pq.top().position
+            matchLength = end - pp.position
+        else:
+            ml2 = end - pp.position
+            if ml2 < matchLength:
+                matchLength = ml2
+    if matchLength <= slop:
+        freq = np.float32(
+            freq + np.float32(1.0) / np.float32(matchLength + 1)
+        )
+    return float(freq)
+
+
+
 class OracleIndex:
     """In-memory inverted index over a pandas docs frame."""
 
@@ -200,7 +409,8 @@ class OracleIndex:
     ) -> dict[int, np.float32]:
         """Sloppy phrase: freq = Σ 1/(distance+1) over locally-minimal
         windows (BM25Similarity.java:70-73 sloppyFreq); same weight as
-        the exact phrase."""
+        the exact phrase. A phrase that repeats a term runs the hasRpts
+        walk (java_sloppy_freq), the no-repeats one otherwise."""
         plists = [self.postings.get(t) for t in terms]
         if any(p is None for p in plists):
             return {}
@@ -217,11 +427,20 @@ class OracleIndex:
         weight_value = _np.float32(w * _np.float32(1.2 + 1.0))
         cache = norm_cache(self.avgdl)
         out: dict[int, np.float32] = {}
+        repeats = len(set(terms)) < len(terms)
         for d in common:
-            pls = [
-                sorted(p - i for p in idx[i][d]) for i in range(len(terms))
-            ]
-            freq = self._sloppy_walk(pls, slop)
+            if repeats:
+                # hasRpts: same-term clauses must sit on distinct
+                # document positions (SloppyPhraseScorer.java:106-287)
+                freq = java_sloppy_freq(
+                    terms, {t: idx[i][d] for i, t in enumerate(terms)}, slop
+                )
+            else:
+                pls = [
+                    sorted(p - i for p in idx[i][d])
+                    for i in range(len(terms))
+                ]
+                freq = self._sloppy_walk(pls, slop)
             if freq > 0.0:
                 nb = self.norm_byte[d]
                 f32 = _np.float32(freq)

@@ -31,6 +31,17 @@ def idf(df: int | np.ndarray, max_doc: int) -> np.float32 | np.ndarray:
     return val.astype(np.float32)
 
 
+def bm25_score(weight, freq, norm_add, dtype) -> np.ndarray:
+    """weight * freq / (freq + norm_add), every operand and operation in
+    ``dtype`` — the score line (:246) as one vectorized kernel.
+    float32 is ExactBM25DocScorer.score; float64 is the same order of
+    operations as the double Catalyst expression, so the two agree to
+    the last ulp."""
+    weight = np.asarray(weight, dtype=dtype)
+    freq = np.asarray(freq, dtype=dtype)
+    return weight * freq / (freq + np.asarray(norm_add, dtype=dtype))
+
+
 def avg_field_length(sum_total_term_freq: int, max_doc: int) -> np.float32:
     """BM25Similarity.avgFieldLength — :83-90."""
     if sum_total_term_freq <= 0:

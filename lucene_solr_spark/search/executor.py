@@ -19,19 +19,35 @@ Physical shapes (SURVEY.md §2.4, §2.7-2.9):
     to TakeOrderedAndProject = per-partition bounded heap + single merge,
     exactly Lucene's HitQueue + distributed merge
     (TopScoreDocCollector.java:40-62, QueryComponent.java:747-800).
+    A routed query whose postings fetch is within the driver-decode
+    bound (wand.py) skips that plan: it scores, sums and takes the same
+    (score desc, doc_id asc) top-k in numpy on the driver and returns
+    the k hits as a local table (Searcher._hits), whose collect() runs
+    no Spark job.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..functions.literals import const_array
 from ..index.builder import InvertedIndex
 from ..index.norms import NORM_TABLE
-from .bm25 import avg_field_length, norm_cache, term_weight
+from .bm25 import avg_field_length, bm25_score, norm_cache, term_weight
 from .query import (
     BooleanClause,
     BooleanQuery,
@@ -98,6 +114,22 @@ def _clause_col(offsets: dict[str, list[int]]) -> Column:
             for x in (F.lit(t), const_array(offs, "int"))
         ]
     )[F.col("term")]
+
+
+def arrow_frame(
+    spark: SparkSession, schema: StructType, columns: dict | None = None
+) -> DataFrame:
+    """``columns`` (name -> array; None for no rows) as a LocalTableScan
+    built from an Arrow table. collect() on it runs no Spark job, at zero
+    rows too: a list or a zero-row pandas frame skips Arrow and comes
+    back as a Python RDD scan that costs a job."""
+    arrow_schema = to_arrow_schema(schema)
+    table = (
+        pa.table(columns, schema=arrow_schema)
+        if columns is not None
+        else arrow_schema.empty_table()
+    )
+    return spark.createDataFrame(table, schema)
 
 
 class Searcher:
@@ -253,6 +285,53 @@ class Searcher:
     def _score_type(self) -> str:
         return "float" if self.exact else "double"
 
+    @property
+    def _score_dtype(self) -> type:
+        return np.float32 if self.exact else np.float64
+
+    @property
+    def _hits_schema(self) -> StructType:
+        """(doc_id long not null, score float|double): a top-k result."""
+        return StructType(
+            [
+                StructField("doc_id", LongType(), False),
+                StructField(
+                    "score", FloatType() if self.exact else DoubleType()
+                ),
+            ]
+        )
+
+    def _hits(self, doc_id=(), score=()) -> DataFrame:
+        """The one result frame built on the driver: the given
+        (doc_id, score) rows, in their order (none: an empty result),
+        as an arrow_frame, so collect() on it runs no Spark job."""
+        return arrow_frame(
+            self.index.spark,
+            self._hits_schema,
+            {
+                "doc_id": np.asarray(doc_id, dtype=np.int64),
+                "score": np.asarray(score, dtype=self._score_dtype),
+            },
+        )
+
+    def _term_scores(self, weight, tf, norm_byte) -> np.ndarray:
+        """Per-posting term scores in numpy: the kernel and precision of
+        _apply_score_col (float32 cache and math in exact mode, the
+        double cache and math otherwise)."""
+        cache = self.cache if self.exact else self.cache64
+        add = cache[np.asarray(norm_byte, dtype=np.int64) & 0xFF]
+        return bm25_score(weight, tf, add, self._score_dtype)
+
+    def _phrase_scores(
+        self, weight: float, cache: np.ndarray, tf, norm_byte
+    ) -> np.ndarray:
+        """Phrase scores in numpy from _phrase_weight's (weight, cache):
+        the same double math as _score_phrase_freqs, then its cast."""
+        add = cache[np.asarray(norm_byte, dtype=np.int64) & 0xFF]
+        return bm25_score(weight, tf, add, np.float64).astype(
+            self._score_dtype
+        )
+
     def _postings_for(
         self, terms: list[str], want_positions: bool = False
     ) -> DataFrame:
@@ -276,11 +355,9 @@ class Searcher:
             def bm25_f32(
                 term: pd.Series, tf: pd.Series, norm_byte: pd.Series
             ) -> pd.Series:
-                w = term.map(wmap).to_numpy(dtype=np.float32)
-                tf32 = tf.to_numpy(dtype=np.float32)
                 add = cache[norm_byte.to_numpy(dtype=np.int64) & 0xFF]
                 return pd.Series(
-                    (w * tf32 / (tf32 + add)).astype(np.float32)
+                    bm25_score(term.map(wmap), tf, add, np.float32)
                 )
 
             return df.withColumn(
@@ -388,10 +465,18 @@ class Searcher:
         return self._apply_score_col(df, weights)
 
     def _empty_scored(self) -> DataFrame:
-        return self.index.spark.createDataFrame(
-            [],
-            f"term string, doc_id long, tf int, norm_byte int, "
-            f"score {self._score_type}",
+        hits = self._hits_schema
+        return arrow_frame(
+            self.index.spark,
+            StructType(
+                [
+                    StructField("term", StringType()),
+                    hits["doc_id"],
+                    StructField("tf", IntegerType()),
+                    StructField("norm_byte", IntegerType()),
+                    hits["score"],
+                ]
+            ),
         )
 
     def _score_boolean(self, q: BooleanQuery, term_stats: dict) -> DataFrame:
@@ -424,9 +509,7 @@ class Searcher:
                 )
             )
         if not parts:
-            return self.index.spark.createDataFrame(
-                [], f"doc_id long, score {self._score_type}"
-            )
+            return self._hits()
         unioned = parts[0]
         for p in parts[1:]:
             unioned = unioned.unionByName(p)
@@ -501,9 +584,7 @@ class Searcher:
         (BM25Similarity.idfExplain:185-196), freq = phrase frequency."""
         terms = list(q.terms)
         if any(t not in term_stats for t in terms):
-            return self.index.spark.createDataFrame(
-                [], f"doc_id long, score {self._score_type}"
-            )
+            return self._hits()
         if q.slop > 0:
             return self._score_phrase_sloppy(q, term_stats)
         n = len(terms)
@@ -553,7 +634,12 @@ class Searcher:
         A bounded fetch (the WAND cost model's driver-decode bound) runs
         the walk on the driver over the decoded frame; a larger one runs
         it distributed in mapInPandas."""
-        from .sloppy import FREQ_SCHEMA, sloppy_freq_partitions, sloppy_freqs
+        from .sloppy import (
+            FREQ_SCHEMA,
+            clause_rows,
+            sloppy_freq_partitions,
+            sloppy_freqs,
+        )
 
         terms = list(q.terms)
         # hasRpts (SloppyPhraseScorer.java:106-215): clauses sharing a
@@ -570,15 +656,11 @@ class Searcher:
         if local is not None:
             from ..index.segments import local_frame
 
-            rows = (
-                local.assign(clause=local["term"].map(by_term))
-                .explode("clause")
-                .astype({"clause": "int64"})
-                .sort_values(["doc_id", "clause"], kind="stable")
-            )
             freqs = local_frame(
                 self.index.spark,
-                sloppy_freqs(rows, n, q.slop, rpt_groups),
+                sloppy_freqs(
+                    clause_rows(local, by_term), n, q.slop, rpt_groups
+                ),
                 FREQ_SCHEMA,
             )
         else:
@@ -611,9 +693,7 @@ class Searcher:
         (MultiPhraseWeight ctor :135-160), zero-df terms included."""
         n = len(q.positions)
         if n == 0:
-            return self.index.spark.createDataFrame(
-                [], f"doc_id long, score {self._score_type}"
-            )
+            return self._hits()
         flat = [t for arr in q.positions for t in arr]
         present = [
             sorted({t for t in arr if t in term_stats})
@@ -621,9 +701,7 @@ class Searcher:
         ]
         if any(not alts for alts in present):
             # a slot with no indexed alternative can never match
-            return self.index.spark.createDataFrame(
-                [], f"doc_id long, score {self._score_type}"
-            )
+            return self._hits()
         if q.slop > 0:
             return self._score_multi_phrase_sloppy(q, present, flat, term_stats)
         parts = []
@@ -719,9 +797,23 @@ class Searcher:
         boost: float,
         term_stats: dict,
     ) -> DataFrame:
-        # summed idf weight: float32 accumulation like idfExplain in
-        # exact mode; plain double sum (term order) in double mode
-        q_boost = boost
+        weight_value, cache = self._phrase_weight(terms, boost, term_stats)
+        cache_arr = const_array(cache.tolist(), "double")
+        tf = F.col("tf").cast("double")
+        denom_add = F.element_at(cache_arr, F.col("norm_byte") + 1)
+        return freqs.select(
+            "doc_id",
+            (F.lit(weight_value) * tf / (tf + denom_add))
+            .cast(self._score_type)
+            .alias("score"),
+        )
+
+    def _phrase_weight(
+        self, terms: list[str], boost: float, term_stats: dict
+    ) -> tuple[float, np.ndarray]:
+        """(weight, norm cache as doubles) of a phrase score: summed idf
+        weight, float32 accumulation like idfExplain in exact mode and a
+        plain double sum (term order) in double mode."""
         if self.exact:
             from .bm25 import idf as idf_fn
 
@@ -735,24 +827,13 @@ class Searcher:
                     )
                 )
             weight_value = float(
-                np.float32(q_boost) * w32 * np.float32(1.2 + 1.0)
+                np.float32(boost) * w32 * np.float32(1.2 + 1.0)
             )
-            cache_vals = self.cache.tolist()
-        else:
-            w = 0.0
-            for t in terms:
-                w = w + self._idf64(term_stats.get(t, (0, 0))[0])
-            weight_value = q_boost * w * (1.2 + 1)
-            cache_vals = self.cache64.tolist()
-        cache_arr = const_array(cache_vals, "double")
-        tf = F.col("tf").cast("double")
-        denom_add = F.element_at(cache_arr, F.col("norm_byte") + 1)
-        return freqs.select(
-            "doc_id",
-            (F.lit(weight_value) * tf / (tf + denom_add))
-            .cast(self._score_type)
-            .alias("score"),
-        )
+            return weight_value, self.cache.astype(np.float64)
+        w = 0.0
+        for t in terms:
+            w = w + self._idf64(term_stats.get(t, (0, 0))[0])
+        return boost * w * (1.2 + 1), self.cache64
 
     def _score_multiterm(self, q) -> DataFrame:
         """Prefix/Wildcard/Fuzzy: expand against terms_stats, then
@@ -822,9 +903,7 @@ class Searcher:
                 .collect()
             )
             if not sample:
-                return self.index.spark.createDataFrame(
-                    [], f"doc_id long, score {self._score_type}"
-                )
+                return self._hits()
             if len(sample) <= MULTITERM_REWRITE_CAP:
                 src = self.index.postings_for_terms(
                     [r["term"] for r in sample]

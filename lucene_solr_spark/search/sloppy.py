@@ -212,6 +212,20 @@ FREQ_SCHEMA = StructType(
 )
 
 
+def clause_rows(
+    postings: pd.DataFrame, offsets: dict[str, list[int]]
+) -> pd.DataFrame:
+    """sloppy_freqs' input from a decoded postings frame: one row per
+    (posting, clause its term fills) — a repeated term fills several —
+    sorted by (doc_id, clause). ``offsets``: term -> clause offsets."""
+    return (
+        postings.assign(clause=postings["term"].map(offsets))
+        .explode("clause")
+        .astype({"clause": "int64"})
+        .sort_values(["doc_id", "clause"], kind="stable")
+    )
+
+
 def sloppy_freqs(
     pdf: pd.DataFrame,
     n_clauses: int,
@@ -223,23 +237,37 @@ def sloppy_freqs(
     every row of a doc in it, sorted by (doc_id, clause).
 
     ``rpt_groups``: clause offsets sharing a term (hasRpts path); empty
-    or None selects the simple no-repeats walk."""
+    or None selects the simple no-repeats walk.
+
+    Doc boundaries and the per-doc distinct-clause count are found with
+    numpy, so only docs holding every clause reach the per-doc walk."""
     rpt_groups = [sorted(g) for g in (rpt_groups or [])]
+    doc = pdf["doc_id"].to_numpy(dtype=np.int64)
+    clause = pdf["clause"].to_numpy(dtype=np.int64)
+    positions = pdf["positions"].to_numpy()
+    norm_byte = pdf["norm_byte"].to_numpy()
     out_doc, out_tf, out_nb = [], [], []
-    for doc_id, g in pdf.groupby("doc_id", sort=False):
-        if g["clause"].nunique() != n_clauses:
-            continue  # missing a term -> no phrase candidate
-        plists = [None] * n_clauses
-        for cl, plist in zip(g["clause"], g["positions"]):
-            plists[int(cl)] = np.asarray(plist, dtype=np.int64) - int(cl)
-        if rpt_groups:
-            f = sloppy_freq_rpts(plists, slop, rpt_groups)
-        else:
-            f = sloppy_freq(plists, slop)
-        if f > 0.0:
-            out_doc.append(int(doc_id))
-            out_tf.append(f)
-            out_nb.append(int(g["norm_byte"].iloc[0]))
+    if len(doc):
+        new_doc = np.r_[True, doc[1:] != doc[:-1]]
+        new_clause = new_doc | np.r_[True, clause[1:] != clause[:-1]]
+        starts = np.flatnonzero(new_doc)
+        ends = np.r_[starts[1:], len(doc)]
+        n_distinct = np.add.reduceat(new_clause.astype(np.int64), starts)
+        # a doc missing a clause has no phrase candidate
+        for s, e in zip(
+            starts[n_distinct == n_clauses], ends[n_distinct == n_clauses]
+        ):
+            plists = [None] * n_clauses
+            for cl, plist in zip(clause[s:e], positions[s:e]):
+                plists[cl] = np.asarray(plist, dtype=np.int64) - cl
+            if rpt_groups:
+                f = sloppy_freq_rpts(plists, slop, rpt_groups)
+            else:
+                f = sloppy_freq(plists, slop)
+            if f > 0.0:
+                out_doc.append(int(doc[s]))
+                out_tf.append(f)
+                out_nb.append(int(norm_byte[s]))
     return pd.DataFrame(
         {
             "doc_id": pd.Series(out_doc, dtype="int64"),

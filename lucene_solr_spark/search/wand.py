@@ -26,21 +26,36 @@ a shuffle engine):
   3. prune: drop every split with tot[v] < θ (no doc there can enter
      top-k); fully score the survivors; merge with the seed; top-k.
 
-  Total: one tiny metadata agg + two scoring jobs, decoding only
-  surviving splits. At 10^12 docs / 2^20-wide splits the metadata side is
-  ~10^6 rows per term-set — trivially collectable/broadcastable.
+  The seed walk runs only when the cost model below predicts it pays
+  for its extra fetch; otherwise every candidate split is scored at
+  once. The metadata pass is driver-side pandas over the per-term
+  split metadata, memoized by SegmentIndex.split_meta, so a warm query
+  starts no job for it. Each scoring step is one fetch of the chosen
+  splits' blocks:
+    - within the driver-decode bound (decode_postings_local), the fetch
+      is one block-scan job, and the driver finishes the query in
+      numpy (_split_topk): score with the Searcher's BM25 kernel, sum
+      per doc in a fixed term order (or count phrase occurrences), take
+      top-k by (score desc, doc_id asc) and return the k hits as a
+      local table whose collect() starts no further job;
+    - above it, the Catalyst plan: mapInPandas decode, score, per-doc
+      aggregate and TakeOrderedAndProject.
+  At 10^12 docs / 2^20-wide splits the metadata side is ~10^6 rows per
+  term-set — trivially collectable/broadcastable.
 """
 
 from __future__ import annotations
 
 import os
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..index.segments import SegmentIndex
-from .executor import Searcher
+from .executor import Searcher, _clause_offsets
+from .sloppy import clause_rows, sloppy_freqs
 
 # ---- cost model for the seed-then-prune engagement decision -----------
 # The two-phase walk adds one extra SEQUENTIAL Spark job (seed decode +
@@ -72,12 +87,12 @@ from .executor import Searcher
 # overhead_eq_postings() postings is decoded eagerly on the driver from
 # an Arrow toPandas of its pruned block scan, because the JVM->Python
 # task boundary of a mapInPandas stage costs about one such job
-# overhead while the decode itself is small. decode_postings hands that
-# frame back as a local table, and a bounded sloppy phrase also runs its
-# position walk (sloppy.sloppy_freqs) on the driver over it, so neither
-# query shape starts a Python worker. Larger fetches keep the
-# distributed mapInPandas decode and walk. Driver memory is bounded by
-# the same cap.
+# overhead while the decode itself is small. A routed query finishes
+# such a fetch on the driver too (_split_topk: numpy score, per-doc sum
+# or phrase count, sloppy walk, top-k), so it starts no Python worker
+# and no job after the scan. Larger fetches keep the distributed
+# mapInPandas decode and walk and the Catalyst aggregate and top-k.
+# Driver memory is bounded by the same cap.
 # Defaults measured 2026-08-19 on local[8] over the sf0.1 gate segment
 # store (split_range=128): job overhead median 0.22 s; marginal decode
 # throughput 12.8-13.8k postings/s (Δpostings/Δwall between 4- and
@@ -119,6 +134,227 @@ def seed_walk_predicted_win(cands: list[tuple[float, int]]) -> bool:
     return predicted_saving_postings(cands) > overhead_eq_postings()
 
 
+# ---- the shared walk and the driver finish ----------------------------
+
+
+def _hits_topk(
+    hits: tuple[np.ndarray, np.ndarray], k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The k best (doc_id, score) by (score desc, doc_id asc) — the
+    HitQueue order (HitQueue.java:76-81) the Catalyst plan sorts by."""
+    doc_id, score = hits
+    order = np.lexsort((doc_id, -score))[:k]
+    return doc_id[order], score[order]
+
+
+def _split_topk(
+    searcher: Searcher,
+    cands: list[tuple[int, float, int]],
+    k: int,
+    force_prune: bool,
+    fetch,
+    finish,
+    plan,
+    stats_out: dict | None,
+) -> DataFrame:
+    """Top-k over the candidate splits ``cands`` = [(split, score upper
+    bound, postings)], bound-desc: all at once, or the seed-then-prune
+    walk when forced or predicted to win.
+
+    Each scoring step is ``fetch(splits)`` — the bounded driver fetch
+    (decode_postings_local's frame, or None above the bound) — then
+    ``finish(frame)``, the numpy (doc_id, score) arrays of every
+    matching doc; an unbounded step is ``plan(splits)``, the Catalyst
+    plan of the same (doc_id, score) rows. A bounded seed gives θ and
+    merges with bounded survivors on the driver, so a query whose every
+    fetch is bounded returns a local table of its k hits."""
+
+    def score(splits: list[int]):
+        frame = fetch(splits)
+        return plan(splits) if frame is None else finish(frame)
+
+    def top(scored) -> DataFrame:
+        if isinstance(scored, tuple):
+            return searcher._hits(*_hits_topk(scored, k))
+        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    if not force_prune and not seed_walk_predicted_win(
+        [(ub, nd) for _, ub, nd in cands]
+    ):
+        if stats_out is not None:
+            stats_out["splits_decoded"] = len(cands)
+        return top(score([s for s, _, _ in cands]))
+
+    # -- seed threshold from the best-bounded split -----------------------
+    seed_split = cands[0][0]
+    seed = score([seed_split])
+    if isinstance(seed, tuple):
+        seed = _hits_topk(seed, k)
+    else:
+        rows = top(seed).collect()
+        seed = (
+            np.asarray([r["doc_id"] for r in rows], dtype=np.int64),
+            np.asarray(
+                [r["score"] for r in rows], dtype=searcher._score_dtype
+            ),
+        )
+    theta = float(seed[1][-1]) if len(seed[0]) == k else float("-inf")
+
+    # -- prune + score survivors ------------------------------------------
+    # the bound uses the float64 cache; in exact-float32 mode per-term
+    # scores round to float32 and could exceed the real-valued bound by a
+    # half-ulp — keep a tiny relative inflation so pruning stays safe
+    survivors = [
+        s
+        for s, ub, _ in cands
+        if s != seed_split and ub * (1.0 + 1e-6) + 1e-12 >= theta
+    ]
+    if stats_out is not None:
+        stats_out["splits_decoded"] = 1 + len(survivors)
+    if not survivors:
+        return top(seed)
+    rest = score(survivors)
+    if isinstance(rest, tuple):
+        return top(tuple(np.concatenate(p) for p in zip(seed, rest)))
+    return top(rest.unionByName(searcher._hits(*seed)))
+
+
+def _sum_finish(
+    searcher: Searcher,
+    terms: list[str],
+    weights: dict[str, float],
+    require_all: bool,
+):
+    """Driver finish of a term disjunction (``require_all`` False) or
+    conjunction: per-posting BM25 from the Searcher's kernel, summed per
+    doc in ``terms`` order — in double, then cast to the score type, as
+    the Catalyst sum does — keeping, for a conjunction, only docs that
+    hold every term."""
+    term_index = {t: i for i, t in enumerate(terms)}
+    w = np.asarray([weights[t] for t in terms], dtype=searcher._score_dtype)
+
+    def finish(frame: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        ti = frame["term"].map(term_index).to_numpy(dtype=np.int64)
+        doc_id, col = np.unique(
+            frame["doc_id"].to_numpy(dtype=np.int64), return_inverse=True
+        )
+        per_term = np.zeros((len(terms), len(doc_id)))
+        per_term[ti, col] = searcher._term_scores(
+            w[ti], frame["tf"].to_numpy(), frame["norm_byte"].to_numpy()
+        )
+        total = per_term[0].copy()
+        for row in per_term[1:]:
+            total += row
+        if require_all:
+            held = np.zeros(per_term.shape, dtype=bool)
+            held[ti, col] = True
+            keep = held.all(axis=0)
+            doc_id, total = doc_id[keep], total[keep]
+        return doc_id, total.astype(searcher._score_dtype)
+
+    return finish
+
+
+def _exact_phrase_freqs(
+    frame: pd.DataFrame, offsets: dict[str, list[int]], n: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(doc_id, tf, norm_byte) per doc with an exact phrase match — the
+    numpy twin of Searcher._score_phrase: a doc's phrase freq is the
+    number of adjusted positions (position - clause offset) at which
+    all ``n`` clauses occur (ExactPhraseScorer.java:201-242)."""
+    empty = np.zeros(0, dtype=np.int64)
+    doc_id = frame["doc_id"].to_numpy(dtype=np.int64)
+    term = frame["term"].to_numpy()
+    positions = frame["positions"].to_numpy()
+    docs, aposs, clauses = [], [], []
+    for t, offs in offsets.items():
+        plists = positions[term == t]
+        if not len(plists):
+            return empty, empty, empty
+        pos = np.concatenate(plists).astype(np.int64)
+        doc = np.repeat(doc_id[term == t], [len(p) for p in plists])
+        for off in offs:
+            docs.append(doc)
+            aposs.append(pos - off)
+            clauses.append(np.full(len(pos), off, dtype=np.int64))
+    doc, apos, clause = (np.concatenate(a) for a in (docs, aposs, clauses))
+    order = np.lexsort((clause, apos, doc))
+    doc, apos, clause = doc[order], apos[order], clause[order]
+    new_pair = np.r_[True, (doc[1:] != doc[:-1]) | (apos[1:] != apos[:-1])]
+    distinct = new_pair | np.r_[True, clause[1:] != clause[:-1]]
+    starts = np.flatnonzero(new_pair)
+    n_clauses = np.add.reduceat(distinct.astype(np.int64), starts)
+    hit_doc, tf = np.unique(doc[starts[n_clauses == n]], return_counts=True)
+    first_doc, first_row = np.unique(doc_id, return_index=True)
+    norm_byte = frame["norm_byte"].to_numpy(dtype=np.int64)[first_row]
+    return hit_doc, tf, norm_byte[np.searchsorted(first_doc, hit_doc)]
+
+
+def _phrase_finish(
+    searcher: Searcher, terms: list[str], slop: int, term_stats: dict
+):
+    """Driver finish of a phrase: exact freqs (_exact_phrase_freqs) or
+    the sloppy walk (sloppy.sloppy_freqs, hasRpts included), scored as
+    Searcher._score_phrase_freqs scores them."""
+    weight, cache = searcher._phrase_weight(terms, 1.0, term_stats)
+    offsets = _clause_offsets(terms)
+    rpt_groups = [v for v in offsets.values() if len(v) > 1]
+
+    def finish(frame: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        if slop > 0:
+            freqs = sloppy_freqs(
+                clause_rows(frame, offsets), len(terms), slop, rpt_groups
+            )
+            doc_id, tf, norm_byte = (
+                freqs[c].to_numpy() for c in ("doc_id", "tf", "norm_byte")
+            )
+        else:
+            doc_id, tf, norm_byte = _exact_phrase_freqs(
+                frame, offsets, len(terms)
+            )
+        return doc_id, searcher._phrase_scores(weight, cache, tf, norm_byte)
+
+    return finish
+
+
+def _split_bounds(
+    searcher: Searcher, terms: list[str], weights: dict[str, float]
+) -> list[tuple[int, int, float, int]]:
+    """Per split any of ``terms`` touches: (split, terms present,
+    Σ_t w_t · max block bound of t, postings), from the memoized
+    split metadata — driver-side pandas, no per-query shuffle job."""
+    mdf = searcher.index.split_meta(terms)
+    if not len(mdf):
+        return []
+    tf = mdf["max_tf"].to_numpy(dtype="float64")
+    ub_factor = tf / (
+        tf + searcher.cache64[mdf["min_nb"].to_numpy(dtype="int64")]
+    )
+    agg = (
+        pd.DataFrame(
+            {
+                "split": mdf["split"].to_numpy(),
+                "term": mdf["term"].to_numpy(),
+                "ubf": ub_factor,
+                "nd": mdf["nd"].to_numpy(dtype="int64"),
+            }
+        )
+        .groupby(["split", "term"], sort=False)
+        .agg(ub=("ubf", "max"), nd=("nd", "sum"))
+        .reset_index()
+    )
+    agg["wub"] = agg["ub"] * agg["term"].map(weights)
+    per = (
+        agg.groupby("split", sort=False)
+        .agg(nt=("term", "nunique"), tot=("wub", "sum"), nd=("nd", "sum"))
+        .reset_index()
+    )
+    return [
+        (int(r.split), int(r.nt), float(r.tot), int(r.nd))
+        for r in per.itertuples()
+    ]
+
+
 def wand_or_search(
     searcher: Searcher,
     terms: list[str],
@@ -141,108 +377,43 @@ def wand_or_search(
             mult[t] = mult.get(t, 0) + 1
     present = list(mult)
     if not present:
-        return index.spark.createDataFrame(
-            [], f"doc_id long, score {searcher._score_type}"
-        )
+        return searcher._hits()
     weights = {
         t: mult[t] * searcher._term_weight_value(t, term_stats, 1.0)
         for t in present
     }
-
     # -- 1. metadata-only bound per split --------------------------------
-    # driver-side pandas aggregation over the memoized per-term split
-    # metadata (index.split_meta): the per-query Spark job drops from a
-    # 2-stage shuffle+collect to (at most) one narrow fetch for terms
-    # not yet cached — the one-shot route then pays ~no bound-pass tax
-    # over its exhaustive twin.
-    cache64 = searcher.cache64
-    mdf = index.split_meta(present)
-    if len(mdf):
-        tf = mdf["max_tf"].to_numpy(dtype="float64")
-        ub_factor = tf / (
-            tf + cache64[mdf["min_nb"].to_numpy(dtype="int64")]
-        )
-        agg = (
-            pd.DataFrame(
-                {
-                    "split": mdf["split"].to_numpy(),
-                    "term": mdf["term"].to_numpy(),
-                    "ubf": ub_factor,
-                    "nd": mdf["nd"].to_numpy(dtype="int64"),
-                }
-            )
-            .groupby(["split", "term"], sort=False)
-            .agg(ub=("ubf", "max"), nd=("nd", "sum"))
-            .reset_index()
-        )
-        agg["wub"] = agg["ub"] * agg["term"].map(weights)
-        tot = (
-            agg.groupby("split", sort=False)
-            .agg(tot=("wub", "sum"), nd=("nd", "sum"))
-            .reset_index()
-        )
-        splits_desc = [
-            {"split": int(r.split), "tot": float(r.tot), "nd": int(r.nd)}
-            for r in tot.itertuples()
-        ]
-        splits_desc.sort(key=lambda r: -r["tot"])
-    else:
-        splits_desc = []
-    if not splits_desc:
-        return index.spark.createDataFrame(
-            [], f"doc_id long, score {searcher._score_type}"
-        )
+    cands = sorted(
+        (
+            (split, tot, nd)
+            for split, _, tot, nd in _split_bounds(searcher, present, weights)
+        ),
+        key=lambda c: -c[1],
+    )
+    if not cands:
+        return searcher._hits()
 
-    def score_splits(split_ids: list[int]) -> DataFrame:
+    def plan(split_ids: list[int]) -> DataFrame:
         decoded = index.decode_postings(present, splits=split_ids).select(
             "term", "doc_id", "tf", "norm_byte"
         )
         scored = searcher._apply_score_col(decoded, weights)
-        return scored.groupBy("doc_id").agg(F.sum("score").alias("score"))
-
-    if not force_prune and not seed_walk_predicted_win(
-        [(float(r["tot"]), int(r["nd"])) for r in splits_desc]
-    ):
-        return (
-            score_splits([int(r["split"]) for r in splits_desc])
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        return scored.groupBy("doc_id").agg(
+            F.sum("score").cast(searcher._score_type).alias("score")
         )
 
-    # -- 2. seed threshold from the best split ---------------------------
-    seed_split = int(splits_desc[0]["split"])
-    seed = score_splits([seed_split]).orderBy(
-        F.desc("score"), F.asc("doc_id")
-    ).limit(k)
-    seed_rows = seed.collect()
-    theta = (
-        float(seed_rows[-1]["score"]) if len(seed_rows) == k else float("-inf")
+    return _split_topk(
+        searcher,
+        cands,
+        k,
+        force_prune,
+        lambda split_ids: index.decode_postings_local(
+            present, splits=split_ids
+        ),
+        _sum_finish(searcher, present, weights, require_all=False),
+        plan,
+        None,
     )
-
-    # -- 3. prune + score survivors --------------------------------------
-    # the bound uses the float64 cache; in exact-float32 mode per-term
-    # scores round to float32 and could exceed the real-valued bound by a
-    # half-ulp — keep a tiny relative inflation so pruning stays safe
-    survivors = [
-        int(r["split"])
-        for r in splits_desc
-        if r["split"] != seed_split
-        and float(r["tot"]) * (1.0 + 1e-6) + 1e-12 >= theta
-    ]
-    if survivors:
-        rest = score_splits(survivors)
-        merged = rest.unionByName(
-            index.spark.createDataFrame(
-                seed_rows, "doc_id long, score double"
-            ).select(
-                "doc_id", F.col("score").cast(searcher._score_type)
-            )
-        )
-    else:
-        merged = index.spark.createDataFrame(
-            seed_rows, "doc_id long, score double"
-        ).select("doc_id", F.col("score").cast(searcher._score_type))
-    return merged.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def wand_and_search(
@@ -292,74 +463,28 @@ def wand_and_search(
             stats_out.update(
                 splits_any=0, splits_all=0, splits_decoded=0
             )
-        return index.spark.createDataFrame(
-            [], f"doc_id long, score {searcher._score_type}"
-        )
+        return searcher._hits()
     weights = {
         t: searcher._term_weight_value(t, term_stats, 1.0) for t in musts
     }
 
     # -- 1. metadata pass: per-split presence + score upper bound --------
-    # driver-side pandas over the memoized per-term split metadata (see
-    # wand_or_search) — presence prune AND bound both come from the same
-    # cached rows, with no per-query shuffle job.
-    cache64 = searcher.cache64
-    mdf = index.split_meta(musts)
-    if len(mdf):
-        tf = mdf["max_tf"].to_numpy(dtype="float64")
-        ub_factor = tf / (
-            tf + cache64[mdf["min_nb"].to_numpy(dtype="int64")]
-        )
-        agg = (
-            pd.DataFrame(
-                {
-                    "split": mdf["split"].to_numpy(),
-                    "term": mdf["term"].to_numpy(),
-                    "ubf": ub_factor,
-                    "nd": mdf["nd"].to_numpy(dtype="int64"),
-                }
-            )
-            .groupby(["split", "term"], sort=False)
-            .agg(ub=("ubf", "max"), nd=("nd", "sum"))
-            .reset_index()
-        )
-        agg["wub"] = agg["ub"] * agg["term"].map(weights)
-        per = (
-            agg.groupby("split", sort=False)
-            .agg(
-                nt=("term", "nunique"),
-                tot=("wub", "sum"),
-                nd=("nd", "sum"),
-            )
-            .reset_index()
-        )
-        per_split = [
-            {
-                "split": int(r.split),
-                "nt": int(r.nt),
-                "tot": float(r.tot),
-                "nd": int(r.nd),
-            }
-            for r in per.itertuples()
-        ]
-    else:
-        per_split = []
-    splits_any = len(per_split)
-    candidates = sorted(
-        (r for r in per_split if r["nt"] == n), key=lambda r: -r["tot"]
+    # presence prune AND bound both come from the same memoized rows
+    per_split = _split_bounds(searcher, musts, weights)
+    cands = sorted(
+        ((split, tot, nd) for split, nt, tot, nd in per_split if nt == n),
+        key=lambda c: -c[1],
     )
     if stats_out is not None:
         stats_out.update(
-            splits_any=splits_any,
-            splits_all=len(candidates),
+            splits_any=len(per_split),
+            splits_all=len(cands),
             splits_decoded=0,
         )
-    if not candidates:
-        return index.spark.createDataFrame(
-            [], f"doc_id long, score {searcher._score_type}"
-        )
+    if not cands:
+        return searcher._hits()
 
-    def score_splits(split_ids: list[int]) -> DataFrame:
+    def plan(split_ids: list[int]) -> DataFrame:
         decoded = index.decode_postings(musts, splits=split_ids).select(
             "term", "doc_id", "tf", "norm_byte"
         )
@@ -367,55 +492,25 @@ def wand_and_search(
         return (
             scored.groupBy("doc_id")
             .agg(
-                F.sum("score").alias("score"),
+                F.sum("score").cast(searcher._score_type).alias("score"),
                 F.countDistinct("term").alias("nt"),
             )
             .where(F.col("nt") == F.lit(n))
             .select("doc_id", "score")
         )
 
-    if not force_prune and not seed_walk_predicted_win(
-        [(float(r["tot"]), int(r["nd"])) for r in candidates]
-    ):
-        if stats_out is not None:
-            stats_out["splits_decoded"] = len(candidates)
-        return (
-            score_splits([int(r["split"]) for r in candidates])
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-
-    # -- 2. seed threshold from the best-bounded split --------------------
-    seed_split = int(candidates[0]["split"])
-    seed_rows = (
-        score_splits([seed_split])
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .collect()
+    return _split_topk(
+        searcher,
+        cands,
+        k,
+        force_prune,
+        lambda split_ids: index.decode_postings_local(
+            musts, splits=split_ids
+        ),
+        _sum_finish(searcher, musts, weights, require_all=True),
+        plan,
+        stats_out,
     )
-    theta = (
-        float(seed_rows[-1]["score"]) if len(seed_rows) == k else float("-inf")
-    )
-
-    # -- 3. prune + decode only survivors ---------------------------------
-    # same safety inflation as the OR path (float32 half-ulp headroom)
-    survivors = [
-        int(r["split"])
-        for r in candidates
-        if r["split"] != seed_split
-        and float(r["tot"]) * (1.0 + 1e-6) + 1e-12 >= theta
-    ]
-    if stats_out is not None:
-        stats_out["splits_decoded"] = 1 + len(survivors)
-    seed_df = index.spark.createDataFrame(
-        seed_rows, "doc_id long, score double"
-    ).select("doc_id", F.col("score").cast(searcher._score_type))
-    merged = (
-        score_splits(survivors).unionByName(seed_df)
-        if survivors
-        else seed_df
-    )
-    return merged.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 class _SplitView:
@@ -424,7 +519,9 @@ class _SplitView:
     stay GLOBAL so BM25 weights are identical to the full index. Splits
     are self-contained scoring units (every posting of doc d lives in
     split d // split_range for every term), so phrase/conjunction
-    scoring inside the view is exact for the view's docs."""
+    scoring inside the view is exact for the view's docs. A view is
+    scored only when its fetch is above the driver bound, so it offers
+    no driver-side fetch and a sloppy phrase walks in mapInPandas."""
 
     def __init__(self, seg: SegmentIndex, splits: list[int]):
         self._seg = seg
@@ -438,13 +535,6 @@ class _SplitView:
         self, terms: list[str], want_positions: bool = False
     ):
         return self._seg.postings_for_terms(
-            terms, want_positions, splits=self._splits
-        )
-
-    def postings_for_terms_local(
-        self, terms: list[str], want_positions: bool = False
-    ):
-        return self._seg.postings_for_terms_local(
             terms, want_positions, splits=self._splits
         )
 
@@ -476,9 +566,9 @@ def wand_phrase_search(
          (k1+1), BM25Similarity.idfExplain:185-196). Seed θ from the
          best split, decode only survivors.
 
-    Scoring restricted splits goes through the ordinary phrase scorer
-    over a _SplitView, so exact/sloppy/hasRpts semantics are inherited
-    unchanged.
+    A bounded fetch is finished on the driver (_phrase_finish); a larger
+    one goes through the ordinary phrase scorer over a _SplitView. Both
+    keep the exact/sloppy/hasRpts semantics of Searcher._score_phrase.
     """
     import math
 
@@ -495,9 +585,7 @@ def wand_phrase_search(
     if any(t not in term_stats for t in distinct):
         if stats_out is not None:
             stats_out.update(splits_any=0, splits_all=0, splits_decoded=0)
-        return index.spark.createDataFrame(
-            [], f"doc_id long, score {searcher._score_type}"
-        )
+        return searcher._hits()
 
     # summed-idf weight, double path (mirrors _score_phrase_freqs)
     w = 0.0
@@ -509,7 +597,7 @@ def wand_phrase_search(
     weight = w * (1.2 + 1)
 
     # driver-side pandas over the memoized per-term split metadata
-    # (see wand_or_search) — no per-query shuffle job.
+    # (see _split_bounds) — no per-query shuffle job.
     mdf = index.split_meta(distinct)
     if len(mdf):
         per_term = (
@@ -550,50 +638,23 @@ def wand_phrase_search(
             splits_decoded=0,
         )
     if not candidates:
-        return index.spark.createDataFrame(
-            [], f"doc_id long, score {searcher._score_type}"
-        )
+        return searcher._hits()
 
     q = PhraseQuery(list(terms), slop=slop)
 
-    def score_splits(split_ids: list[int]) -> DataFrame:
+    def plan(split_ids: list[int]) -> DataFrame:
         view = _SplitView(index, split_ids)
         return Searcher(view, searcher.exact).score(q)
 
-    if not force_prune and not seed_walk_predicted_win(
-        [(ub, nd) for _, ub, nd in candidates]
-    ):
-        if stats_out is not None:
-            stats_out["splits_decoded"] = len(candidates)
-        return (
-            score_splits([s for s, _, _ in candidates])
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-
-    seed_split = candidates[0][0]
-    seed_rows = (
-        score_splits([seed_split])
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .collect()
+    return _split_topk(
+        searcher,
+        candidates,
+        k,
+        force_prune,
+        lambda split_ids: index.decode_postings_local(
+            distinct, want_positions=True, splits=split_ids
+        ),
+        _phrase_finish(searcher, list(terms), slop, term_stats),
+        plan,
+        stats_out,
     )
-    theta = (
-        float(seed_rows[-1]["score"]) if len(seed_rows) == k else float("-inf")
-    )
-    survivors = [
-        s
-        for s, ub, _ in candidates
-        if s != seed_split and ub * (1.0 + 1e-6) + 1e-12 >= theta
-    ]
-    if stats_out is not None:
-        stats_out["splits_decoded"] = 1 + len(survivors)
-    seed_df = index.spark.createDataFrame(
-        seed_rows, "doc_id long, score double"
-    ).select("doc_id", F.col("score").cast(searcher._score_type))
-    merged = (
-        score_splits(survivors).unionByName(seed_df)
-        if survivors
-        else seed_df
-    )
-    return merged.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -52,7 +52,8 @@ BOUNDED: dict[tuple[str, str], tuple[int, str]] = {
         1,
         "at most wand.overhead_eq_postings() postings (2,860 at the "
         "shipped constants), checked on split_meta before the fetch; "
-        "a bounded sloppy phrase walks this same frame on the driver",
+        "a bounded sloppy phrase walks this same frame on the driver, "
+        "and a bounded routed query finishes its top-k on it",
     ),
     ("index/segments.py", "SegmentIndex.split_meta"):
         (1, "block metadata of the query terms, memoized per term"),
@@ -94,9 +95,8 @@ BOUNDED: dict[tuple[str, str], tuple[int, str]] = {
     ("search/surround.py", "_expand_terms"):
         (1, "limit(MAX_BASIC_QUERIES + 1)"),
     ("search/termvectors.py", "term_vector"): (1, DOC_LOOKUP),
-    ("search/wand.py", "wand_and_search"): (1, "seed top-k: limit(k)"),
-    ("search/wand.py", "wand_or_search"): (1, "seed top-k: limit(k)"),
-    ("search/wand.py", "wand_phrase_search"): (1, "seed top-k: limit(k)"),
+    ("search/wand.py", "_split_topk"):
+        (1, "seed top-k of an unbounded seed fetch: limit(k)"),
     ("streaming/incremental.py", "IncrementalIndexWriter.add_versioned"):
         (1, "conflict sample: limit(5)"),
     ("streaming/incremental.py", "IncrementalIndexWriter.compact"):

@@ -1,19 +1,22 @@
-"""Where a postings fetch decodes (SegmentIndex.decode_postings).
+"""Where a postings fetch decodes (SegmentIndex.decode_postings), and
+where a routed query finishes.
 
 A fetch of at most ``wand.overhead_eq_postings()`` postings is decoded
 on the driver and returned as a local frame; a larger one keeps the
 distributed ``mapInPandas`` decode. A bounded sloppy phrase also runs
-its position walk on the driver. The two sides must be
-indistinguishable in results, and the bounded side must leave no
-Python stage in the query plan."""
+its position walk on the driver, and a bounded routed query (wand.py)
+scores and takes its top-k there, returning a local table of its hits.
+The two sides must be indistinguishable in results, and the bounded
+side must leave no Python stage in the query plan."""
 
 from __future__ import annotations
 
 import pytest
 
 from lucene_solr_spark.search import wand as W
-from lucene_solr_spark.search.executor import Searcher
+from lucene_solr_spark.search.executor import Searcher, _collect_terms
 from lucene_solr_spark.search.query import And, Or, PhraseQuery, TermQuery
+from tests.conftest import assert_topk_equal
 
 # plan-node names of the operators that run Python workers
 PYTHON_NODES = ("MapInPandas", "MapInArrow", "EvalPython", "InPandas",
@@ -152,8 +155,6 @@ def test_bounded_search_plan_has_no_python_node(seg, family, prune):
     """At the shipped constants these fetches are under the bound, so
     the whole top-k plan runs in the JVM, sloppy phrases included.
     (Exact-float32 mode keeps its scoring UDF.)"""
-    from lucene_solr_spark.search.executor import _collect_terms
-
     q = QUERIES[family]
     assert _fetch_size(seg, sorted(_collect_terms(q))) <= (
         W.overhead_eq_postings()
@@ -161,3 +162,192 @@ def test_bounded_search_plan_has_no_python_node(seg, family, prune):
     plan = _plan(Searcher(seg).search(q, 10, prune=prune))
     assert "LocalTableScan" in plan, plan
     assert not any(p in plan for p in PYTHON_NODES), plan
+
+
+# ---- the driver finish of a routed query (wand._split_topk) -----------
+
+
+def _oracle_topk(oracle, q, k=10):
+    if isinstance(q, TermQuery):
+        scores = oracle.query_term(q.term)
+    elif isinstance(q, PhraseQuery):
+        scores = (
+            oracle.query_phrase_sloppy(list(q.terms), q.slop)
+            if q.slop
+            else oracle.query_phrase(list(q.terms))
+        )
+    else:
+        terms = [c.query.term for c in q.clauses]
+        musts = all(c.occur == "MUST" for c in q.clauses)
+        scores = oracle.query_and(terms) if musts else oracle.query_or(terms)
+    return oracle.top_k(scores, k)
+
+
+def _hits(df) -> list:
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
+def _finished_on_driver(df) -> bool:
+    """The result is a bare local table of hits: no sort, no scan."""
+    return _plan(df).lstrip().startswith("== Physical Plan ==\n"
+                                          "LocalTableScan")
+
+
+def _routed_fetch_size(seg, q) -> int:
+    """Postings of a one-shot routed fetch: every split of an OR's
+    terms; for AND and phrases only the splits that hold every term."""
+    terms = sorted(_collect_terms(q))
+    meta = seg.split_meta(terms)
+    if isinstance(q, PhraseQuery) or (
+        not isinstance(q, TermQuery)
+        and all(c.occur == "MUST" for c in q.clauses)
+    ):
+        held = meta.groupby("split")["term"].nunique()
+        meta = meta[meta["split"].isin(held[held == len(terms)].index)]
+    return int(meta["nd"].sum())
+
+
+@pytest.mark.parametrize("exact", [False, True])
+@pytest.mark.parametrize("family", sorted(QUERIES))
+def test_driver_finish_matches_every_reference(
+    seg, small_oracle, monkeypatch, family, exact
+):
+    """At the shipped bound every family finishes on the driver, with
+    the ids, order, scores and schema of the above-bound Catalyst route
+    and of prune=False, and the top-k of OracleIndex."""
+    q = QUERIES[family]
+    s = Searcher(seg, exact_float32=exact)
+    finish = s.search(q, 10)
+    assert _finished_on_driver(finish), _plan(finish)
+    got = _hits(finish)
+    _set_bound(monkeypatch, 0.0)  # every fetch above the bound
+    catalyst = s.search(q, 10)
+    assert "TakeOrderedAndProject" in _plan(catalyst)
+    exhaustive = s.search(q, 10, prune=False)
+    assert got, family
+    assert got == _hits(catalyst) == _hits(exhaustive)
+    schema = finish.schema.simpleString()
+    assert schema == f"struct<doc_id:bigint,score:{s._score_type}>"
+    assert schema == catalyst.schema.simpleString()
+    assert schema == exhaustive.schema.simpleString()
+    assert_topk_equal(finish.collect(), _oracle_topk(small_oracle, q))
+
+
+@pytest.mark.parametrize("family", sorted(QUERIES))
+def test_driver_finish_at_bound_plus_minus_one(seg, monkeypatch, family):
+    """A routed query finishes on the driver exactly when its one-shot
+    fetch is at or under the bound, with the same hits either side."""
+    q = QUERIES[family]
+    n = _routed_fetch_size(seg, q)
+    s = Searcher(seg)
+    got = {}
+    for delta in (-1, 0, 1):
+        _set_bound(monkeypatch, n + delta)
+        df = s.search(q, 10)
+        assert _finished_on_driver(df) == (delta >= 0), (delta, _plan(df))
+        got[delta] = _hits(df)
+    assert got[-1], family
+    assert got[-1] == got[0] == got[1]
+
+
+def _jobs(spark, run, group: str) -> tuple[int, object]:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+@pytest.mark.parametrize("exact", [False, True])
+@pytest.mark.parametrize(
+    "q",
+    [
+        PhraseQuery(["timeout", "error"]),  # candidate splits, no match
+        And("error", "zzqabsent"),
+        TermQuery("zzqabsent"),
+    ],
+    ids=["no-match", "and-absent", "term-absent"],
+)
+def test_zero_hit_routed_query(spark, seg, q, exact):
+    """No hits: an empty local table of the result schema, whose
+    collect() starts no Spark job."""
+    s = Searcher(seg, exact_float32=exact)
+    df = s.search(q, 10)
+    assert _finished_on_driver(df), _plan(df)
+    jobs, rows = _jobs(spark, df.collect, f"zero-hit-{exact}")
+    assert rows == [] and jobs == 0
+    assert df.schema == s.search(TermQuery("timeout"), 10).schema
+    assert s.search(q, 10, prune=False).collect() == []
+
+
+SEED_WALKS = {
+    "or": (Or("error", "timeout"), lambda s: W.wand_or_search(
+        s, ["error", "timeout"], 10, force_prune=True)),
+    "and": (And("error", "timeout"), lambda s: W.wand_and_search(
+        s, ["error", "timeout"], 10, force_prune=True)),
+    "phrase": (QUERIES["phrase"], lambda s: W.wand_phrase_search(
+        s, ["spill", "fill3"], 0, 10, force_prune=True)),
+    "sloppy": (QUERIES["sloppy"], lambda s: W.wand_phrase_search(
+        s, ["fill7", "fill3"], 2, 10, force_prune=True)),
+}
+
+
+@pytest.mark.parametrize("exact", [False, True])
+@pytest.mark.parametrize("family", sorted(SEED_WALKS))
+def test_seed_walk_bounded_seed_unbounded_survivors(
+    seg, monkeypatch, family, exact
+):
+    """force_prune with a bound that admits the seed split alone: the
+    seed finishes on the driver (θ from its numpy top-k), the survivors
+    take the Catalyst route, and the merged top-k equals prune=False."""
+    q, walk = SEED_WALKS[family]
+    s = Searcher(seg, exact_float32=exact)
+    want = _hits(s.search(q, 10, prune=False))
+    fetches = []
+    local = seg.decode_postings_local
+
+    def spy(terms, want_positions=False, splits=None):
+        out = local(terms, want_positions, splits)
+        fetches.append((list(splits), out is not None))
+        return out
+
+    monkeypatch.setattr(seg, "decode_postings_local", spy)
+    walk(s).collect()  # at the shipped bound: learn the seed split
+    seed = fetches[0][0]
+    assert len(seed) == 1 and len(fetches) > 1, fetches
+    _set_bound(
+        monkeypatch, _fetch_size(seg, sorted(_collect_terms(q)), seed)
+    )
+    fetches.clear()
+    df = walk(s)
+    assert len(fetches) > 1, fetches
+    assert fetches[0] == (seed, True), fetches
+    assert not any(bounded for _, bounded in fetches[1:]), fetches
+    # survivors merge with the seed's hits in the Catalyst top-k (an
+    # empty seed table is optimized out of the union)
+    assert "TakeOrderedAndProject" in _plan(df)
+    assert _hits(df) == want
+
+
+@pytest.mark.parametrize("slop", [0, 2])
+@pytest.mark.parametrize(
+    "terms", [["fill3", "fill7", "fill3"], ["spill", "fill3", "spill"]]
+)
+def test_repeated_term_phrase_matches_oracle(
+    seg, small_oracle, monkeypatch, terms, slop
+):
+    """A phrase that repeats a term: the driver finish and the
+    distributed walk both equal OracleIndex, whose sloppy walk runs the
+    hasRpts path for repeated terms."""
+    q = PhraseQuery(terms, slop=slop)
+    want = _oracle_topk(small_oracle, q)
+    s = Searcher(seg)
+    driver = s.search(q, 10)
+    assert _finished_on_driver(driver)
+    assert_topk_equal(driver.collect(), want)
+    _set_bound(monkeypatch, 0.0)
+    distributed = s.search(q, 10, prune=False)
+    assert "MapInPandas" in _plan(distributed)
+    assert_topk_equal(distributed.collect(), want)

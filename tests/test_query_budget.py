@@ -4,7 +4,11 @@ driver sends to build and run it, and how many Spark jobs it starts.
 Every py4j command is a round trip over the Python/JVM bridge, and on a
 small store they, not Spark work, were most of a query's wall time. A
 warm query (its term metadata memoized by a first run) must stay within
-MAX_JOBS jobs and MAX_PY4J_COMMANDS commands per family."""
+MAX_PY4J_COMMANDS commands per family. Its fetch is within the
+driver-decode bound, so it runs exactly one Spark job, the block scan:
+it finishes on the driver, leaves no Python node in its plan and never
+builds a one-partition local frame (segments.local_frame) — in both
+precision modes."""
 
 from __future__ import annotations
 
@@ -14,8 +18,9 @@ import pytest
 
 from lucene_solr_spark.search.executor import Searcher
 from lucene_solr_spark.search.query import And, Or, PhraseQuery, TermQuery
+from tests.test_driver_decode import PYTHON_NODES, _plan
 
-MAX_JOBS = 2
+JOBS = 1
 MAX_PY4J_COMMANDS = 1000
 
 QUERIES = {
@@ -24,11 +29,12 @@ QUERIES = {
     "or": Or("error", "timeout", "zzqabsent"),
     "phrase": PhraseQuery(["spill", "fill3"]),
     "sloppy": PhraseQuery(["fill7", "fill3"], slop=2),
+    "sloppy_rpt": PhraseQuery(["spill", "fill3", "spill"], slop=2),
 }
 
 
 @pytest.fixture(scope="module")
-def searcher(small_index, tmp_path_factory):
+def store(small_index, tmp_path_factory):
     from lucene_solr_spark.index.segments import write_segments
 
     d = str(tmp_path_factory.mktemp("budget"))
@@ -37,7 +43,7 @@ def searcher(small_index, tmp_path_factory):
     assert seg.stats.max_doc // seg.split_range + 1 >= (
         Searcher.MIN_ROUTE_SPLITS
     ), "store too small for the query to be routed"
-    return Searcher(seg)
+    return seg
 
 
 def _cost(spark, monkeypatch, run, group: str) -> tuple[int, int, list]:
@@ -68,10 +74,15 @@ def _cost(spark, monkeypatch, run, group: str) -> tuple[int, int, list]:
 
 
 @pytest.mark.parametrize("family", sorted(QUERIES))
-def test_warm_routed_query_budget(spark, searcher, monkeypatch, family):
+def test_warm_routed_query_budget(spark, store, monkeypatch, family):
+    from lucene_solr_spark.index import segments
     from lucene_solr_spark.search import wand as W
 
     q = QUERIES[family]
+    monkeypatch.setattr(
+        segments, "local_frame",
+        lambda *a: pytest.fail("a bounded routed query built a local frame"),
+    )
     routed = []
     for name in ("wand_or_search", "wand_and_search", "wand_phrase_search"):
         inner = getattr(W, name)
@@ -79,12 +90,18 @@ def test_warm_routed_query_budget(spark, searcher, monkeypatch, family):
             W, name,
             lambda *a, _inner=inner, **kw: routed.append(1) or _inner(*a, **kw),
         )
-    warm = searcher.search(q, 10).collect()  # memoizes term metadata
-    assert routed, f"{family} query was not routed"
-    commands, jobs, rows = _cost(
-        spark, monkeypatch, lambda: searcher.search(q, 10).collect(),
-        f"budget-{family}",
-    )
-    assert rows == warm and rows, family
-    assert jobs <= MAX_JOBS, f"{family}: {jobs} Spark jobs"
-    assert commands <= MAX_PY4J_COMMANDS, f"{family}: {commands} py4j commands"
+    for exact in (False, True):
+        searcher = Searcher(store, exact_float32=exact)
+        warm = searcher.search(q, 10).collect()  # memoizes term metadata
+        assert routed, f"{family} query was not routed"
+        commands, jobs, rows = _cost(
+            spark, monkeypatch, lambda: searcher.search(q, 10).collect(),
+            f"budget-{family}-{exact}",
+        )
+        assert rows == warm and rows, family
+        assert jobs == JOBS, f"{family}, exact={exact}: {jobs} Spark jobs"
+        assert commands <= MAX_PY4J_COMMANDS, (
+            f"{family}, exact={exact}: {commands} py4j commands"
+        )
+        plan = _plan(searcher.search(q, 10))
+        assert not any(p in plan for p in PYTHON_NODES), plan

@@ -5,6 +5,9 @@ documented greedy-walk asymmetries."""
 import numpy as np
 import pytest
 
+# the line-by-line Java transliteration of SloppyPhraseScorer (hasRpts
+# path) lives in the oracle, which scores repeated-term phrases with it
+from lucene_solr_spark.oracle_engine import java_sloppy_freq
 from lucene_solr_spark.search.executor import Searcher
 from lucene_solr_spark.search.query import PhraseQuery
 from lucene_solr_spark.search.sloppy import sloppy_freq
@@ -73,213 +76,6 @@ def test_repeated_terms_now_supported(tiny_searcher):
     out = tiny_searcher.search(PhraseQuery(["error", "error"], 2), 10)
     assert out.columns == ["doc_id", "score"]
     out.collect()  # must execute without NotImplementedError
-
-
-# ---------------------------------------------------------------------
-# Line-by-line Java transliteration of SloppyPhraseScorer (hasRpts path)
-# used ONLY as a test reference: real binary heap (PriorityQueue.java
-# add/pop/upHeap/downHeap), PhrasePositions objects, the rptStack
-# re-queue dance — everything the production scan-queue walk optimizes
-# away. Agreement over randomized inputs pins control-flow equivalence.
-# ---------------------------------------------------------------------
-
-
-class _PP:
-    """PhrasePositions.java: position = raw - offset."""
-
-    def __init__(self, arr, offset):
-        self.arr, self.offset = arr, offset
-        self.i = -1
-        self.position = 0
-        self.rptGroup = -1
-        self.rptInd = -1
-
-    def firstPosition(self):
-        self.i = -1
-        self.nextPosition()
-
-    def nextPosition(self):
-        self.i += 1
-        if self.i < len(self.arr):
-            self.position = int(self.arr[self.i]) - self.offset
-            return True
-        return False
-
-
-class _PQ:
-    """PriorityQueue.java binary heap with PhraseQueue.lessThan."""
-
-    def __init__(self, max_size):
-        self.heap = [None] * (max_size + 1)
-        self.size = 0
-
-    @staticmethod
-    def lessThan(a, b):
-        if a.position == b.position:
-            return a.offset < b.offset
-        return a.position < b.position
-
-    def add(self, el):
-        self.size += 1
-        self.heap[self.size] = el
-        self._up()
-
-    def top(self):
-        return self.heap[1]
-
-    def pop(self):
-        r = self.heap[1]
-        self.heap[1] = self.heap[self.size]
-        self.heap[self.size] = None
-        self.size -= 1
-        self._down()
-        return r
-
-    def clear(self):
-        self.size = 0
-
-    def _up(self):
-        i = self.size
-        node = self.heap[i]
-        j = i >> 1
-        while j > 0 and self.lessThan(node, self.heap[j]):
-            self.heap[i] = self.heap[j]
-            i = j
-            j >>= 1
-        self.heap[i] = node
-
-    def _down(self):
-        i = 1
-        node = self.heap[i]
-        j = i << 1
-        k = j + 1
-        if k <= self.size and self.lessThan(self.heap[k], self.heap[j]):
-            j = k
-        while j <= self.size and self.lessThan(self.heap[j], node):
-            self.heap[i] = self.heap[j]
-            i = j
-            j = i << 1
-            k = j + 1
-            if k <= self.size and self.lessThan(
-                self.heap[k], self.heap[j]
-            ):
-                j = k
-        self.heap[i] = node
-
-
-def java_sloppy_freq(terms, term_positions, slop):
-    """Transliterated SloppyPhraseScorer.phraseFreq for one doc.
-    ``term_positions[t]`` = sorted raw positions of term t."""
-    from collections import Counter, defaultdict
-
-    n = len(terms)
-    pps = [_PP(term_positions[t], i) for i, t in enumerate(terms)]
-    for pp in pps:
-        pp.firstPosition()
-    cnt = Counter(terms)
-    groups = defaultdict(list)
-    for pp, t in zip(pps, terms):
-        if cnt[t] >= 2:
-            groups[t].append(pp)
-    rptGroups = []
-    for t in groups:
-        rg = sorted(groups[t], key=lambda p: p.offset)
-        for j, pp in enumerate(rg):
-            pp.rptGroup = len(rptGroups)
-            pp.rptInd = j
-        rptGroups.append(rg)
-    hasRpts = bool(rptGroups)
-    end = -(10**9)
-
-    def advancePP(pp):
-        nonlocal end
-        if not pp.nextPosition():
-            return False
-        if pp.position > end:
-            end = pp.position
-        return True
-
-    for rg in rptGroups:  # advanceRepeatGroups (non-MTP branch)
-        for j in range(1, len(rg)):
-            for _ in range(j):
-                if not rg[j].nextPosition():
-                    return 0.0
-    pq = _PQ(n)
-    pq.clear()
-    for pp in pps:  # fillQueue
-        if pp.position > end:
-            end = pp.position
-        pq.add(pp)
-
-    def tpPos(pp):
-        return pp.position + pp.offset
-
-    def collide(pp):
-        for pp2 in rptGroups[pp.rptGroup]:
-            if pp2 is not pp and tpPos(pp2) == tpPos(pp):
-                return pp2.rptInd
-        return -1
-
-    def lesser(a, b):
-        if a.position < b.position or (
-            a.position == b.position and a.offset < b.offset
-        ):
-            return a
-        return b
-
-    rptStack = [None] * n
-
-    def advanceRpts(pp):
-        if pp.rptGroup < 0:
-            return True
-        rg = rptGroups[pp.rptGroup]
-        bits = set()
-        k0 = pp.rptInd
-        while True:
-            k = collide(pp)
-            if k < 0:
-                break
-            pp = lesser(pp, rg[k])
-            if not advancePP(pp):
-                return False
-            if k != k0:
-                bits.add(k)
-        m = 0
-        while bits:  # re-queue dance
-            pp2 = pq.pop()
-            rptStack[m] = pp2
-            m += 1
-            if pp2.rptGroup >= 0 and pp2.rptInd in bits:
-                bits.discard(pp2.rptInd)
-        for i in range(m - 1, -1, -1):
-            pq.add(rptStack[i])
-        return True
-
-    freq = np.float32(0.0)
-    pp = pq.pop()
-    matchLength = end - pp.position
-    nxt = pq.top().position
-    while advancePP(pp):
-        if hasRpts and not advanceRpts(pp):
-            break
-        if pp.position > nxt:
-            if matchLength <= slop:
-                freq = np.float32(
-                    freq + np.float32(1.0) / np.float32(matchLength + 1)
-                )
-            pq.add(pp)
-            pp = pq.pop()
-            nxt = pq.top().position
-            matchLength = end - pp.position
-        else:
-            ml2 = end - pp.position
-            if ml2 < matchLength:
-                matchLength = ml2
-    if matchLength <= slop:
-        freq = np.float32(
-            freq + np.float32(1.0) / np.float32(matchLength + 1)
-        )
-    return float(freq)
 
 
 def _engine_freq(terms, term_positions, slop):
@@ -431,3 +227,67 @@ def test_closed_form_equals_walk_2clause():
         )
         got = chain_freq(a, b, slop)
         assert got == want, (trial, a, b, slop, got, want)
+
+
+def _sloppy_freqs_loop(pdf, n_clauses, slop, rpt_groups):
+    """The per-doc groupby loop that sloppy_freqs replaced, kept as the
+    reference for its numpy doc boundaries and clause counts."""
+    import pandas as pd
+
+    from lucene_solr_spark.search.sloppy import sloppy_freq_rpts
+
+    out_doc, out_tf, out_nb = [], [], []
+    for doc_id, g in pdf.groupby("doc_id", sort=False):
+        if g["clause"].nunique() != n_clauses:
+            continue
+        plists = [None] * n_clauses
+        for cl, plist in zip(g["clause"], g["positions"]):
+            plists[int(cl)] = np.asarray(plist, dtype=np.int64) - int(cl)
+        if rpt_groups:
+            f = sloppy_freq_rpts(plists, slop, rpt_groups)
+        else:
+            f = sloppy_freq(plists, slop)
+        if f > 0.0:
+            out_doc.append(int(doc_id))
+            out_tf.append(f)
+            out_nb.append(int(g["norm_byte"].iloc[0]))
+    return pd.DataFrame(
+        {
+            "doc_id": pd.Series(out_doc, dtype="int64"),
+            "tf": pd.Series(out_tf, dtype="float64"),
+            "norm_byte": pd.Series(out_nb, dtype="int32"),
+        }
+    )
+
+
+def test_sloppy_freqs_matches_groupby_loop():
+    """Docs missing a clause, single-row docs, repeated terms and empty
+    input: the vectorized sloppy_freqs equals the per-doc loop."""
+    import pandas as pd
+
+    from lucene_solr_spark.search.sloppy import clause_rows, sloppy_freqs
+
+    rng = np.random.default_rng(5)
+    shapes = [["a", "b"], ["a", "b", "c"], ["a", "b", "a"], ["a", "a"]]
+    for trial in range(300):
+        terms = shapes[trial % len(shapes)]
+        rows = []
+        for doc in range(int(rng.integers(0, 25))):
+            for t in sorted(set(terms)):
+                if rng.random() < 0.8:
+                    k = int(rng.integers(1, 6))
+                    pos = np.sort(rng.choice(30, size=k, replace=False))
+                    rows.append((t, doc * 7, k, pos.astype(np.int32), doc % 5))
+        frame = pd.DataFrame(
+            rows, columns=["term", "doc_id", "tf", "positions", "norm_byte"]
+        )
+        offsets = {}
+        for i, t in enumerate(terms):
+            offsets.setdefault(t, []).append(i)
+        rpt = [v for v in offsets.values() if len(v) > 1]
+        walk_rows = clause_rows(frame, offsets)
+        slop = int(rng.integers(0, 5))
+        pd.testing.assert_frame_equal(
+            sloppy_freqs(walk_rows, len(terms), slop, rpt),
+            _sloppy_freqs_loop(walk_rows, len(terms), slop, rpt),
+        )
