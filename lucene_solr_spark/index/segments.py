@@ -955,6 +955,9 @@ def build_segment_store(
                 )
                 sum_ttf = int(observed.get("tf_total") or 0)
                 stats_from_parts = True
+        # the parts only feed terms_stats: valid or not, they are dead
+        # bytes once it is written
+        shutil.rmtree(stats_dir, ignore_errors=True)
 
     if not stats_from_parts:
         # stats + terms_stats from block metadata (covers resumed buckets)
@@ -983,6 +986,11 @@ def build_segment_store(
         avg_field_length(sum_ttf, max_doc)
     )
     manifest["generation"] += 1
+    # which path wrote terms_stats: the reduce tasks' validated side
+    # parts, or the read-back of the block metadata
+    manifest["terms_stats_from"] = (
+        "side_parts" if stats_from_parts else "block_metadata"
+    )
     manifest["build_phase_sec"] = phases  # north-rule metrics: per-phase
     commit_manifest(index_dir, manifest)
     if os.environ.get("LSS_BUILD_TIMINGS"):
@@ -1084,10 +1092,194 @@ def _decode_partitions(want_positions: bool):
     return decode
 
 
-class SegmentIndex:
+SPLIT_META_COLUMNS = ["term", "split", "max_tf", "min_nb", "nd", "sum_tf"]
+
+
+class SplitIndex:
+    """The split read protocol: an index whose postings fall into
+    doc-range splits and carry per-(term, split) metadata, which the
+    WAND router (search/wand.py) and the driver-decode bound read before
+    any postings are fetched. SegmentIndex is one, with splits of
+    ``split_range`` docs over its block store; the near-real-time reader
+    (streaming/incremental.py) is another, a one-split index over flat
+    postings. Searcher routes every SplitIndex.
+
+    Shared here: the per-term memo of split_meta, the term statistics
+    summed from it, and where a postings fetch decodes. A subclass sets
+    ``_split_meta_cache = {}`` and supplies ``n_splits``,
+    ``keep_positions`` and three fetches:
+      - ``_split_meta_rows(terms)``: the split_meta rows of ``terms``
+        (pandas), called for terms not memoized yet;
+      - ``_pull_postings(terms, want_positions, splits)``: a fetch known
+        to be bounded, as a DECODED_SCHEMA pandas frame;
+      - ``_scan_postings(terms, want_positions, splits)``: any fetch, as a
+        lazy DECODED_SCHEMA DataFrame."""
+
+    _SPLIT_META_CACHE_MAX = 4096  # terms; FIFO evict past this
+    # Optional per-split term blooms (index/bloom.py, the
+    # BloomFilteringPostingsFormat analogue). None until a segment store
+    # attaches one; postings_for_terms then intersects its split pruning
+    # with the bloom's maybe-set.
+    blooms = None
+
+    def split_meta(self, terms: list[str]) -> "pd.DataFrame":
+        """Per-(term, split) metadata for the WAND bound pass and the
+        term statistics: columns SPLIT_META_COLUMNS (term, split,
+        max_tf, min_nb, nd, sum_tf), one row per block (per term in a
+        one-split index).
+
+        Memoized per TERM on the driver — the TermStates / skip-data
+        cache analogue (Lucene readers keep term metadata hot per
+        segment; here the unit is the query term). Terms not yet cached
+        are fetched in ONE job (_split_meta_rows); a warm query starts
+        none, and the bound pass runs driver-side in pandas over
+        ≤ (#splits × #blocks/split) rows per term (~10^6 at 10^12 docs,
+        the same bounded-metadata budget as the bound pass itself)."""
+        cache = self._split_meta_cache
+        missing = sorted({t for t in terms if t not in cache})
+        fetched = self._split_meta_rows(missing) if missing else None
+        # the result is built before eviction: one call may ask for
+        # more terms than the cache holds
+        frames = []
+        for t in sorted(set(terms)):
+            frame = cache.get(t)
+            if frame is None:
+                frame = fetched[fetched["term"] == t].reset_index(drop=True)
+                cache[t] = frame
+            frames.append(frame)
+        while len(cache) > self._SPLIT_META_CACHE_MAX:
+            cache.pop(next(iter(cache)))
+        if not frames:
+            return pd.DataFrame(columns=SPLIT_META_COLUMNS)
+        return pd.concat(frames, ignore_index=True)
+
+    def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
+        """{term: (df, ttf)} for the indexed ``terms``, from the memoized
+        split_meta rows: df = Σ nd and ttf = Σ sum_tf over the term's
+        rows, the sums a segment store writes to ``terms_stats``. A warm
+        query therefore scans nothing for its statistics (Lucene's
+        TermStates cache)."""
+        sums = (
+            self.split_meta(list(terms))
+            .astype({"nd": "int64", "sum_tf": "int64"})
+            .groupby("term")[["nd", "sum_tf"]]
+            .sum()
+        )
+        return {
+            t: (int(df), int(ttf))
+            for t, df, ttf in zip(sums.index, sums["nd"], sums["sum_tf"])
+        }
+
+    def postings_for_terms(
+        self,
+        terms: list[str],
+        want_positions: bool = False,
+        splits: list[int] | None = None,
+    ) -> DataFrame:
+        """Pruned decode of the given terms' postings (decode_postings),
+        after an optional bloom prune. ``splits``: optionally restrict
+        to the given doc-range splits (doc_id // split_range) — the
+        skip-list analogue the WAND paths use to decode only
+        bound-surviving splits.
+
+        With blooms attached (SegmentIndex.attach_blooms), the candidate
+        splits are further intersected with the bloom's maybe-set — the
+        BloomFilteringPostingsFormat.java:324 NO-answer short-circuit:
+        a term absent from every split never touches the postings and
+        comes back as an empty local frame.
+
+        The WAND cost model (search/wand.py) also picks where decode
+        runs: a fetch of at most ``wand.overhead_eq_postings()``
+        postings is decoded eagerly on the driver, so the returned
+        frame is a local table rather than a lazy Spark plan."""
+        return self.decode_postings(
+            terms, want_positions, self._bloom_splits(terms, splits)
+        )
+
+    def postings_for_terms_local(
+        self,
+        terms: list[str],
+        want_positions: bool = False,
+        splits: list[int] | None = None,
+    ) -> "pd.DataFrame | None":
+        """postings_for_terms as a driver-side pandas frame, or None
+        when the fetch is above the bound (decode_postings_local)."""
+        return self.decode_postings_local(
+            terms, want_positions, self._bloom_splits(terms, splits)
+        )
+
+    def _bloom_splits(
+        self, terms: list[str], splits: list[int] | None
+    ) -> list[int] | None:
+        """``splits`` intersected with the attached blooms' maybe-set
+        (unchanged without blooms, or when the bloom excludes
+        nothing)."""
+        if self.blooms is None:
+            return splits
+        maybe = self.blooms.splits_for(list(terms))
+        if splits is None and len(maybe) >= self.n_splits:
+            return None  # bloom excludes nothing — keep the unpruned scan
+        return sorted(maybe if splits is None else (set(splits) & maybe))
+
+    def decode_postings(
+        self,
+        terms: list[str],
+        want_positions: bool = False,
+        splits: list[int] | None = None,
+    ) -> DataFrame:
+        """The one decode entry point for a term (and split) restricted
+        fetch: its DECODED_SCHEMA rows.
+
+        Where decode runs is chosen by the WAND cost model: a bounded
+        fetch is decode_postings_local's frame, handed back as a local
+        table, so the query never crosses into a Python worker for
+        postings. Larger fetches stay a lazy Spark plan
+        (_scan_postings)."""
+        decoded = self.decode_postings_local(terms, want_positions, splits)
+        if decoded is not None:
+            return local_frame(self.spark, decoded, DECODED_SCHEMA)
+        return self._scan_postings(
+            terms, want_positions and self.keep_positions, splits
+        )
+
+    def decode_postings_local(
+        self,
+        terms: list[str],
+        want_positions: bool = False,
+        splits: list[int] | None = None,
+    ) -> "pd.DataFrame | None":
+        """A bounded fetch decoded on the driver: the DECODED_SCHEMA rows
+        of ``terms`` (restricted to ``splits``) as pandas, or None when
+        the fetch is too large to pull.
+
+        The fetch size is Σ nd over the memoized split_meta rows of its
+        terms and splits. At or under ``wand.overhead_eq_postings()``
+        postings (the decode work one extra Spark job's fixed overhead
+        buys), it is pulled through one Arrow ``toPandas``
+        (_pull_postings). Driver memory is bounded by that cap. The same
+        bound lets bounded sloppy phrases and routed queries finish on
+        the driver. A fetch with no postings scans nothing."""
+        from ..search.wand import overhead_eq_postings  # wand imports us
+
+        meta = self.split_meta(list(terms))
+        if splits is not None:
+            meta = meta[meta["split"].isin(list(splits))]
+        n_postings = int(meta["nd"].sum())
+        if n_postings == 0:
+            return _empty_decoded()
+        if n_postings > overhead_eq_postings():
+            return None
+        return self._pull_postings(
+            terms, want_positions and self.keep_positions, splits
+        )
+
+
+class SegmentIndex(SplitIndex):
     """Query-side view over the persisted segment store, duck-typed to
     InvertedIndex (Searcher works unchanged): ``postings`` decodes blocks
-    lazily behind a term-pruned scan."""
+    lazily behind a term-pruned scan. Its splits are the doc ranges
+    ``first_doc // split_range``, and split_meta has one row per
+    block."""
 
     def __init__(
         self,
@@ -1109,11 +1301,14 @@ class SegmentIndex:
         self.split_range = int(manifest.get("split_range", SPLIT_RANGE))
         self._bucket_cache: dict[tuple, list[int]] = {}
         self._split_meta_cache: "dict[str, pd.DataFrame]" = {}
-        # Optional per-split term blooms (index/bloom.py, the
-        # BloomFilteringPostingsFormat analogue). None until a caller
-        # attaches one; postings_for_terms then intersects its split
-        # pruning with the bloom's maybe-set.
-        self.blooms = None
+
+    @property
+    def n_splits(self) -> int:
+        return self.stats.max_doc // self.split_range + 1
+
+    @property
+    def keep_positions(self) -> bool:
+        return bool(self.manifest["keep_positions"])
 
     def attach_blooms(self, build: bool = False) -> "SegmentIndex":
         """Load (or build-and-load) the per-split term blooms and turn
@@ -1125,59 +1320,26 @@ class SegmentIndex:
         self.blooms = BloomIndex.open(self)
         return self
 
-    _SPLIT_META_CACHE_MAX = 4096  # terms; FIFO evict past this
-
-    def split_meta(self, terms: list[str]) -> "pd.DataFrame":
-        """Per-(term, split) block metadata for the WAND bound pass and
-        the term statistics: columns (term, split, max_tf, min_nb, nd,
-        sum_tf), one row per block.
-
-        Memoized per TERM on the driver — the TermStates / skip-data
-        cache analogue (Lucene readers keep term metadata hot per
-        segment; here the unit is the query term). Terms not yet cached
-        are fetched in ONE narrow job: filter + project + toPandas via
-        Arrow, no shuffle — the groupBy that used to run per query now
-        happens driver-side in pandas over ≤ (#splits × #blocks/split)
-        rows per term (~10^6 at 10^12 docs, the same bounded-metadata
-        budget as the bound pass itself)."""
-        missing = sorted(
-            {t for t in terms if t not in self._split_meta_cache}
+    def _split_meta_rows(self, terms: list[str]) -> "pd.DataFrame":
+        """One row per block of ``terms``: filter + project + toPandas
+        via Arrow, one narrow job with no shuffle."""
+        return (
+            self.blocks.where(
+                F.col("bucket").isin(self.buckets_of(terms))
+                & F.col("term").isin(terms)
+            )
+            .select(
+                "term",
+                (F.col("first_doc") / F.lit(self.split_range))
+                .cast("long")
+                .alias("split"),
+                "max_tf",
+                "min_nb",
+                F.col("num_docs").alias("nd"),
+                "sum_tf",
+            )
+            .toPandas()
         )
-        fetched = None
-        if missing:
-            fetched = (
-                self.blocks.where(
-                    F.col("bucket").isin(self.buckets_of(missing))
-                    & F.col("term").isin(missing)
-                )
-                .select(
-                    "term",
-                    (F.col("first_doc") / F.lit(self.split_range))
-                    .cast("long")
-                    .alias("split"),
-                    "max_tf",
-                    "min_nb",
-                    F.col("num_docs").alias("nd"),
-                    "sum_tf",
-                )
-                .toPandas()
-            )
-        # the result is built before eviction: one call may ask for
-        # more terms than the cache holds
-        frames = []
-        for t in sorted(set(terms)):
-            frame = self._split_meta_cache.get(t)
-            if frame is None:
-                frame = fetched[fetched["term"] == t].reset_index(drop=True)
-                self._split_meta_cache[t] = frame
-            frames.append(frame)
-        while len(self._split_meta_cache) > self._SPLIT_META_CACHE_MAX:
-            self._split_meta_cache.pop(next(iter(self._split_meta_cache)))
-        if not frames:
-            return pd.DataFrame(
-                columns=["term", "split", "max_tf", "min_nb", "nd", "sum_tf"]
-            )
-        return pd.concat(frames, ignore_index=True)
 
     @classmethod
     def open(
@@ -1204,61 +1366,9 @@ class SegmentIndex:
         generic view decodes everything (used only by MatchAll-ish paths).
         """
         return self.blocks.mapInPandas(
-            _decode_partitions(self.manifest["keep_positions"]),
+            _decode_partitions(self.keep_positions),
             DECODED_SCHEMA,
         )
-
-    def postings_for_terms(
-        self,
-        terms: list[str],
-        want_positions: bool = False,
-        splits: list[int] | None = None,
-    ) -> DataFrame:
-        """Pruned decode of the given terms' postings (decode_postings),
-        after an optional bloom prune. ``splits``: optionally restrict
-        to the given doc-range splits (first_doc // split_range) — the
-        skip-list analogue the WAND paths use to decode only
-        bound-surviving splits.
-
-        With blooms attached (attach_blooms), the candidate splits are
-        further intersected with the bloom's maybe-set — the
-        BloomFilteringPostingsFormat.java:324 NO-answer short-circuit:
-        a term absent from every split never touches the blocks scan
-        and comes back as an empty local frame.
-
-        The WAND cost model (search/wand.py) also picks where decode
-        runs: a fetch of at most ``wand.overhead_eq_postings()``
-        postings is decoded eagerly on the driver, so the returned
-        frame is a local table rather than a lazy Python stage."""
-        return self.decode_postings(
-            terms, want_positions, self._bloom_splits(terms, splits)
-        )
-
-    def postings_for_terms_local(
-        self,
-        terms: list[str],
-        want_positions: bool = False,
-        splits: list[int] | None = None,
-    ) -> "pd.DataFrame | None":
-        """postings_for_terms as a driver-side pandas frame, or None
-        when the fetch is above the bound (decode_postings_local)."""
-        return self.decode_postings_local(
-            terms, want_positions, self._bloom_splits(terms, splits)
-        )
-
-    def _bloom_splits(
-        self, terms: list[str], splits: list[int] | None
-    ) -> list[int] | None:
-        """``splits`` intersected with the attached blooms' maybe-set
-        (unchanged without blooms, or when the bloom excludes
-        nothing)."""
-        if self.blooms is None:
-            return splits
-        maybe = self.blooms.splits_for(list(terms))
-        n_splits = self.stats.max_doc // self.split_range + 1
-        if splits is None and len(maybe) >= n_splits:
-            return None  # bloom excludes nothing — keep the unpruned scan
-        return sorted(maybe if splits is None else (set(splits) & maybe))
 
     def block_scan(
         self, terms: list[str], splits: list[int] | None = None
@@ -1281,65 +1391,33 @@ class SegmentIndex:
             )
         return self.blocks.where(" AND ".join(cond))
 
-    def decode_postings(
+    def _pull_postings(
         self,
         terms: list[str],
-        want_positions: bool = False,
-        splits: list[int] | None = None,
-    ) -> DataFrame:
-        """The one decode entry point for a term (and split) restricted
-        fetch: DECODED_SCHEMA rows of ``block_scan(terms, splits)``.
-
-        Where decode runs is chosen by the WAND cost model: a bounded
-        fetch is decode_postings_local's frame, handed back as a local
-        table, so the query never crosses into a Python worker for
-        postings. Larger fetches decode distributed in ``mapInPandas``."""
-        decoded = self.decode_postings_local(terms, want_positions, splits)
-        if decoded is not None:
-            return local_frame(self.spark, decoded, DECODED_SCHEMA)
-        return self.block_scan(terms, splits).mapInPandas(
-            _decode_partitions(
-                want_positions and self.manifest["keep_positions"]
-            ),
-            DECODED_SCHEMA,
-        )
-
-    def decode_postings_local(
-        self,
-        terms: list[str],
-        want_positions: bool = False,
-        splits: list[int] | None = None,
-    ) -> "pd.DataFrame | None":
-        """A bounded fetch decoded on the driver: the DECODED_SCHEMA rows
-        of ``block_scan(terms, splits)`` as pandas, or None when the
-        fetch is too large to pull.
-
-        The fetch size is Σ num_docs over the memoized split_meta rows of
-        its terms and splits. At or under ``wand.overhead_eq_postings()``
-        postings (the decode work one extra Spark job's fixed overhead
-        buys), the scan is pulled through Arrow ``toPandas`` — JVM only,
-        just the columns decode needs — and decoded here with the same
-        kernel the distributed path runs. Driver memory is bounded by
-        that cap. The same bound lets bounded sloppy phrases finish on
-        the driver (Searcher._score_phrase_sloppy). A fetch with no
-        blocks scans nothing."""
-        from ..search.wand import overhead_eq_postings  # wand imports us
-
-        want_positions = want_positions and self.manifest["keep_positions"]
-        meta = self.split_meta(list(terms))
-        if splits is not None:
-            meta = meta[meta["split"].isin(list(splits))]
-        n_postings = int(meta["nd"].sum())
-        if n_postings == 0:
-            return _empty_decoded()
-        if n_postings > overhead_eq_postings():
-            return None
+        want_positions: bool,
+        splits: list[int] | None,
+    ) -> "pd.DataFrame":
+        """A bounded fetch: ``block_scan(terms, splits)`` pulled through
+        Arrow ``toPandas`` — JVM only, just the columns decode needs —
+        and decoded here with the kernel the distributed path runs."""
         cols = ["term", "first_doc", "num_docs", "docs_bin", "tfs_bin",
                 "norms_bin"] + (["pos_bin"] if want_positions else [])
         (decoded,) = _decode_partitions(want_positions)(
             [self.block_scan(terms, splits).select(*cols).toPandas()]
         )
         return decoded
+
+    def _scan_postings(
+        self,
+        terms: list[str],
+        want_positions: bool,
+        splits: list[int] | None,
+    ) -> DataFrame:
+        """Any fetch: ``block_scan(terms, splits)`` decoded distributed
+        in ``mapInPandas``."""
+        return self.block_scan(terms, splits).mapInPandas(
+            _decode_partitions(want_positions), DECODED_SCHEMA
+        )
 
     def postings_for_matched(
         self, matched: DataFrame, want_positions: bool = False
@@ -1358,9 +1436,7 @@ class SegmentIndex:
             F.broadcast(m), on=["bucket", "term"], how="left_semi"
         )
         return pruned.mapInPandas(
-            _decode_partitions(
-                want_positions and self.manifest["keep_positions"]
-            ),
+            _decode_partitions(want_positions and self.keep_positions),
             DECODED_SCHEMA,
         )
 
@@ -1382,20 +1458,3 @@ class SegmentIndex:
         out = sorted({int(r["b"]) for r in rows})
         self._bucket_cache[key] = out
         return out
-
-    def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
-        """{term: (df, ttf)} for the indexed ``terms``, from the memoized
-        split_meta rows: df = Σ num_docs and ttf = Σ sum_tf over the
-        term's blocks, the same sums build_segment_store writes to
-        ``terms_stats``. A warm query therefore scans nothing for its
-        statistics (Lucene's TermStates cache)."""
-        sums = (
-            self.split_meta(list(terms))
-            .astype({"nd": "int64", "sum_tf": "int64"})
-            .groupby("term")[["nd", "sum_tf"]]
-            .sum()
-        )
-        return {
-            t: (int(df), int(ttf))
-            for t, df, ttf in zip(sums.index, sums["nd"], sums["sum_tf"])
-        }

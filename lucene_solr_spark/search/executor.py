@@ -24,6 +24,10 @@ Physical shapes (SURVEY.md §2.4, §2.7-2.9):
     (score desc, doc_id asc) top-k in numpy on the driver and returns
     the k hits as a local table (Searcher._hits), whose collect() runs
     no Spark job.
+  - routing: every index that speaks the split read protocol
+    (index/segments.py SplitIndex — a segment store, or the
+    near-real-time reader as a one-split index) routes; the flat
+    InvertedIndex and ``prune=False`` take the plans above.
 """
 
 from __future__ import annotations
@@ -167,10 +171,11 @@ class Searcher:
     def search(self, q: Query, k: int = 10, prune: bool = True) -> DataFrame:
         """TopDocs analogue: top-k (doc_id, score), HitQueue tie-break.
 
-        On a segment store, pure term conjunctions/disjunctions and
-        phrases route to the block-max split-pruned paths (wand.py) BY
-        DEFAULT — top-k over 10^12 docs must never decode postings the
-        bound already excludes, exactly as Lucene's default collectors
+        On a SplitIndex (a segment store or the near-real-time reader),
+        pure term conjunctions/disjunctions and phrases route to the
+        block-max split-pruned paths (wand.py) BY DEFAULT — top-k over
+        10^12 docs must never decode postings the bound already
+        excludes, exactly as Lucene's default collectors
         lean on skip lists. Pruning is rank-identical (score-safe);
         ``prune=False`` forces the exhaustive plan (used by tests to
         prove the identity)."""
@@ -183,25 +188,26 @@ class Searcher:
             F.desc("score"), F.asc("doc_id")
         ).limit(k)
 
-    # Route to split pruning only when the store has enough splits for
-    # the bound to skip real work: below this the 3-job WAND shape
-    # (metadata agg + seed + survivors) costs more than one exhaustive
-    # scan — the same reason Lucene consults skip lists only on long
-    # postings lists (skipInterval=16, Lucene40PostingsWriter.java:66).
-    # At the default 2^20-wide splits this means >= ~8M docs.
+    # The seed-then-prune walk (wand._split_topk) runs only on an index
+    # of at least this many splits: with fewer, the seed job's fixed
+    # overhead buys too little skipped decode — the same reason Lucene
+    # consults skip lists only on long postings lists (skipInterval=16,
+    # Lucene40PostingsWriter.java:66). Routing itself is not gated: a
+    # smaller index scores every candidate split in one fetch, exactly
+    # the exhaustive fetch, finished on the driver when it is bounded.
+    # At the default 2^20-wide splits the walk needs >= ~7.3M docs.
     MIN_ROUTE_SPLITS = 8
 
     def _wand_route(self, q: Query, k: int) -> DataFrame | None:
         """Route top-k shapes the split-bound machinery covers to the
-        pruned paths; anything else returns None (exhaustive plan).
-        Covered: unboosted pure-SHOULD / pure-MUST term booleans within
-        default msm semantics, single terms, and phrases."""
-        from ..index.segments import SegmentIndex
+        pruned paths when the index speaks the split read protocol
+        (SplitIndex: a segment store or the near-real-time reader);
+        anything else returns None (exhaustive plan). Covered: unboosted
+        pure-SHOULD / pure-MUST term booleans within default msm
+        semantics, single terms, and phrases."""
+        from ..index.segments import SplitIndex
 
-        if not isinstance(self.index, SegmentIndex):
-            return None
-        n_splits = self.index.stats.max_doc // self.index.split_range + 1
-        if n_splits < self.MIN_ROUTE_SPLITS:
+        if not isinstance(self.index, SplitIndex):
             return None
         from . import wand as W
 
@@ -211,7 +217,7 @@ class Searcher:
         if (
             isinstance(q, PhraseQuery)
             and q.boost == 1.0
-            and self.index.manifest.get("keep_positions", False)
+            and self.index.keep_positions
         ):
             return W.wand_phrase_search(self, list(q.terms), q.slop, k)
         if isinstance(q, BooleanQuery):

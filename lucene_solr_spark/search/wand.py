@@ -1,4 +1,6 @@
-"""Block-max WAND top-k for disjunctive queries over the segment store.
+"""Block-max WAND top-k over any index that speaks the split read
+protocol (index/segments.py SplitIndex): a segment store, or the
+near-real-time reader as a one-split index over its flat postings.
 
 Reference semantics: Lucene 4.0 has multi-level skip lists only
 (lucene/core/.../codecs/lucene40/Lucene40SkipListWriter.java:53-93); the
@@ -26,20 +28,24 @@ a shuffle engine):
   3. prune: drop every split with tot[v] < θ (no doc there can enter
      top-k); fully score the survivors; merge with the seed; top-k.
 
-  The seed walk runs only when the cost model below predicts it pays
-  for its extra fetch; otherwise every candidate split is scored at
-  once. The metadata pass is driver-side pandas over the per-term
-  split metadata, memoized by SegmentIndex.split_meta, so a warm query
-  starts no job for it. Each scoring step is one fetch of the chosen
-  splits' blocks:
+  The seed walk runs only on an index of at least
+  Searcher.MIN_ROUTE_SPLITS splits, and there only when the cost model
+  below predicts it pays for its extra fetch; otherwise every candidate
+  split is scored at once. On a one-split index that one fetch is
+  exactly the exhaustive fetch. The metadata pass is driver-side pandas
+  over the per-term split metadata, memoized by SplitIndex.split_meta,
+  so a warm query starts no job for it. Each scoring step is one fetch
+  of the chosen splits' postings:
     - within the driver-decode bound (decode_postings_local), the fetch
-      is one block-scan job, and the driver finishes the query in
-      numpy (_split_topk): score with the Searcher's BM25 kernel, sum
-      per doc in a fixed term order (or count phrase occurrences), take
-      top-k by (score desc, doc_id asc) and return the k hits as a
-      local table whose collect() starts no further job;
-    - above it, the Catalyst plan: mapInPandas decode, score, per-doc
-      aggregate and TakeOrderedAndProject.
+      is one scan job (the block scan of a segment store, the flat scan
+      of the reader), and the driver finishes the query in numpy
+      (_split_topk): score with the Searcher's BM25 kernel, sum per doc
+      in a fixed term order (or count phrase occurrences), take top-k
+      by (score desc, doc_id asc) and return the k hits as a local table
+      whose collect() starts no further job;
+    - above it, the Catalyst plan: the lazy fetch (mapInPandas decode of
+      a segment store's blocks, a filter of the reader's flat
+      postings), score, per-doc aggregate and TakeOrderedAndProject.
   At 10^12 docs / 2^20-wide splits the metadata side is ~10^6 rows per
   term-set — trivially collectable/broadcastable.
 """
@@ -53,7 +59,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..index.segments import SegmentIndex
+from ..index.segments import SplitIndex
 from .executor import Searcher, _clause_offsets
 from .sloppy import clause_rows, sloppy_freqs
 
@@ -83,7 +89,7 @@ from .sloppy import clause_rows, sloppy_freqs
 # round-4's fixed _SEED_MIN_SPLITS/_SEED_MIN_POSTINGS constants with
 # the measured break-even point.
 # The same break-even also picks WHERE a postings fetch decodes
-# (SegmentIndex.decode_postings_local): a fetch of at most
+# (SplitIndex.decode_postings_local): a fetch of at most
 # overhead_eq_postings() postings is decoded eagerly on the driver from
 # an Arrow toPandas of its pruned block scan, because the JVM->Python
 # task boundary of a mapInPandas stage costs about one such job
@@ -159,7 +165,8 @@ def _split_topk(
 ) -> DataFrame:
     """Top-k over the candidate splits ``cands`` = [(split, score upper
     bound, postings)], bound-desc: all at once, or the seed-then-prune
-    walk when forced or predicted to win.
+    walk when forced, or when the index has at least
+    Searcher.MIN_ROUTE_SPLITS splits and the walk is predicted to win.
 
     Each scoring step is ``fetch(splits)`` — the bounded driver fetch
     (decode_postings_local's frame, or None above the bound) — then
@@ -178,8 +185,9 @@ def _split_topk(
             return searcher._hits(*_hits_topk(scored, k))
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
-    if not force_prune and not seed_walk_predicted_win(
-        [(ub, nd) for _, ub, nd in cands]
+    if not force_prune and (
+        searcher.index.n_splits < Searcher.MIN_ROUTE_SPLITS
+        or not seed_walk_predicted_win([(ub, nd) for _, ub, nd in cands])
     ):
         if stats_out is not None:
             stats_out["splits_decoded"] = len(cands)
@@ -365,8 +373,8 @@ def wand_or_search(
     ``searcher.search(Or(*terms), k)`` but decoding only splits whose
     block-max bound can beat the seed threshold."""
     index = searcher.index
-    if not isinstance(index, SegmentIndex):
-        raise TypeError("wand_or_search needs a SegmentIndex")
+    if not isinstance(index, SplitIndex):
+        raise TypeError("wand_or_search needs a SplitIndex")
     term_stats = index.term_stats(sorted(set(terms)))
     # duplicate input terms: searcher.search(Or(*terms)) scores each
     # duplicate SHOULD clause and sums, so fold multiplicity into the
@@ -450,8 +458,8 @@ def wand_and_search(
     ``splits_decoded`` — the pytest hook proving decode work shrank.
     """
     index = searcher.index
-    if not isinstance(index, SegmentIndex):
-        raise TypeError("wand_and_search needs a SegmentIndex")
+    if not isinstance(index, SplitIndex):
+        raise TypeError("wand_and_search needs a SplitIndex")
     musts = sorted(set(terms))
     if len(musts) != len(terms):
         raise ValueError("duplicate MUST terms are redundant in AND")
@@ -514,7 +522,7 @@ def wand_and_search(
 
 
 class _SplitView:
-    """Read-only facade over a SegmentIndex restricted to a split set:
+    """Read-only facade over a SplitIndex restricted to a split set:
     postings decode only the given splits, while collection/term stats
     stay GLOBAL so BM25 weights are identical to the full index. Splits
     are self-contained scoring units (every posting of doc d lives in
@@ -523,7 +531,7 @@ class _SplitView:
     scored only when its fetch is above the driver bound, so it offers
     no driver-side fetch and a sloppy phrase walks in mapInPandas."""
 
-    def __init__(self, seg: SegmentIndex, splits: list[int]):
+    def __init__(self, seg: SplitIndex, splits: list[int]):
         self._seg = seg
         self._splits = list(splits)
         self.spark = seg.spark
@@ -575,9 +583,9 @@ def wand_phrase_search(
     from .query import PhraseQuery
 
     index = searcher.index
-    if not isinstance(index, SegmentIndex):
-        raise TypeError("wand_phrase_search needs a SegmentIndex")
-    if not index.manifest["keep_positions"]:
+    if not isinstance(index, SplitIndex):
+        raise TypeError("wand_phrase_search needs a SplitIndex")
+    if not index.keep_positions:
         raise ValueError("phrase search needs a positions-bearing store")
     distinct = sorted(set(terms))
     n = len(distinct)

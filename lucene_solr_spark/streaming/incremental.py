@@ -20,8 +20,17 @@ Reference mapping:
     TieredMergePolicy.java:76-83): ``compact()`` unions small delta
     segments into one (merge-on-read -> merge-on-write compaction).
 
-Query side: ``reader()`` returns a view duck-typed to InvertedIndex, so
-``Searcher`` works unchanged over base + un-compacted deltas.
+Query side: ``reader()`` returns a StreamingIndexReader over base +
+un-compacted deltas. It is a one-split index that speaks the segment
+store's split read protocol (index/segments.py SplitIndex) over the
+flat postings: per-term split metadata memoized on the driver (one
+aggregate job per cold term set, from the raw pre-tombstone postings),
+term statistics summed from it, and postings fetches that are pulled
+to the driver when bounded and stay a lazy Catalyst filter otherwise,
+with tombstones anti-joined either way. So ``Searcher`` routes its
+queries through the split walk (search/wand.py): a warm bounded query
+is one Spark job, the flat scan, finished on the driver. The on-disk
+layout is still flat postings per delta.
 """
 
 from __future__ import annotations
@@ -30,15 +39,19 @@ import json
 import os
 from dataclasses import dataclass
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.literals import sql_in
 from ..index.builder import (
     POSTINGS_FLAT_SCHEMA,
     CollectionStats,
     _invert_partitions,
 )
 from ..index.docids import assign_doc_ids
+from ..index.segments import SPLIT_META_COLUMNS, SplitIndex
 
 MANIFEST = "streaming_manifest.json"
 
@@ -490,14 +503,31 @@ class IncrementalIndexWriter:
         return StreamingIndexReader(self.spark, self.index_dir)
 
 
+def _decoded(postings: DataFrame, want_positions: bool) -> DataFrame:
+    """Flat postings rows as DECODED_SCHEMA columns (positions null
+    unless wanted)."""
+    positions = (
+        F.col("positions")
+        if want_positions
+        else F.lit(None).cast("array<int>").alias("positions")
+    )
+    return postings.select("term", "doc_id", "tf", positions, "norm_byte")
+
+
 @dataclass
-class StreamingIndexReader:
-    """InvertedIndex duck-type over the current committed segment set
+class StreamingIndexReader(SplitIndex):
+    """A one-split index over the current committed segment set
     (SearcherManager.maybeRefresh analogue: construct a new reader to see
-    newly committed batches)."""
+    newly committed batches). It speaks the segment store's split read
+    protocol (SplitIndex) over the flat postings of every live segment,
+    so Searcher routes its queries like a segment store's."""
 
     spark: SparkSession
     index_dir: str
+
+    # the whole doc range is split 0; flat postings always keep positions
+    n_splits = 1
+    keep_positions = True
 
     def __post_init__(self):
         man = _read(self.index_dir)
@@ -505,6 +535,7 @@ class StreamingIndexReader:
         if not segs:
             raise FileNotFoundError(f"no committed segments in {self.index_dir}")
         self.manifest = man
+        self._split_meta_cache = {}
         raw_post = self.spark.read.parquet(
             *[f"{self.index_dir}/postings/seg={s}" for s in segs]
         )
@@ -532,6 +563,7 @@ class StreamingIndexReader:
         else:
             self.postings = raw_post
             self.docs = raw_docs
+        self._raw_postings = raw_post
         self.terms_stats = raw_post.groupBy("term").agg(
             F.count(F.lit(1)).alias("df"), F.sum("tf").alias("ttf")
         )
@@ -544,13 +576,67 @@ class StreamingIndexReader:
             sum_total_term_freq=int(man["sum_total_term_freq"]),
         )
 
-    def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
+    # -- the split read protocol over flat postings ------------------------
+
+    def _split_meta_rows(self, terms: list[str]) -> pd.DataFrame:
+        """One split-0 row per indexed term of ``terms``, aggregated over
+        the raw, pre-tombstone postings (so df = Σ nd keeps counting
+        deleted docs until compaction): nd and sum_tf, and the block-max
+        impacts max_tf and min_nb, the norm byte of the shortest doc
+        (norm bytes encode the doc length monotonically)."""
         rows = (
-            self.terms_stats.where(F.col("term").isin(list(terms)))
-            .select("term", "df", "ttf")
-            .collect()
+            self._raw_postings.where(sql_in("term", terms, "string"))
+            .groupBy("term")
+            .agg(
+                F.max("tf").alias("max_tf"),
+                F.min_by("norm_byte", "dl").alias("min_nb"),
+                F.count(F.lit(1)).alias("nd"),
+                F.sum("tf").alias("sum_tf"),
+            )
+            .toPandas()
         )
-        return {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows}
+        rows["split"] = np.zeros(len(rows), dtype=np.int64)
+        return rows[SPLIT_META_COLUMNS]
+
+    def _live_postings(
+        self, terms: list[str], want_positions: bool
+    ) -> DataFrame:
+        return _decoded(
+            self.postings.where(sql_in("term", terms, "string")),
+            want_positions,
+        )
+
+    def _pull_postings(
+        self,
+        terms: list[str],
+        want_positions: bool,
+        splits: list[int] | None,
+    ) -> pd.DataFrame:
+        """A bounded fetch: the live flat scan in one Arrow toPandas (a
+        one-split index ignores ``splits``)."""
+        return self._live_postings(terms, want_positions).toPandas()
+
+    def _scan_postings(
+        self,
+        terms: list[str],
+        want_positions: bool,
+        splits: list[int] | None,
+    ) -> DataFrame:
+        """Any fetch: the live flat scan as a lazy Catalyst filter."""
+        return self._live_postings(terms, want_positions)
+
+    def postings_for_matched(
+        self, matched: DataFrame, want_positions: bool = False
+    ) -> DataFrame:
+        """Live postings of an UNBOUNDED matched-term frame (multi-term
+        expansions past the rewrite cap): a broadcast semi-join of the
+        term set against the flat postings, never collected."""
+        return _decoded(
+            self.postings.join(
+                F.broadcast(matched.select("term")), "term", "left_semi"
+            ),
+            want_positions,
+        )
 
     def get(self, keys: list, key_col: str = "doc_id") -> DataFrame:
         """RealTimeGetComponent analogue (S/handler/component/

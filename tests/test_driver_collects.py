@@ -18,6 +18,12 @@ PKG = Path(__file__).resolve().parents[1] / "lucene_solr_spark"
 ONE_ROW = "one global aggregate row"
 QUERY_TERMS = "one row per query term"
 DOC_LOOKUP = "point lookup of one doc_id"
+BOUNDED_FETCH = (
+    "at most wand.overhead_eq_postings() postings (2,860 at the shipped "
+    "constants), checked on split_meta by SplitIndex.decode_postings_local "
+    "before the fetch; a bounded sloppy phrase walks this same frame on "
+    "the driver, and a bounded routed query finishes its top-k on it"
+)
 
 # (path under the package, enclosing function) -> (sites, why bounded)
 BOUNDED: dict[tuple[str, str], tuple[int, str]] = {
@@ -48,14 +54,8 @@ BOUNDED: dict[tuple[str, str], tuple[int, str]] = {
     ("index/docids.py", "assign_doc_ids"): (1, "one row per range bucket"),
     ("index/fields.py", "build_fielded_index"): (1, "one row per field"),
     ("index/segments.py", "SegmentIndex.buckets_of"): (1, QUERY_TERMS),
-    ("index/segments.py", "SegmentIndex.decode_postings_local"): (
-        1,
-        "at most wand.overhead_eq_postings() postings (2,860 at the "
-        "shipped constants), checked on split_meta before the fetch; "
-        "a bounded sloppy phrase walks this same frame on the driver, "
-        "and a bounded routed query finishes its top-k on it",
-    ),
-    ("index/segments.py", "SegmentIndex.split_meta"):
+    ("index/segments.py", "SegmentIndex._pull_postings"): (1, BOUNDED_FETCH),
+    ("index/segments.py", "SegmentIndex._split_meta_rows"):
         (1, "block metadata of the query terms, memoized per term"),
     ("index/segments.py", "build_segment_store"): (2, ONE_ROW),
     ("index/sorted_store.py", "build_sorted_store"):
@@ -103,8 +103,10 @@ BOUNDED: dict[tuple[str, str], tuple[int, str]] = {
         (1, ONE_ROW),
     ("streaming/incremental.py", "IncrementalIndexWriter.process_batch"):
         (1, ONE_ROW),
-    ("streaming/incremental.py", "StreamingIndexReader.term_stats"):
-        (1, QUERY_TERMS),
+    ("streaming/incremental.py", "StreamingIndexReader._pull_postings"):
+        (1, BOUNDED_FETCH),
+    ("streaming/incremental.py", "StreamingIndexReader._split_meta_rows"):
+        (1, f"split_meta of a one-split index: {QUERY_TERMS}"),
 }
 
 # Sites known to be unbounded, each an open robustness item in

@@ -5,7 +5,8 @@ Every py4j command is a round trip over the Python/JVM bridge, and on a
 small store they, not Spark work, were most of a query's wall time. A
 warm query (its term metadata memoized by a first run) must stay within
 MAX_PY4J_COMMANDS commands per family. Its fetch is within the
-driver-decode bound, so it runs exactly one Spark job, the block scan:
+driver-decode bound, so it runs exactly one Spark job — the block scan
+of a segment store, the flat scan of a near-real-time reader:
 it finishes on the driver, leaves no Python node in its plan and never
 builds a one-partition local frame (segments.local_frame) — in both
 precision modes."""
@@ -73,8 +74,20 @@ def _cost(spark, monkeypatch, run, group: str) -> tuple[int, int, list]:
     return commands, jobs, rows
 
 
-@pytest.mark.parametrize("family", sorted(QUERIES))
-def test_warm_routed_query_budget(spark, store, monkeypatch, family):
+@pytest.fixture(scope="module")
+def reader(spark, small_pdf, tmp_path_factory):
+    """A warm near-real-time reader, as ingest-mixed serves it: two
+    micro-batches, compacted."""
+    from tests.test_reader_route import build_reader
+
+    w = build_reader(
+        spark, small_pdf, str(tmp_path_factory.mktemp("budget_nrt"))
+    )
+    assert w.compact()
+    return w.reader()
+
+
+def _check_budget(spark, monkeypatch, index, family: str) -> None:
     from lucene_solr_spark.index import segments
     from lucene_solr_spark.search import wand as W
 
@@ -91,12 +104,12 @@ def test_warm_routed_query_budget(spark, store, monkeypatch, family):
             lambda *a, _inner=inner, **kw: routed.append(1) or _inner(*a, **kw),
         )
     for exact in (False, True):
-        searcher = Searcher(store, exact_float32=exact)
+        searcher = Searcher(index, exact_float32=exact)
         warm = searcher.search(q, 10).collect()  # memoizes term metadata
         assert routed, f"{family} query was not routed"
         commands, jobs, rows = _cost(
             spark, monkeypatch, lambda: searcher.search(q, 10).collect(),
-            f"budget-{family}-{exact}",
+            f"budget-{type(index).__name__}-{family}-{exact}",
         )
         assert rows == warm and rows, family
         assert jobs == JOBS, f"{family}, exact={exact}: {jobs} Spark jobs"
@@ -105,3 +118,15 @@ def test_warm_routed_query_budget(spark, store, monkeypatch, family):
         )
         plan = _plan(searcher.search(q, 10))
         assert not any(p in plan for p in PYTHON_NODES), plan
+
+
+@pytest.mark.parametrize("family", sorted(QUERIES))
+def test_warm_routed_query_budget(spark, store, monkeypatch, family):
+    _check_budget(spark, monkeypatch, store, family)
+
+
+@pytest.mark.parametrize("family", sorted(QUERIES))
+def test_warm_reader_query_budget(spark, reader, monkeypatch, family):
+    """The near-real-time reader routes as a one-split index: its warm
+    query is one Spark job too, the flat scan."""
+    _check_budget(spark, monkeypatch, reader, family)

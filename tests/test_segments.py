@@ -420,9 +420,10 @@ def test_terms_stats_side_parts_equal_postings_metadata(
     spark, tiny_pdf, tmp_path
 ):
     """A fresh full build derives terms_stats from the reduce tasks' side
-    parts (_term_stats_parts), never re-reading the postings store; the
-    result must equal the (term, bucket) -> (df, ttf) aggregation over
-    the block metadata (the fallback/read-back definition)."""
+    parts (_term_stats_parts), never re-reading the postings store, and
+    records that path in the manifest; the result must equal the
+    (term, bucket) -> (df, ttf) aggregation over the block metadata (the
+    fallback/read-back definition)."""
     import os
 
     import pyspark.sql.functions as F
@@ -436,7 +437,9 @@ def test_terms_stats_side_parts_equal_postings_metadata(
     seg = build_segment_store(
         spark, sdf, d, n_buckets=8, order_cols=["conv_id", "turn_idx"]
     )
-    assert os.path.isdir(os.path.join(d, "_term_stats_parts"))
+    assert seg.manifest["terms_stats_from"] == "side_parts"
+    # the parts are dead bytes once terms_stats is written
+    assert not os.path.exists(os.path.join(d, "_term_stats_parts"))
     got = {
         (r["term"], r["bucket"]): (int(r["df"]), int(r["ttf"]))
         for r in seg.terms_stats.collect()
