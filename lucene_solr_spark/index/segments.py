@@ -40,6 +40,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -1092,6 +1094,100 @@ def _decode_partitions(want_positions: bool):
     return decode
 
 
+class DriverParquet:
+    """Driver-side reads of the parquet files under ``root``, for a
+    bounded postings fetch that should start no Spark job (Lucene's
+    TermWeight.scorer seeks the term and reads its postings, with no
+    scheduler between).
+
+    An index view (a store generation, a near-real-time reader) is
+    immutable, so each subdirectory's file listing and footers are read
+    on its first fetch and kept for the view's life: a warm query opens
+    no footer. The footers' ``term`` statistics prune row groups as the
+    scan's pushed term filter does, and their column-chunk sizes price a
+    read before it is made."""
+
+    def __init__(self, root: str):
+        self.root = root
+        self._footers: "dict[str, list[tuple[str, pq.FileMetaData]]]" = {}
+
+    def footers(self, sub: str) -> "list[tuple[str, pq.FileMetaData]]":
+        """(path, footer) of each data file in ``root/sub``, in name
+        order; none when the directory does not exist. Hidden files
+        (``_SUCCESS``, ``.crc``) are skipped as Spark's reader skips
+        them."""
+        got = self._footers.get(sub)
+        if got is None:
+            d = os.path.join(self.root, sub)
+            names = sorted(os.listdir(d)) if os.path.isdir(d) else []
+            got = [
+                (path, pq.read_metadata(path))
+                for path in (
+                    os.path.join(d, n)
+                    for n in names
+                    if not n.startswith(("_", "."))
+                )
+            ]
+            self._footers[sub] = got
+        return got
+
+    def row_groups(
+        self, subs: list[str], terms: list[str], columns: list[str]
+    ) -> "tuple[list[tuple[str, pq.FileMetaData, list[int]]], int]":
+        """The row groups under ``subs`` whose ``term`` min/max admit
+        one of ``terms`` (all of them when a footer has no statistics),
+        as [(path, footer, row group ids)], and the compressed bytes of
+        ``columns`` in them: what ``read`` would touch."""
+        picked, nbytes = [], 0
+        for sub in subs:
+            for path, meta in self.footers(sub):
+                rgs = []
+                for i in range(meta.num_row_groups):
+                    rg = meta.row_group(i)
+                    chunks = [rg.column(j) for j in range(rg.num_columns)]
+                    top = [c.path_in_schema.split(".")[0] for c in chunks]
+                    st = chunks[top.index("term")].statistics
+                    if st is not None and st.has_min_max and not any(
+                        st.min <= t <= st.max for t in terms
+                    ):
+                        continue
+                    rgs.append(i)
+                    nbytes += sum(
+                        c.total_compressed_size
+                        for c, name in zip(chunks, top)
+                        if name in columns
+                    )
+                if rgs:
+                    picked.append((path, meta, rgs))
+        return picked, nbytes
+
+    def read(
+        self,
+        subs: list[str],
+        terms: list[str],
+        columns: list[str],
+        max_bytes: float,
+    ) -> "pa.Table | None":
+        """``columns`` (``term`` among them) of the rows of ``terms``
+        under ``subs``, read from the row groups that row_groups picks,
+        or None when those hold more than ``max_bytes`` compressed
+        bytes of ``columns``."""
+        picked, nbytes = self.row_groups(subs, terms, columns)
+        if nbytes > max_bytes:
+            return None
+        if not picked:
+            return pa.table({c: [] for c in columns})
+        table = pa.concat_tables(
+            pq.ParquetFile(path, metadata=meta).read_row_groups(
+                rgs, columns=columns
+            )
+            for path, meta, rgs in picked
+        )
+        return table.filter(
+            pc.is_in(table["term"], value_set=pa.array(terms, pa.string()))
+        )
+
+
 SPLIT_META_COLUMNS = ["term", "split", "max_tf", "min_nb", "nd", "sum_tf"]
 
 
@@ -1105,13 +1201,17 @@ class SplitIndex:
     postings. Searcher routes every SplitIndex.
 
     Shared here: the per-term memo of split_meta, the term statistics
-    summed from it, and where a postings fetch decodes. A subclass sets
+    summed from it, and where a postings fetch decodes: a bounded fetch
+    is read from the index's parquet files on the driver and starts no
+    Spark job, any other stays a lazy Spark plan. A subclass sets
     ``_split_meta_cache = {}`` and supplies ``n_splits``,
     ``keep_positions`` and three fetches:
       - ``_split_meta_rows(terms)``: the split_meta rows of ``terms``
         (pandas), called for terms not memoized yet;
       - ``_pull_postings(terms, want_positions, splits)``: a fetch known
-        to be bounded, as a DECODED_SCHEMA pandas frame;
+        to be within the posting bound, read on the driver with pyarrow
+        (DriverParquet) as a DECODED_SCHEMA pandas frame, or None when
+        the bytes it would read exceed ``wand.overhead_eq_bytes()``;
       - ``_scan_postings(terms, want_positions, splits)``: any fetch, as a
         lazy DECODED_SCHEMA DataFrame."""
 
@@ -1255,10 +1355,12 @@ class SplitIndex:
         The fetch size is Σ nd over the memoized split_meta rows of its
         terms and splits. At or under ``wand.overhead_eq_postings()``
         postings (the decode work one extra Spark job's fixed overhead
-        buys), it is pulled through one Arrow ``toPandas``
-        (_pull_postings). Driver memory is bounded by that cap. The same
-        bound lets bounded sloppy phrases and routed queries finish on
-        the driver. A fetch with no postings scans nothing."""
+        buys), it is read from parquet on the driver (_pull_postings),
+        starting no Spark job, unless the compressed row groups it would
+        touch exceed ``wand.overhead_eq_bytes()`` (what the driver reads
+        in one job's overhead). Driver memory is bounded by both caps.
+        The same bound lets bounded sloppy phrases and routed queries
+        finish on the driver. A fetch with no postings reads nothing."""
         from ..search.wand import overhead_eq_postings  # wand imports us
 
         meta = self.split_meta(list(terms))
@@ -1279,7 +1381,9 @@ class SegmentIndex(SplitIndex):
     InvertedIndex (Searcher works unchanged): ``postings`` decodes blocks
     lazily behind a term-pruned scan. Its splits are the doc ranges
     ``first_doc // split_range``, and split_meta has one row per
-    block."""
+    block. A view is one immutable store generation, so the file
+    listings and footers of its bucket directories are read once
+    (DriverParquet)."""
 
     def __init__(
         self,
@@ -1299,8 +1403,9 @@ class SegmentIndex(SplitIndex):
         )
         self.n_buckets = manifest["n_buckets"]
         self.split_range = int(manifest.get("split_range", SPLIT_RANGE))
-        self._bucket_cache: dict[tuple, list[int]] = {}
+        self._bucket_cache: dict[str, int] = {}
         self._split_meta_cache: "dict[str, pd.DataFrame]" = {}
+        self._parquet = DriverParquet(f"{index_dir}/postings")
 
     @property
     def n_splits(self) -> int:
@@ -1396,15 +1501,27 @@ class SegmentIndex(SplitIndex):
         terms: list[str],
         want_positions: bool,
         splits: list[int] | None,
-    ) -> "pd.DataFrame":
-        """A bounded fetch: ``block_scan(terms, splits)`` pulled through
-        Arrow ``toPandas`` — JVM only, just the columns decode needs —
-        and decoded here with the kernel the distributed path runs."""
+    ) -> "pd.DataFrame | None":
+        """A bounded fetch read on the driver: the row groups of the
+        query terms' ``postings/bucket=<b>/`` directories that their
+        ``term`` statistics admit, just the columns decode needs, then
+        the rows of ``terms`` (and ``splits``) decoded with the kernel
+        the distributed path runs. None when those row groups exceed
+        ``wand.overhead_eq_bytes()`` compressed bytes."""
+        from ..search.wand import overhead_eq_bytes  # wand imports us
+
         cols = ["term", "first_doc", "num_docs", "docs_bin", "tfs_bin",
                 "norms_bin"] + (["pos_bin"] if want_positions else [])
-        (decoded,) = _decode_partitions(want_positions)(
-            [self.block_scan(terms, splits).select(*cols).toPandas()]
+        table = self._parquet.read(
+            [f"bucket={b}" for b in self.buckets_of(terms)], terms, cols,
+            overhead_eq_bytes(),
         )
+        if table is None:
+            return None
+        if splits is not None:
+            split = table["first_doc"].to_numpy() // self.split_range
+            table = table.filter(pa.array(np.isin(split, list(splits))))
+        (decoded,) = _decode_partitions(want_positions)([table.to_pandas()])
         return decoded
 
     def _scan_postings(
@@ -1441,20 +1558,22 @@ class SegmentIndex(SplitIndex):
         )
 
     def buckets_of(self, terms: list[str]) -> list[int]:
-        """Bucket ids for terms — one tiny local job (must match
-        _bucket_col: Spark xxhash64, default seed 42)."""
-        uniq = sorted(set(terms))
-        key = tuple(uniq)
-        cached = self._bucket_cache.get(key)
-        if cached is not None:
-            return cached
-        rows = (
-            self.spark.createDataFrame(
-                [(t,) for t in uniq], "term string"
+        """Sorted bucket ids of ``terms``, memoized per term: terms not
+        seen yet cost one tiny local job (it must match _bucket_col:
+        Spark xxhash64, default seed 42), so a query whose terms are all
+        warm starts none, whatever their combination."""
+        cache = self._bucket_cache
+        missing = sorted({t for t in terms if t not in cache})
+        if missing:
+            rows = (
+                self.spark.createDataFrame(
+                    [(t,) for t in missing], "term string"
+                )
+                .select(
+                    "term",
+                    _bucket_col(F.col("term"), self.n_buckets).alias("b"),
+                )
+                .collect()
             )
-            .select(_bucket_col(F.col("term"), self.n_buckets).alias("b"))
-            .collect()
-        )
-        out = sorted({int(r["b"]) for r in rows})
-        self._bucket_cache[key] = out
-        return out
+            cache.update((r["term"], int(r["b"])) for r in rows)
+        return sorted({cache[t] for t in terms})

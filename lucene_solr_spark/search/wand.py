@@ -37,12 +37,14 @@ a shuffle engine):
   so a warm query starts no job for it. Each scoring step is one fetch
   of the chosen splits' postings:
     - within the driver-decode bound (decode_postings_local), the fetch
-      is one scan job (the block scan of a segment store, the flat scan
-      of the reader), and the driver finishes the query in numpy
-      (_split_topk): score with the Searcher's BM25 kernel, sum per doc
-      in a fixed term order (or count phrase occurrences), take top-k
-      by (score desc, doc_id asc) and return the k hits as a local table
-      whose collect() starts no further job;
+      is a pyarrow read of the query terms' parquet row groups on the
+      driver (the bucket directories of a segment store, the live
+      segments of the reader), which starts no Spark job, and the driver
+      finishes the query in numpy (_split_topk): score with the
+      Searcher's BM25 kernel, sum per doc in a fixed term order (or
+      count phrase occurrences), take top-k by (score desc, doc_id asc)
+      and return the k hits as a local table whose collect() starts no
+      job either, so a warm bounded query runs no Spark job at all;
     - above it, the Catalyst plan: the lazy fetch (mapInPandas decode of
       a segment store's blocks, a filter of the reader's flat
       postings), score, per-doc aggregate and TakeOrderedAndProject.
@@ -90,10 +92,16 @@ from .sloppy import clause_rows, sloppy_freqs
 # the measured break-even point.
 # The same break-even also picks WHERE a postings fetch decodes
 # (SplitIndex.decode_postings_local): a fetch of at most
-# overhead_eq_postings() postings is decoded eagerly on the driver from
-# an Arrow toPandas of its pruned block scan, because the JVM->Python
-# task boundary of a mapInPandas stage costs about one such job
-# overhead while the decode itself is small. A routed query finishes
+# overhead_eq_postings() postings is read from parquet and decoded
+# eagerly on the driver, because the JVM->Python task boundary of a
+# mapInPandas stage costs about one such job overhead while the decode
+# itself is small; the read starts no job, so the fetch also saves the
+# scan job's own overhead. The read has a byte bound too,
+# overhead_eq_bytes(): the compressed row groups it would touch (priced
+# from the cached parquet footers before reading) must not take longer
+# to read than one job's overhead at _DRIVER_READ_BYTES_PER_SEC, so a
+# term set whose row groups are large (row-group statistics that admit
+# many terms) keeps the scan instead. A routed query finishes
 # such a fetch on the driver too (_split_topk: numpy score, per-doc sum
 # or phrase count, sloppy walk, top-k), so it starts no Python worker
 # and no job after the scan. Larger fetches keep the distributed
@@ -113,11 +121,23 @@ _DECODE_POSTINGS_PER_SEC = float(
     os.environ.get("LSS_WAND_DECODE_RATE", "13000")
 )
 _THETA_FRACTION = float(os.environ.get("LSS_WAND_THETA_FRACTION", "0.56"))
+# Compressed parquet bytes per second one driver thread reads with
+# pyarrow (DriverParquet.read over a segment store's block columns,
+# footers cached): 24.4 MB/s measured 2026-10-19 by
+# tools/calibrate_wand.py on 4 vCPUs over the sf0.1 gate store
+# (BENCH.md), so the byte bound is 0.22 s x 24e6 = 5.3 MB.
+_DRIVER_READ_BYTES_PER_SEC = 24e6
 
 
 def overhead_eq_postings() -> float:
     """Fixed cost of the extra sequential job, in postings-equivalents."""
     return _JOB_OVERHEAD_SEC * _DECODE_POSTINGS_PER_SEC
+
+
+def overhead_eq_bytes() -> float:
+    """Compressed bytes the driver reads in one extra job's fixed
+    overhead: the byte bound of a driver-side postings read."""
+    return _JOB_OVERHEAD_SEC * _DRIVER_READ_BYTES_PER_SEC
 
 
 def predicted_saving_postings(cands: list[tuple[float, int]]) -> int:

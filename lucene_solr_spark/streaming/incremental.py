@@ -25,12 +25,13 @@ un-compacted deltas. It is a one-split index that speaks the segment
 store's split read protocol (index/segments.py SplitIndex) over the
 flat postings: per-term split metadata memoized on the driver (one
 aggregate job per cold term set, from the raw pre-tombstone postings),
-term statistics summed from it, and postings fetches that are pulled
-to the driver when bounded and stay a lazy Catalyst filter otherwise,
-with tombstones anti-joined either way. So ``Searcher`` routes its
-queries through the split walk (search/wand.py): a warm bounded query
-is one Spark job, the flat scan, finished on the driver. The on-disk
-layout is still flat postings per delta.
+term statistics summed from it, and postings fetches that are read
+from parquet on the driver when bounded and stay a lazy Catalyst filter
+otherwise, with tombstones, read once per reader, dropped either way.
+So ``Searcher`` routes its queries through the split walk
+(search/wand.py): a warm bounded query runs no Spark job; it is read
+and finished on the driver. The on-disk layout is still flat postings
+per delta.
 """
 
 from __future__ import annotations
@@ -41,6 +42,9 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,7 +55,12 @@ from ..index.builder import (
     _invert_partitions,
 )
 from ..index.docids import assign_doc_ids
-from ..index.segments import SPLIT_META_COLUMNS, SplitIndex
+from ..index.segments import (
+    SPLIT_META_COLUMNS,
+    DriverParquet,
+    SplitIndex,
+    _empty_decoded,
+)
 
 MANIFEST = "streaming_manifest.json"
 
@@ -536,24 +545,36 @@ class StreamingIndexReader(SplitIndex):
             raise FileNotFoundError(f"no committed segments in {self.index_dir}")
         self.manifest = man
         self._split_meta_cache = {}
+        self._segs = [f"seg={s}" for s in segs]
+        self._parquet = DriverParquet(f"{self.index_dir}/postings")
         raw_post = self.spark.read.parquet(
             *[f"{self.index_dir}/postings/seg={s}" for s in segs]
         )
         raw_docs = self.spark.read.parquet(
             *[f"{self.index_dir}/docs/seg={s}" for s in segs]
         )
-        # liveDocs (.del BitVector analogue): every match stream is
-        # anti-joined against tombstones, so deletes are visible
-        # IMMEDIATELY; term/collection stats keep counting deleted docs
-        # until compaction, exactly the reference pre-merge semantics
-        # (TermsEnum.docFreq "does not take deleted docs into account").
-        if man["deletes"]:
-            tomb = self.spark.read.parquet(
-                *[
-                    f"{self.index_dir}/deletes/del={d}"
-                    for d in man["deletes"]
-                ]
-            ).select("doc_id").distinct()
+        # liveDocs (.del BitVector analogue): every match stream drops
+        # tombstoned docs, so deletes are visible IMMEDIATELY; term/
+        # collection stats keep counting deleted docs until compaction,
+        # exactly the reference pre-merge semantics (TermsEnum.docFreq
+        # "does not take deleted docs into account"). The tombstone set
+        # is fixed for the reader's life: its ids are read once, here,
+        # and the lazy plans anti-join them as a local table.
+        deletes = [
+            pq.read_table(
+                f"{self.index_dir}/deletes/del={d}", columns=["doc_id"]
+            )
+            for d in man["deletes"]
+        ]
+        self._tombstones = (
+            pc.unique(pa.concat_tables(deletes)["doc_id"])
+            if deletes
+            else pa.array([], pa.int64())
+        )
+        if len(self._tombstones):
+            tomb = self.spark.createDataFrame(
+                pa.table({"doc_id": self._tombstones})
+            )
             self.postings = raw_post.join(
                 F.broadcast(tomb), "doc_id", "left_anti"
             )
@@ -598,23 +619,36 @@ class StreamingIndexReader(SplitIndex):
         rows["split"] = np.zeros(len(rows), dtype=np.int64)
         return rows[SPLIT_META_COLUMNS]
 
-    def _live_postings(
-        self, terms: list[str], want_positions: bool
-    ) -> DataFrame:
-        return _decoded(
-            self.postings.where(sql_in("term", terms, "string")),
-            want_positions,
-        )
-
     def _pull_postings(
         self,
         terms: list[str],
         want_positions: bool,
         splits: list[int] | None,
-    ) -> pd.DataFrame:
-        """A bounded fetch: the live flat scan in one Arrow toPandas (a
-        one-split index ignores ``splits``)."""
-        return self._live_postings(terms, want_positions).toPandas()
+    ) -> pd.DataFrame | None:
+        """A bounded fetch read on the driver: the live segments' flat
+        postings rows of ``terms`` (from the row groups their ``term``
+        statistics admit) minus tombstoned docs, or None when those row
+        groups exceed ``wand.overhead_eq_bytes()`` compressed bytes. A
+        one-split index ignores ``splits``."""
+        from ..search.wand import overhead_eq_bytes  # wand imports us
+
+        cols = ["term", "doc_id", "tf", "norm_byte"] + (
+            ["positions"] if want_positions else []
+        )
+        table = self._parquet.read(
+            self._segs, terms, cols, overhead_eq_bytes()
+        )
+        if table is None:
+            return None
+        if not table.num_rows:
+            return _empty_decoded()
+        table = table.filter(
+            pc.invert(pc.is_in(table["doc_id"], value_set=self._tombstones))
+        )
+        out = table.to_pandas()
+        if not want_positions:
+            out["positions"] = pd.Series([None] * len(out), dtype="object")
+        return out[["term", "doc_id", "tf", "positions", "norm_byte"]]
 
     def _scan_postings(
         self,
@@ -623,7 +657,10 @@ class StreamingIndexReader(SplitIndex):
         splits: list[int] | None,
     ) -> DataFrame:
         """Any fetch: the live flat scan as a lazy Catalyst filter."""
-        return self._live_postings(terms, want_positions)
+        return _decoded(
+            self.postings.where(sql_in("term", terms, "string")),
+            want_positions,
+        )
 
     def postings_for_matched(
         self, matched: DataFrame, want_positions: bool = False

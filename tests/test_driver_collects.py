@@ -1,7 +1,9 @@
 """Driver memory stays bounded: every ``.collect()`` / ``.toPandas()``
-in the package sits at a site whose result size is bounded by something
-other than the corpus (one aggregate row, a ``limit``, the query's own
-terms, a per-bucket / per-split / per-partition count, ...).
+and every pyarrow read of table rows on the driver (``to_table``,
+``read_table``, ``read_row_group(s)``) in the package sits at a site
+whose result size is bounded by something other than the corpus (one
+aggregate row, a ``limit``, the query's own terms, a per-bucket /
+per-split / per-partition count, ...).
 
 A new site fails this test until it is added to BOUNDED with the bound
 that makes it safe. Entries are exact counts per enclosing function, so
@@ -21,8 +23,11 @@ DOC_LOOKUP = "point lookup of one doc_id"
 BOUNDED_FETCH = (
     "at most wand.overhead_eq_postings() postings (2,860 at the shipped "
     "constants), checked on split_meta by SplitIndex.decode_postings_local "
-    "before the fetch; a bounded sloppy phrase walks this same frame on "
-    "the driver, and a bounded routed query finishes its top-k on it"
+    "before the fetch, read from row groups of at most max_bytes "
+    "compressed bytes (wand.overhead_eq_bytes() from both _pull_postings), "
+    "checked on the cached footers before the read; a bounded sloppy "
+    "phrase walks this same frame on the driver, and a bounded routed "
+    "query finishes its top-k on it"
 )
 
 # (path under the package, enclosing function) -> (sites, why bounded)
@@ -54,7 +59,7 @@ BOUNDED: dict[tuple[str, str], tuple[int, str]] = {
     ("index/docids.py", "assign_doc_ids"): (1, "one row per range bucket"),
     ("index/fields.py", "build_fielded_index"): (1, "one row per field"),
     ("index/segments.py", "SegmentIndex.buckets_of"): (1, QUERY_TERMS),
-    ("index/segments.py", "SegmentIndex._pull_postings"): (1, BOUNDED_FETCH),
+    ("index/segments.py", "DriverParquet.read"): (1, BOUNDED_FETCH),
     ("index/segments.py", "SegmentIndex._split_meta_rows"):
         (1, "block metadata of the query terms, memoized per term"),
     ("index/segments.py", "build_segment_store"): (2, ONE_ROW),
@@ -103,8 +108,9 @@ BOUNDED: dict[tuple[str, str], tuple[int, str]] = {
         (1, ONE_ROW),
     ("streaming/incremental.py", "IncrementalIndexWriter.process_batch"):
         (1, ONE_ROW),
-    ("streaming/incremental.py", "StreamingIndexReader._pull_postings"):
-        (1, BOUNDED_FETCH),
+    ("streaming/incremental.py", "StreamingIndexReader.__post_init__"):
+        (1, "tombstone ids pending compaction: one int64 per deleted doc, "
+            "read once per reader"),
     ("streaming/incremental.py", "StreamingIndexReader._split_meta_rows"):
         (1, f"split_meta of a one-split index: {QUERY_TERMS}"),
 }
@@ -115,6 +121,10 @@ KNOWN_UNBOUNDED: dict[tuple[str, str], tuple[int, str]] = {
     ("functions/bpe.py", "train_bpe"):
         (1, "the whole distinct-word vocabulary"),
 }
+
+
+DRIVER_READS = ("collect", "toPandas", "to_table", "read_table",
+                "read_row_group", "read_row_groups")
 
 
 def _driver_pulls() -> Counter:
@@ -131,7 +141,7 @@ def _driver_pulls() -> Counter:
                 if (
                     isinstance(child, ast.Call)
                     and isinstance(child.func, ast.Attribute)
-                    and child.func.attr in ("collect", "toPandas")
+                    and child.func.attr in DRIVER_READS
                 ):
                     found[(rel, scope)] += 1
                 walk(child, inner)
@@ -145,7 +155,7 @@ def test_every_driver_pull_is_at_a_bounded_site():
     found = _driver_pulls()
     new = {k: n for k, n in found.items() if n > allowed.get(k, 0)}
     assert not new, (
-        f"collect()/toPandas() at sites with no proven bound: {new} — "
+        f"driver reads at sites with no proven bound: {new} — "
         "bound the result, or add the site to BOUNDED with its bound"
     )
     stale = {k: n for k, n in allowed.items() if found.get(k, 0) != n}

@@ -38,18 +38,22 @@ def test_block_scan_is_bucket_and_term_pruned(seg, monkeypatch):
     # term equality/IN reaches the parquet row-group stats
     pf = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert pf and "term" in pf[0], plan
-    # and a postings fetch reads exactly that scan, whichever side of
-    # the driver-decode bound it falls on
-    calls = []
-    scan = type(seg).block_scan
+    # and the bounded pull on the driver prunes the same way: it opens
+    # only the query term's bucket directory
+    from lucene_solr_spark.index.segments import DriverParquet, SegmentIndex
 
-    def spy(self, terms, splits=None):
-        calls.append((list(terms), splits))
-        return scan(self, terms, splits)
+    opened = []
+    footers = DriverParquet.footers
 
-    monkeypatch.setattr(type(seg), "block_scan", spy)
-    assert seg.postings_for_terms(["error"]).count() > 0
-    assert calls == [(["error"], None)]
+    def spy(self, sub):
+        opened.append(sub)
+        return footers(self, sub)
+
+    monkeypatch.setattr(DriverParquet, "footers", spy)
+    fresh = SegmentIndex.open(seg.spark, seg.index_dir)
+    assert fresh.postings_for_terms_local(["error"]) is not None
+    assert len(fresh.buckets_of(["error"])) == 1
+    assert opened == [f"bucket={b}" for b in fresh.buckets_of(["error"])]
 
 
 def test_doc_store_predicate_pushdown(spark):

@@ -5,23 +5,26 @@ Every py4j command is a round trip over the Python/JVM bridge, and on a
 small store they, not Spark work, were most of a query's wall time. A
 warm query (its term metadata memoized by a first run) must stay within
 MAX_PY4J_COMMANDS commands per family. Its fetch is within the
-driver-decode bound, so it runs exactly one Spark job — the block scan
-of a segment store, the flat scan of a near-real-time reader:
-it finishes on the driver, leaves no Python node in its plan and never
-builds a one-partition local frame (segments.local_frame) — in both
-precision modes."""
+driver-decode bound, so it runs no Spark job: the postings of a segment
+store's bucket directories, or of a near-real-time reader's live
+segments, are read from parquet on the driver, and the query finishes
+there, leaves no Python node in its plan and never builds a
+one-partition local frame (segments.local_frame) — in both precision
+modes."""
 
 from __future__ import annotations
 
+import shutil
 import threading
 
+import pandas as pd
 import pytest
 
 from lucene_solr_spark.search.executor import Searcher
 from lucene_solr_spark.search.query import And, Or, PhraseQuery, TermQuery
 from tests.test_driver_decode import PYTHON_NODES, _plan
 
-JOBS = 1
+JOBS = 0
 MAX_PY4J_COMMANDS = 1000
 
 QUERIES = {
@@ -87,6 +90,21 @@ def reader(spark, small_pdf, tmp_path_factory):
     return w.reader()
 
 
+@pytest.fixture(scope="module")
+def tombstone_reader(spark, small_pdf, reader, tmp_path_factory):
+    """The same reader with a pending delete."""
+    from lucene_solr_spark.streaming.incremental import (
+        IncrementalIndexWriter,
+    )
+
+    d = str(tmp_path_factory.mktemp("budget_nrt_tomb") / "index")
+    shutil.copytree(reader.index_dir, d)
+    w = IncrementalIndexWriter(spark, d)
+    keys = pd.DataFrame({"conv_id": small_pdf["conv_id"].iloc[:1]})
+    assert w.delete_by_keys(spark.createDataFrame(keys), "conv_id")
+    return w.reader()
+
+
 def _check_budget(spark, monkeypatch, index, family: str) -> None:
     from lucene_solr_spark.index import segments
     from lucene_solr_spark.search import wand as W
@@ -128,5 +146,32 @@ def test_warm_routed_query_budget(spark, store, monkeypatch, family):
 @pytest.mark.parametrize("family", sorted(QUERIES))
 def test_warm_reader_query_budget(spark, reader, monkeypatch, family):
     """The near-real-time reader routes as a one-split index: its warm
-    query is one Spark job too, the flat scan."""
+    query starts no Spark job either."""
     _check_budget(spark, monkeypatch, reader, family)
+
+
+@pytest.mark.parametrize("family", sorted(QUERIES))
+def test_warm_tombstone_reader_query_budget(
+    spark, tombstone_reader, monkeypatch, family
+):
+    """Pending tombstones add no job: their ids are read once per
+    reader, and a bounded fetch drops them on the driver."""
+    _check_budget(spark, monkeypatch, tombstone_reader, family)
+
+
+def test_new_combination_of_warm_terms_runs_no_job(spark, store, monkeypatch):
+    """Term metadata and bucket ids are memoized per term, so a query
+    whose terms are all warm starts no job even in a combination no
+    earlier query had."""
+    from lucene_solr_spark.index.segments import SegmentIndex
+
+    seg = SegmentIndex.open(spark, store.index_dir).attach_blooms()
+    searcher = Searcher(seg)
+    for q in (TermQuery("timeout"), PhraseQuery(["spill", "fill3"])):
+        assert searcher.search(q, 10).collect()
+    q = Or("fill3", "timeout")
+    _, jobs, rows = _cost(
+        spark, monkeypatch, lambda: searcher.search(q, 10).collect(),
+        "budget-new-combination",
+    )
+    assert rows and jobs == 0

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Measure the three constants of the WAND engagement cost model
+"""Measure the constants of the WAND cost model
 (lucene_solr_spark/search/wand.py):
 
   1. _JOB_OVERHEAD_SEC — latency of one extra sequential Spark job on
@@ -14,10 +14,16 @@
      realized seed threshold θ (k-th score of the best-bounded split)
      to that split's metadata bound; the model should use a LOW
      quantile so predicted savings under-estimate.
+  4. _DRIVER_READ_BYTES_PER_SEC — compressed parquet bytes per second
+     the driver reads with pyarrow (DriverParquet.read of the block
+     columns of the mid/high-df terms' bucket directories, footers
+     already cached, as on a warm query). With _JOB_OVERHEAD_SEC it
+     prices the byte bound of a driver-side postings read
+     (overhead_eq_bytes).
 
 Usage: python tools/calibrate_wand.py [sf_dir] [k]
-Numbers recorded in BENCH.md; override at deploy time via
-LSS_WAND_JOB_OVERHEAD_SEC / LSS_WAND_DECODE_RATE /
+Numbers recorded in BENCH.md; override the first three at deploy time
+via LSS_WAND_JOB_OVERHEAD_SEC / LSS_WAND_DECODE_RATE /
 LSS_WAND_THETA_FRACTION.
 """
 
@@ -127,14 +133,33 @@ def main() -> None:
     if ratios:
         lo = min(ratios)
         print(f"theta_fraction  min={lo:.3f} median={statistics.median(ratios):.3f}")
+
+    # -- 4. driver parquet read rate -------------------------------------
+    cols = ["term", "first_doc", "num_docs", "docs_bin", "tfs_bin",
+            "norms_bin", "pos_bin"]
+    subs = [f"bucket={b}" for b in index.buckets_of(terms)]
+    _, nbytes = index._parquet.row_groups(subs, terms, cols)  # footers
+    reads = []
+    for _ in range(7):
+        t0 = time.perf_counter()
+        index._parquet.read(subs, terms, cols, float("inf"))
+        reads.append(time.perf_counter() - t0)
+    read_rate = nbytes / statistics.median(reads)
+    print(
+        f"driver_read bytes={nbytes:,} median={statistics.median(reads):.4f}s "
+        f"rate={read_rate / 1e6:.1f} MB/s"
+    )
     print(
         "\nsuggested constants:\n"
-        f"  _JOB_OVERHEAD_SEC        = {job_overhead:.2f}\n"
-        f"  _DECODE_POSTINGS_PER_SEC = {decode_rate:,.0f}\n"
-        f"  _THETA_FRACTION          = {min(ratios) * 0.8:.2f}"
-        "  # 0.8 x observed min: conservative"
-        if ratios
-        else ""
+        f"  _JOB_OVERHEAD_SEC          = {job_overhead:.2f}\n"
+        f"  _DECODE_POSTINGS_PER_SEC   = {decode_rate:,.0f}\n"
+        f"  _DRIVER_READ_BYTES_PER_SEC = {read_rate:.3g}\n"
+        + (
+            f"  _THETA_FRACTION            = {min(ratios) * 0.8:.2f}"
+            "  # 0.8 x observed min: conservative"
+            if ratios
+            else ""
+        )
     )
 
 
