@@ -11,13 +11,19 @@ both skipping (min/max pruning pushed into Parquet row groups) and
 block-max WAND upper bounds (Ding & Suel, SIGIR'11) — the block-max
 structure Lucene grew later; the reference only has skip lists.
 
-All encode/decode paths are numpy-vectorized (no per-value Python in the
-hot loop beyond the byte-spread, which is O(total_bytes) numpy ops).
+Encode and single-block decode are numpy-vectorized per block: no
+per-value Python beyond the byte-spread, which is O(total_bytes) numpy
+ops, but one call per block. A query fetch decodes all of its blocks at
+once with ``decode_blocks``: one pass per binary column over the
+column's contiguous data buffer, with no per-block Python.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 BLOCK_SIZE = 128
 
@@ -167,6 +173,103 @@ def decode_block(
         for s, e in zip(starts, ends):
             positions.append(np.cumsum(flat[s:e]))
     return doc_ids, tfs, norms, positions
+
+
+def _binary_bytes(
+    col: "pa.Array | pa.ChunkedArray",
+) -> tuple[np.ndarray, np.ndarray]:
+    """The bytes of a binary column's rows, concatenated in row order
+    (uint8, read from the data buffer without a copy when the column is
+    one chunk with no nulls), and each row's byte count. Null rows hold
+    no bytes."""
+    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    n = len(arr)
+    if pa.types.is_null(arr.type) or n == arr.null_count:
+        return np.zeros(0, dtype=np.uint8), np.zeros(n, dtype=np.int64)
+    if arr.null_count:
+        arr = pc.fill_null(arr, b"")
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    _, offsets, data = arr.buffers()
+    off = np.frombuffer(offsets, dtype=width)[arr.offset : arr.offset + n + 1]
+    raw = (
+        np.frombuffer(data, dtype=np.uint8)[off[0] : off[-1]]
+        if data is not None
+        else np.zeros(0, dtype=np.uint8)
+    )
+    return raw, np.diff(off).astype(np.int64)
+
+
+def _stream(
+    col: "pa.Array | pa.ChunkedArray", count: int, name: str
+) -> np.ndarray:
+    """All varints of a binary column's rows as one int64 array, which
+    must hold ``count`` values: the rows' streams laid end to end are
+    one varint stream, decoded in one call."""
+    raw = _binary_bytes(col)[0]
+    ends = int(np.count_nonzero(raw < 0x80))  # one final byte per value
+    if ends != count:
+        raise ValueError(
+            f"{name}: {ends} varints where the blocks need {count}"
+        )
+    return varint_decode(raw, count).astype(np.int64)
+
+
+def _restarting_cumsum(values: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """cumsum of ``values`` restarted at each run of ``lengths`` values."""
+    total = np.cumsum(values)
+    before = np.zeros(len(values) + 1, dtype=total.dtype)
+    before[1:] = total
+    return total - np.repeat(before[np.cumsum(lengths) - lengths], lengths)
+
+
+def decode_blocks(
+    blocks: "pa.Table | pa.RecordBatch", want_positions: bool
+) -> pd.DataFrame:
+    """Decode every block of ``blocks`` at once: a table of block rows
+    (``term``, ``first_doc``, ``num_docs``, ``docs_bin``, ``tfs_bin``,
+    ``norms_bin`` and, with ``want_positions``, ``pos_bin``) to one
+    posting per row — term (object), doc_id (int64), tf (int32),
+    positions (int32 arrays, or None) and norm_byte (int32), the
+    segment store's decoded-postings schema — in block order.
+
+    Each binary column is one concatenated varint stream, decoded in one
+    call; doc ids and positions are cumulative sums restarted at each
+    block and at each doc. It returns what decode_block returns block
+    by block. A block whose ``pos_bin`` is null gets None positions."""
+    nd = blocks.column("num_docs").to_numpy().astype(np.int64)
+    total = int(nd.sum())
+    gaps = _stream(blocks.column("docs_bin"), total, "docs_bin")
+    first_doc = blocks.column("first_doc").to_numpy().astype(np.int64)
+    doc_id = _restarting_cumsum(gaps, nd) + np.repeat(first_doc, nd)
+    tf = _stream(blocks.column("tfs_bin"), total, "tfs_bin") + 1
+    norm_byte, norm_len = _binary_bytes(blocks.column("norms_bin"))
+    if not np.array_equal(norm_len, nd):
+        raise ValueError("norms_bin: one byte per doc expected")
+    positions = np.empty(total, dtype=object)  # all None
+    if want_positions:
+        pos_col = blocks.column("pos_bin")
+        held = np.repeat(
+            pc.is_valid(pos_col).to_numpy(zero_copy_only=False), nd
+        )
+        lengths = np.where(held, tf, 0)
+        deltas = _stream(pos_col, int(lengths.sum()), "pos_bin")
+        offsets = np.zeros(total + 1, dtype=np.int32)
+        np.cumsum(lengths, out=offsets[1:])
+        positions = pa.ListArray.from_arrays(
+            pa.array(offsets),
+            pa.array(_restarting_cumsum(deltas, tf[held]).astype(np.int32)),
+            mask=pa.array(~held),
+        ).to_numpy(zero_copy_only=False)
+    term = blocks.column("term").to_numpy(zero_copy_only=False)
+    return pd.DataFrame(
+        {
+            "term": np.repeat(term, nd),
+            "doc_id": doc_id,
+            "tf": tf.astype(np.int32),
+            "positions": positions,
+            "norm_byte": norm_byte.astype(np.int32),
+        }
+    )
 
 
 def varint_value_starts(buf: bytes) -> np.ndarray:

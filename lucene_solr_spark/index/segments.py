@@ -60,7 +60,7 @@ from ..functions.literals import sql_in
 from ..search.bm25 import avg_field_length
 from .norms import NORM_TABLE
 from .builder import CollectionStats, InvertedIndex
-from .codec import BLOCK_SIZE, decode_block, encode_term_blocks
+from .codec import BLOCK_SIZE, decode_blocks, encode_term_blocks
 
 SPLIT_RANGE = 1 << 20  # doc-range salt width for skewed terms
 
@@ -1057,38 +1057,25 @@ def _empty_decoded() -> pd.DataFrame:
     )
 
 
+# the block columns a decode reads (codec.decode_blocks)
+_DECODE_COLUMNS = ["term", "first_doc", "num_docs", "docs_bin", "tfs_bin",
+                   "norms_bin"]
+
+
 def _decode_partitions(want_positions: bool):
+    """mapInPandas body: each batch of block rows decoded at once by
+    codec.decode_blocks."""
+    cols = _DECODE_COLUMNS + (["pos_bin"] if want_positions else [])
+    schema = to_arrow_schema(SEGMENT_SCHEMA)
+    schema = pa.schema([schema.field(c) for c in cols])
+
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_term, out_doc, out_tf, out_pos, out_nb = [], [], [], [], []
-            for row in pdf.itertuples(index=False):
-                d, t, nb, pos = decode_block(
-                    row.first_doc,
-                    row.num_docs,
-                    row.docs_bin,
-                    row.tfs_bin,
-                    row.norms_bin,
-                    row.pos_bin if want_positions else None,
-                )
-                out_term.append(np.full(len(d), row.term, dtype=object))
-                out_doc.append(d)
-                out_tf.append(t)
-                out_nb.append(nb.astype(np.int32))
-                if pos is not None:
-                    out_pos.extend([p.astype(np.int32) for p in pos])
-                else:
-                    out_pos.extend([None] * len(d))
-            if not out_doc:
-                yield _empty_decoded()
-                continue
-            yield pd.DataFrame(
-                {
-                    "term": np.concatenate(out_term),
-                    "doc_id": np.concatenate(out_doc),
-                    "tf": np.concatenate(out_tf).astype("int32"),
-                    "positions": pd.Series(out_pos, dtype="object"),
-                    "norm_byte": np.concatenate(out_nb).astype("int32"),
-                }
+            yield decode_blocks(
+                pa.Table.from_pandas(
+                    pdf[cols], schema=schema, preserve_index=False
+                ),
+                want_positions,
             )
 
     return decode
@@ -1232,9 +1219,10 @@ class SplitIndex:
         cache analogue (Lucene readers keep term metadata hot per
         segment; here the unit is the query term). Terms not yet cached
         are fetched in ONE job (_split_meta_rows); a warm query starts
-        none, and the bound pass runs driver-side in pandas over
-        ≤ (#splits × #blocks/split) rows per term (~10^6 at 10^12 docs,
-        the same bounded-metadata budget as the bound pass itself)."""
+        none, and the bound pass (wand.split_bounds) runs driver-side
+        in numpy over ≤ (#splits × #blocks/split) rows per term (~10^6
+        at 10^12 docs, the same bounded-metadata budget as the bound
+        pass itself)."""
         cache = self._split_meta_cache
         missing = sorted({t for t in terms if t not in cache})
         fetched = self._split_meta_rows(missing) if missing else None
@@ -1259,16 +1247,17 @@ class SplitIndex:
         rows, the sums a segment store writes to ``terms_stats``. A warm
         query therefore scans nothing for its statistics (Lucene's
         TermStates cache)."""
-        sums = (
-            self.split_meta(list(terms))
-            .astype({"nd": "int64", "sum_tf": "int64"})
-            .groupby("term")[["nd", "sum_tf"]]
-            .sum()
-        )
-        return {
-            t: (int(df), int(ttf))
-            for t, df, ttf in zip(sums.index, sums["nd"], sums["sum_tf"])
-        }
+        meta = self.split_meta(list(terms))
+        if not len(meta):
+            return {}
+        names, ti = np.unique(meta["term"].to_numpy(), return_inverse=True)
+
+        def total(col: str) -> list[int]:
+            # float64 sums are exact below 2^53 postings per term
+            w = meta[col].to_numpy(dtype=np.float64)
+            return np.bincount(ti, weights=w).astype(np.int64).tolist()
+
+        return dict(zip(names.tolist(), zip(total("nd"), total("sum_tf"))))
 
     def postings_for_terms(
         self,
@@ -1505,13 +1494,13 @@ class SegmentIndex(SplitIndex):
         """A bounded fetch read on the driver: the row groups of the
         query terms' ``postings/bucket=<b>/`` directories that their
         ``term`` statistics admit, just the columns decode needs, then
-        the rows of ``terms`` (and ``splits``) decoded with the kernel
-        the distributed path runs. None when those row groups exceed
-        ``wand.overhead_eq_bytes()`` compressed bytes."""
+        the rows of ``terms`` (and ``splits``) decoded at once by the
+        kernel the distributed path runs (codec.decode_blocks). None
+        when those row groups exceed ``wand.overhead_eq_bytes()``
+        compressed bytes."""
         from ..search.wand import overhead_eq_bytes  # wand imports us
 
-        cols = ["term", "first_doc", "num_docs", "docs_bin", "tfs_bin",
-                "norms_bin"] + (["pos_bin"] if want_positions else [])
+        cols = _DECODE_COLUMNS + (["pos_bin"] if want_positions else [])
         table = self._parquet.read(
             [f"bucket={b}" for b in self.buckets_of(terms)], terms, cols,
             overhead_eq_bytes(),
@@ -1521,8 +1510,7 @@ class SegmentIndex(SplitIndex):
         if splits is not None:
             split = table["first_doc"].to_numpy() // self.split_range
             table = table.filter(pa.array(np.isin(split, list(splits))))
-        (decoded,) = _decode_partitions(want_positions)([table.to_pandas()])
-        return decoded
+        return decode_blocks(table, want_positions)
 
     def _scan_postings(
         self,

@@ -32,9 +32,10 @@ a shuffle engine):
   Searcher.MIN_ROUTE_SPLITS splits, and there only when the cost model
   below predicts it pays for its extra fetch; otherwise every candidate
   split is scored at once. On a one-split index that one fetch is
-  exactly the exhaustive fetch. The metadata pass is driver-side pandas
-  over the per-term split metadata, memoized by SplitIndex.split_meta,
-  so a warm query starts no job for it. Each scoring step is one fetch
+  exactly the exhaustive fetch. The metadata pass is one numpy kernel
+  (split_bounds) over the per-term split metadata, memoized by
+  SplitIndex.split_meta, so a warm query starts no job for it; OR, AND
+  and phrase bounds all come from it. Each scoring step is one fetch
   of the chosen splits' postings:
     - within the driver-decode bound (decode_postings_local), the fetch
       is a pyarrow read of the query terms' parquet row groups on the
@@ -55,6 +56,7 @@ a shuffle engine):
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -345,42 +347,85 @@ def _phrase_finish(
     return finish
 
 
+class SplitBounds(NamedTuple):
+    """Per split of a split_meta frame, in order of first appearance."""
+
+    split: np.ndarray  # split id
+    nt: np.ndarray  # terms present
+    tot: np.ndarray  # Σ_t w_t · max ub_factor of t's rows
+    tf_ub: np.ndarray  # min over terms of the term's max max_tf
+    nb_min: np.ndarray  # min min_nb
+    nd: np.ndarray  # Σ nd (postings)
+
+
+def split_bounds(
+    mdf: pd.DataFrame,
+    cache64: np.ndarray,
+    weights: dict[str, float] | None = None,
+) -> SplitBounds:
+    """The metadata pass over split_meta rows ``mdf`` (no decode): per
+    split, the terms present, the score bound Σ_t w_t · max over t's
+    rows of ub_factor = max_tf/(max_tf + cache64[min_nb]) (unit weights
+    when ``weights`` is None), the phrase-freq bound min_t max max_tf,
+    the smallest norm byte and the postings. One numpy pass: (split,
+    term) pairs from np.unique, their maxima by maximum.at, and the
+    per-split sums and minima by bincount and minimum.at."""
+    terms, ti = np.unique(mdf["term"].to_numpy(), return_inverse=True)
+    splits, first, si = np.unique(
+        mdf["split"].to_numpy(dtype=np.int64),
+        return_index=True,
+        return_inverse=True,
+    )
+    pairs, pi = np.unique(si * len(terms) + ti, return_inverse=True)
+    p_split, p_term = np.divmod(pairs, len(terms))
+    max_tf = mdf["max_tf"].to_numpy(dtype=np.int64)
+    min_nb = mdf["min_nb"].to_numpy(dtype=np.int64)
+    ub_factor = max_tf / (max_tf + cache64[min_nb])
+    p_ub = np.full(len(pairs), -np.inf)
+    np.maximum.at(p_ub, pi, ub_factor)
+    p_tf = np.zeros(len(pairs), dtype=np.int64)
+    np.maximum.at(p_tf, pi, max_tf)
+    w = (
+        np.ones(len(terms))
+        if weights is None
+        else np.asarray([weights[t] for t in terms], dtype=np.float64)
+    )
+    n = len(splits)
+    tf_ub = np.full(n, np.iinfo(np.int64).max)
+    np.minimum.at(tf_ub, p_split, p_tf)
+    nb_min = np.full(n, np.iinfo(np.int64).max)
+    np.minimum.at(nb_min, si, min_nb)
+    nd = np.zeros(n, dtype=np.int64)
+    np.add.at(nd, si, mdf["nd"].to_numpy(dtype=np.int64))
+    order = np.argsort(first, kind="stable")
+    return SplitBounds(
+        splits[order],
+        np.bincount(p_split, minlength=n)[order],
+        np.bincount(p_split, weights=p_ub * w[p_term], minlength=n)[order],
+        tf_ub[order],
+        nb_min[order],
+        nd[order],
+    )
+
+
 def _split_bounds(
-    searcher: Searcher, terms: list[str], weights: dict[str, float]
-) -> list[tuple[int, int, float, int]]:
-    """Per split any of ``terms`` touches: (split, terms present,
-    Σ_t w_t · max block bound of t, postings), from the memoized
-    split metadata — driver-side pandas, no per-query shuffle job."""
-    mdf = searcher.index.split_meta(terms)
-    if not len(mdf):
-        return []
-    tf = mdf["max_tf"].to_numpy(dtype="float64")
-    ub_factor = tf / (
-        tf + searcher.cache64[mdf["min_nb"].to_numpy(dtype="int64")]
+    searcher: Searcher, terms: list[str], weights: dict[str, float] | None
+) -> SplitBounds:
+    """split_bounds over the memoized split metadata of ``terms``, so a
+    warm query starts no job for it."""
+    return split_bounds(
+        searcher.index.split_meta(terms), searcher.cache64, weights
     )
-    agg = (
-        pd.DataFrame(
-            {
-                "split": mdf["split"].to_numpy(),
-                "term": mdf["term"].to_numpy(),
-                "ubf": ub_factor,
-                "nd": mdf["nd"].to_numpy(dtype="int64"),
-            }
-        )
-        .groupby(["split", "term"], sort=False)
-        .agg(ub=("ubf", "max"), nd=("nd", "sum"))
-        .reset_index()
+
+
+def _by_bound(
+    split: np.ndarray, ub: np.ndarray, nd: np.ndarray
+) -> list[tuple[int, float, int]]:
+    """[(split, bound, postings)], bound-desc; ties keep their order."""
+    order = np.argsort(-ub, kind="stable")
+    return list(
+        zip(split[order].tolist(), ub[order].tolist(), nd[order].tolist())
     )
-    agg["wub"] = agg["ub"] * agg["term"].map(weights)
-    per = (
-        agg.groupby("split", sort=False)
-        .agg(nt=("term", "nunique"), tot=("wub", "sum"), nd=("nd", "sum"))
-        .reset_index()
-    )
-    return [
-        (int(r.split), int(r.nt), float(r.tot), int(r.nd))
-        for r in per.itertuples()
-    ]
 
 
 def wand_or_search(
@@ -411,13 +456,8 @@ def wand_or_search(
         for t in present
     }
     # -- 1. metadata-only bound per split --------------------------------
-    cands = sorted(
-        (
-            (split, tot, nd)
-            for split, _, tot, nd in _split_bounds(searcher, present, weights)
-        ),
-        key=lambda c: -c[1],
-    )
+    b = _split_bounds(searcher, present, weights)
+    cands = _by_bound(b.split, b.tot, b.nd)
     if not cands:
         return searcher._hits()
 
@@ -498,14 +538,12 @@ def wand_and_search(
 
     # -- 1. metadata pass: per-split presence + score upper bound --------
     # presence prune AND bound both come from the same memoized rows
-    per_split = _split_bounds(searcher, musts, weights)
-    cands = sorted(
-        ((split, tot, nd) for split, nt, tot, nd in per_split if nt == n),
-        key=lambda c: -c[1],
-    )
+    b = _split_bounds(searcher, musts, weights)
+    held = b.nt == n
+    cands = _by_bound(b.split[held], b.tot[held], b.nd[held])
     if stats_out is not None:
         stats_out.update(
-            splits_any=len(per_split),
+            splits_any=len(b.split),
             splits_all=len(cands),
             splits_decoded=0,
         )
@@ -624,44 +662,18 @@ def wand_phrase_search(
         )
     weight = w * (1.2 + 1)
 
-    # driver-side pandas over the memoized per-term split metadata
-    # (see _split_bounds) — no per-query shuffle job.
-    mdf = index.split_meta(distinct)
-    if len(mdf):
-        per_term = (
-            mdf.groupby(["split", "term"], sort=False)
-            .agg(
-                tmax=("max_tf", "max"),
-                nbmin=("min_nb", "min"),
-                nd=("nd", "sum"),
-            )
-            .reset_index()
-        )
-        per = (
-            per_term.groupby("split", sort=False)
-            .agg(
-                nt=("term", "nunique"),
-                tf_ub=("tmax", "min"),
-                nb_min=("nbmin", "min"),
-                nd=("nd", "sum"),
-            )
-            .reset_index()
-        )
-        per_split = list(per.itertuples())
-    else:
-        per_split = []
-    cache64 = searcher.cache64
-    candidates = []
-    for r in per_split:
-        if int(r.nt) != n:
-            continue
-        tf_ub = float(r.tf_ub)
-        ub = weight * tf_ub / (tf_ub + float(cache64[int(r.nb_min)]))
-        candidates.append((int(r.split), ub, int(r.nd)))
-    candidates.sort(key=lambda t: -t[1])
+    # phrase freq <= min term tf <= min_t max max_tf in the split
+    b = _split_bounds(searcher, distinct, None)
+    held = b.nt == n
+    tf_ub = b.tf_ub[held].astype(np.float64)
+    candidates = _by_bound(
+        b.split[held],
+        weight * tf_ub / (tf_ub + searcher.cache64[b.nb_min[held]]),
+        b.nd[held],
+    )
     if stats_out is not None:
         stats_out.update(
-            splits_any=len(per_split),
+            splits_any=len(b.split),
             splits_all=len(candidates),
             splits_decoded=0,
         )

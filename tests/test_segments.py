@@ -6,10 +6,12 @@ import json
 import os
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from lucene_solr_spark.index.codec import (
     decode_block,
+    decode_blocks,
     encode_term_blocks,
     varint_decode,
     varint_encode,
@@ -30,6 +32,136 @@ def test_varint_roundtrip_property():
         n = int(rng.integers(0, 2000))
         vals = rng.integers(0, 2**62, size=n).astype(np.uint64)
         assert (varint_decode(varint_encode(vals), n) == vals).all()
+
+
+def _block_table(blocks: list[dict]) -> pa.Table:
+    """Block dicts as the block columns decode_blocks reads."""
+    return pa.table(
+        {
+            "term": pa.array([b.get("term", "t") for b in blocks], pa.string()),
+            "first_doc": pa.array([b["first_doc"] for b in blocks], pa.int64()),
+            "num_docs": pa.array([b["num_docs"] for b in blocks], pa.int32()),
+            "docs_bin": pa.array([b["docs_bin"] for b in blocks], pa.binary()),
+            "tfs_bin": pa.array([b["tfs_bin"] for b in blocks], pa.binary()),
+            "norms_bin": pa.array([b["norms_bin"] for b in blocks], pa.binary()),
+            "pos_bin": pa.array([b["pos_bin"] for b in blocks], pa.binary()),
+        }
+    )
+
+
+def _assert_batched_matches(table, want_positions: bool) -> None:
+    """decode_blocks over ``table`` equals decode_block row by row."""
+    got = decode_blocks(table, want_positions)
+    assert list(got.columns) == [
+        "term", "doc_id", "tf", "positions", "norm_byte"
+    ]
+    assert [str(t) for t in got.dtypes] == [
+        "object", "int64", "int32", "object", "int32"
+    ]
+    terms, docs, tfs, norms, poss = [], [], [], [], []
+    for row in table.to_pylist():
+        d, t, nb, p = decode_block(
+            row["first_doc"], row["num_docs"], row["docs_bin"],
+            row["tfs_bin"], row["norms_bin"],
+            row["pos_bin"] if want_positions else None,
+        )
+        terms += [row["term"]] * len(d)
+        docs.append(d)
+        tfs.append(t)
+        norms.append(nb)
+        poss += p if p is not None else [None] * len(d)
+    assert got["term"].tolist() == terms
+    if not docs:
+        assert len(got) == 0
+        return
+    assert (got["doc_id"].to_numpy() == np.concatenate(docs)).all()
+    assert (got["tf"].to_numpy() == np.concatenate(tfs)).all()
+    assert (got["norm_byte"].to_numpy() == np.concatenate(norms)).all()
+    assert len(got["positions"]) == len(poss)
+    for g, w in zip(got["positions"], poss):
+        if w is None:
+            assert g is None
+        else:
+            assert g.dtype == np.int32 and (g == w).all()
+
+
+def _random_term_blocks(rng, n: int, doc_space: int, positions: bool):
+    docs = np.sort(rng.choice(doc_space, size=n, replace=False))
+    tfs = rng.integers(1, 9, size=n).astype(np.int64)
+    norms = rng.integers(0, 256, size=n).astype(np.uint8)
+    poss = [
+        np.sort(rng.choice(1 << 20, size=int(t), replace=False))
+        for t in tfs
+    ] if positions else None
+    return encode_term_blocks(docs.astype(np.int64), tfs, norms, poss)
+
+
+@pytest.mark.parametrize("positions", [True, False])
+def test_batched_decode_matches_decode_block(positions):
+    """One decode_blocks pass over many terms' blocks: singleton and
+    full 128-doc blocks, doc ids past 2^31 whose gaps take 5+ varint
+    bytes, and position deltas of several bytes."""
+    rng = np.random.default_rng(21)
+    blocks = []
+    for term, n, space in [
+        ("single", 1, 10**6),  # one singleton block
+        ("full", 256, 10**6),  # two full 128-doc blocks
+        ("tail", 300, 10**9),  # 128 + 128 + 44
+        ("wide", 200, 1 << 42),  # ids past 2^31, gaps ~2^34
+    ]:
+        for b in _random_term_blocks(rng, n, space, positions):
+            b["term"] = term
+            blocks.append(b)
+    wide = [b for b in blocks if b["term"] == "wide"]
+    assert wide[0]["first_doc"] > 2**31
+    assert any(
+        len(b["docs_bin"]) >= 5 * (b["num_docs"] - 1) + 1 for b in wide
+    )  # every gap after the first takes 5+ bytes
+    table = _block_table(blocks)
+    assert {b["num_docs"] for b in blocks} >= {1, 128}
+    for want in (True, False) if positions else (False,):
+        _assert_batched_matches(table, want)
+
+
+def test_batched_decode_null_pos_bin():
+    """A block without positions (null pos_bin) decodes to None
+    positions next to blocks that have them."""
+    rng = np.random.default_rng(22)
+    with_pos = _random_term_blocks(rng, 150, 10**5, True)
+    without = _random_term_blocks(rng, 40, 10**5, False)
+    assert all(b["pos_bin"] is None for b in without)
+    table = _block_table(with_pos[:1] + without + with_pos[1:])
+    assert table["pos_bin"].null_count == len(without)
+    _assert_batched_matches(table, True)
+    got = decode_blocks(table, True)
+    assert got["positions"].isna().sum() == 40
+    # all-null pos_bin, as in a store written without positions
+    _assert_batched_matches(_block_table(without), True)
+
+
+def test_batched_decode_empty_chunked_and_sliced():
+    rng = np.random.default_rng(23)
+    blocks = _random_term_blocks(rng, 700, 10**7, True)
+    table = _block_table(blocks)
+    # zero rows
+    _assert_batched_matches(table.slice(0, 0), True)
+    assert len(decode_blocks(table.schema.empty_table(), True)) == 0
+    # a ChunkedArray of several chunks per column
+    chunked = pa.concat_tables(
+        [table.slice(0, 2), table.slice(2, 1), table.slice(3)]
+    )
+    assert chunked["docs_bin"].num_chunks == 3
+    _assert_batched_matches(chunked, True)
+    # non-zero array offsets: a slice, and a filter as _pull_postings
+    # filters on term and on splits before decoding
+    sliced = table.slice(2, 3)
+    assert sliced["docs_bin"].chunk(0).offset == 2
+    _assert_batched_matches(sliced, True)
+    keep = pa.array(np.arange(len(blocks)) % 2 == 1)
+    _assert_batched_matches(table.filter(keep), True)
+    _assert_batched_matches(table.filter(keep).slice(1), False)
+    # a RecordBatch in, as a mapInPandas batch is
+    _assert_batched_matches(table.slice(1).combine_chunks().to_batches()[0], True)
 
 
 def test_block_roundtrip_with_positions():
@@ -57,6 +189,7 @@ def test_block_roundtrip_with_positions():
     assert (np.concatenate(t_all) == tfs).all()
     for got, want in zip(p_all, poss):
         assert (got == want).all()
+    _assert_batched_matches(_block_table(blocks), True)
 
 
 def test_reblock_interleaved_runs():
@@ -103,6 +236,7 @@ def test_reblock_interleaved_runs():
     assert (np.concatenate(n_all) == norms).all()
     for got, want in zip(p_all, poss):
         assert (got == want).all()
+    _assert_batched_matches(_block_table(blocks), True)
 
 
 def test_reblock_interleaved_runs_no_positions():
@@ -130,6 +264,7 @@ def test_reblock_interleaved_runs_no_positions():
         t_all.append(t)
     assert (np.concatenate(d_all) == all_docs).all()
     assert (np.concatenate(t_all) == tfs).all()
+    _assert_batched_matches(_block_table(blocks), False)
 
 
 @pytest.fixture(scope="module")

@@ -20,6 +20,9 @@
      already cached, as on a warm query). With _JOB_OVERHEAD_SEC it
      prices the byte bound of a driver-side postings read
      (overhead_eq_bytes).
+  5. driver decode rate (printed, not a constant) — postings per second
+     the batched block decode (codec.decode_blocks) turns out over the
+     same read, positions included, as a bounded fetch decodes them.
 
 Usage: python tools/calibrate_wand.py [sf_dir] [k]
 Numbers recorded in BENCH.md; override the first three at deploy time
@@ -43,7 +46,10 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 10
 
+    import pyarrow.compute as pc
+
     import __spark_entry__ as entry
+    from lucene_solr_spark.index.codec import decode_blocks
     from lucene_solr_spark.search import wand
     from lucene_solr_spark.session import get_spark
 
@@ -148,6 +154,20 @@ def main() -> None:
     print(
         f"driver_read bytes={nbytes:,} median={statistics.median(reads):.4f}s "
         f"rate={read_rate / 1e6:.1f} MB/s"
+    )
+
+    # -- 5. driver decode rate of the batched kernel ---------------------
+    table = index._parquet.read(subs, terms, cols, float("inf"))
+    postings = int(pc.sum(table["num_docs"]).as_py() or 0)
+    decodes = []
+    for _ in range(7):
+        t0 = time.perf_counter()
+        decode_blocks(table, index.keep_positions)
+        decodes.append(time.perf_counter() - t0)
+    decode_s = statistics.median(decodes)
+    print(
+        f"driver_decode blocks={table.num_rows:,} postings={postings:,} "
+        f"median={decode_s:.4f}s rate={postings / decode_s:,.0f} postings/s"
     )
     print(
         "\nsuggested constants:\n"
