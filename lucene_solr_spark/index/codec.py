@@ -6,16 +6,30 @@ delta-varint docID gaps; :230-262 position deltas) with one deliberate
 architectural change: instead of multi-level skip lists every 16 docs
 (Lucene40PostingsWriter.java:66,77; MultiLevelSkipListWriter.java:31-89),
 postings are cut into fixed-size blocks (BLOCK_SIZE=128 docs) carrying
-per-block metadata (first/last doc, max_tf, ub_factor). Fixed blocks give
-both skipping (min/max pruning pushed into Parquet row groups) and
-block-max WAND upper bounds (Ding & Suel, SIGIR'11) — the block-max
-structure Lucene grew later; the reference only has skip lists.
+per-block metadata (first/last doc, max_tf, min_nb, sum_tf). Fixed
+blocks give both skipping (min/max pruning pushed into Parquet row
+groups) and block-max WAND upper bounds (Ding & Suel, SIGIR'11) — the
+block-max structure Lucene grew later; the reference only has skip
+lists.
 
-Encode and single-block decode are numpy-vectorized per block: no
-per-value Python beyond the byte-spread, which is O(total_bytes) numpy
-ops, but one call per block. A query fetch decodes all of its blocks at
-once with ``decode_blocks``: one pass per binary column over the
-column's contiguous data buffer, with no per-block Python.
+One encoder writes every block the engine stores: ``encode_blocks``
+takes many (term, split) groups of doc-sorted postings at once and
+encodes each column as one varint stream, cut into per-block binary
+rows by byte offsets — no per-block or per-group Python. Like Lucene's
+one postings writer behind both flush and merge, it serves the build's
+map-side flush (one unbounded partial run per group), the merge
+(BLOCK_SIZE blocks) and the splitter's re-encode. Positions enter as
+one varint stream with per-doc byte spans: each doc's sub-stream starts
+with an absolute position, so a span moves between blocks as bytes and
+is never decoded (``position_spans``, ``encode_positions``).
+
+One decoder reads them: ``decode_blocks`` decodes every block of a
+fetch in one pass over each binary column's data buffer.
+
+``encode_term_blocks`` (one term's run), ``encode_run`` (one partial
+run), ``reblock_runs`` (one group's partials) and ``decode_block`` (one
+block) are the per-run references the tests compare the batched kernels
+against; no engine path calls them.
 """
 
 from __future__ import annotations
@@ -25,38 +39,42 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from .norms import NORM_TABLE
+
 BLOCK_SIZE = 128
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-style varint encode of a uint64 array, vectorized."""
+def _varint_bytes(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128-style varint encode of a uint64 array, vectorized: the
+    bytes (uint8) and each value's byte count."""
     v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
     # bytes needed per value: ceil(bits/7), min 1
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
     nbytes = np.ones(v.shape, dtype=np.int64)
-    tmp >>= np.uint64(7)
+    tmp = v >> np.uint64(7)
     while tmp.any():
         nbytes += (tmp > 0).astype(np.int64)
         tmp >>= np.uint64(7)
     total = int(nbytes.sum())
     out = np.zeros(total, dtype=np.uint8)
+    if total == 0:
+        return out, nbytes
     # positions where each value's bytes start
     starts = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
     # write byte k of every value that has >= k+1 bytes
-    maxb = int(nbytes.max())
     rem = v.copy()
-    for k in range(maxb):
+    for k in range(int(nbytes.max())):
         mask = nbytes > k
         idx = starts[mask] + k
         byte = (rem[mask] & np.uint64(0x7F)).astype(np.uint8)
         cont = (nbytes[mask] > k + 1).astype(np.uint8) << 7
         out[idx] = byte | cont
         rem = rem >> np.uint64(7)
-    del nbits
-    return out.tobytes()
+    return out, nbytes
+
+
+def varint_encode(values: np.ndarray) -> bytes:
+    """LEB128-style varint encode of a uint64 array, vectorized."""
+    return _varint_bytes(values)[0].tobytes()
 
 
 def varint_decode(buf: bytes, count: int) -> np.ndarray:
@@ -395,8 +413,6 @@ def reblock_runs(
         gaps[0] = 0
         gaps[1:] = np.diff(d).astype(np.uint64)
         nb_slice = norms[s:e].astype(np.int64)
-        from .norms import NORM_TABLE
-
         blk = {
             "num_docs": int(e - s),
             "first_doc": int(d[0]),
@@ -416,3 +432,149 @@ def reblock_runs(
             ]
         blocks.append(blk)
     return blocks
+
+
+# rank of each norm byte's decoded quantized dl (ties by byte value):
+# the min-rank byte of a block minimizes the BM25 denominator addend
+# under ANY avgdl (NORM_TABLE is the decoded quantized dl; the length
+# cache is monotone in it)
+_NB_RANK = np.argsort(np.argsort(NORM_TABLE, kind="stable"), kind="stable")
+_BYTE_OF_RANK = np.argsort(_NB_RANK, kind="stable")
+
+
+def position_spans(
+    stream: "bytes | np.ndarray", tf: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-doc byte spans [lo, hi) of a position varint stream in which
+    doc i holds ``tf[i]`` values, found without decoding a value."""
+    raw = np.frombuffer(stream, dtype=np.uint8)
+    value_off = np.append(
+        np.flatnonzero(np.concatenate(([True], raw[:-1] < 0x80))), raw.size
+    )
+    doc_off = np.zeros(len(tf) + 1, dtype=np.int64)
+    np.cumsum(tf, out=doc_off[1:])
+    edges = value_off[doc_off]
+    return edges[:-1], edges[1:]
+
+
+def encode_positions(
+    positions: np.ndarray, tf: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One varint stream of every doc's positions (doc i holds the next
+    ``tf[i]`` of the flat, per-doc ascending ``positions``) and each
+    doc's byte span [lo, hi): within a doc the values are deltas, and
+    the first is absolute, so spans relocate as bytes."""
+    flat = np.asarray(positions, dtype=np.int64)
+    doc_start = np.zeros(len(tf), dtype=np.int64)
+    np.cumsum(tf[:-1], out=doc_start[1:])
+    deltas = np.empty(len(flat), dtype=np.int64)
+    if len(flat):
+        deltas[1:] = np.diff(flat)
+        deltas[doc_start] = flat[doc_start]
+    raw, nbytes = _varint_bytes(deltas.astype(np.uint64))
+    value_off = np.zeros(len(flat) + 1, dtype=np.int64)
+    np.cumsum(nbytes, out=value_off[1:])
+    edges = value_off[np.append(doc_start, len(flat))]
+    return raw, edges[:-1], edges[1:]
+
+
+def _binary_column(data: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """Rows ``data[offsets[i]:offsets[i + 1]]`` as an object array of
+    bytes, built from one offsets buffer and one data buffer (int32
+    offsets, as in the Arrow batches Spark exchanges)."""
+    arr = pa.Array.from_buffers(
+        pa.binary(),
+        len(offsets) - 1,
+        [
+            None,
+            pa.py_buffer(offsets.astype(np.int32)),
+            pa.py_buffer(np.ascontiguousarray(data, dtype=np.uint8)),
+        ],
+    )
+    return arr.to_numpy(zero_copy_only=False)
+
+
+def encode_blocks(
+    doc: np.ndarray,
+    tf: np.ndarray,
+    norm: np.ndarray,
+    bounds: np.ndarray,
+    block_size: int | None = BLOCK_SIZE,
+    positions: "tuple[bytes | np.ndarray, np.ndarray, np.ndarray] | None"
+    = None,
+) -> pd.DataFrame:
+    """Encode many groups of postings into block rows at once — the
+    inverse of ``decode_blocks``.
+
+    ``doc``, ``tf`` and ``norm`` (norm bytes) hold one posting per doc,
+    doc-sorted within each group; group g is rows
+    ``bounds[g]:bounds[g + 1]`` (``bounds`` runs from 0 to the row
+    count). Each group is cut into blocks of ``block_size`` docs, or
+    kept whole as one block when ``block_size`` is None. ``positions``
+    is ``(stream, lo, hi)``: a varint stream and each doc's byte span in
+    it (``position_spans``, ``encode_positions``), in any order; or None
+    for null ``pos_bin``.
+
+    One row per block, in group order: ``group`` (the block's group
+    index), num_docs, first_doc, last_doc, max_tf, min_nb, sum_tf,
+    docs_bin (gaps, the first relative to first_doc), tfs_bin (tf - 1),
+    norms_bin and pos_bin — byte for byte what ``encode_term_blocks``
+    writes for each group, plus ``min_nb`` and ``sum_tf``."""
+    doc = np.asarray(doc, dtype=np.int64)
+    tf = np.asarray(tf, dtype=np.int64)
+    norm = np.asarray(norm, dtype=np.uint8)
+    bounds = np.asarray(bounds, dtype=np.int64)
+    total = len(doc)
+    glen = np.diff(bounds)
+    step = glen if block_size is None else np.full(len(glen), block_size)
+    per_group = np.where(glen > 0, -(-glen // np.maximum(step, 1)), 0)
+    group = np.repeat(np.arange(len(glen)), per_group)
+    first_block = np.zeros(len(glen), dtype=np.int64)
+    np.cumsum(per_group[:-1], out=first_block[1:])
+    start = bounds[:-1][group] + (
+        np.arange(len(group)) - first_block[group]
+    ) * step[group]
+    edges = np.append(start, total)  # blocks tile the rows in order
+    end = edges[1:]
+
+    gaps = np.zeros(total, dtype=np.int64)
+    gaps[1:] = np.diff(doc)
+    gaps[start] = 0
+    docs_raw, docs_n = _varint_bytes(gaps.astype(np.uint64))
+    tfs_raw, tfs_n = _varint_bytes((tf - 1).astype(np.uint64))
+    docs_off = np.zeros(total + 1, dtype=np.int64)
+    np.cumsum(docs_n, out=docs_off[1:])
+    tfs_off = np.zeros(total + 1, dtype=np.int64)
+    np.cumsum(tfs_n, out=tfs_off[1:])
+    out = pd.DataFrame(
+        {
+            "group": group,
+            "num_docs": (end - start).astype(np.int32),
+            "first_doc": doc[start],
+            "last_doc": doc[end - 1],
+            "max_tf": np.maximum.reduceat(tf, start).astype(np.int32),
+            "min_nb": _BYTE_OF_RANK[
+                np.minimum.reduceat(_NB_RANK[norm], start)
+            ].astype(np.int32),
+            "sum_tf": np.add.reduceat(tf, start),
+            "docs_bin": _binary_column(docs_raw, docs_off[edges]),
+            "tfs_bin": _binary_column(tfs_raw, tfs_off[edges]),
+            "norms_bin": _binary_column(norm, edges),
+            "pos_bin": np.full(len(group), None, dtype=object),
+        }
+    )
+    if positions is not None:
+        stream, lo, hi = positions
+        raw = np.frombuffer(stream, dtype=np.uint8)
+        lo = np.asarray(lo, dtype=np.int64)
+        lens = np.asarray(hi, dtype=np.int64) - lo
+        doc_off = np.zeros(total + 1, dtype=np.int64)
+        np.cumsum(lens, out=doc_off[1:])
+        if np.array_equal(lo[1:], lo[:-1] + lens[:-1]):  # already in order
+            raw = raw[lo[0] : lo[0] + doc_off[-1]] if total else raw[:0]
+        else:  # lay the spans end to end in row order: one gather
+            raw = raw[
+                np.arange(doc_off[-1]) - np.repeat(doc_off[:-1] - lo, lens)
+            ]
+        out["pos_bin"] = _binary_column(raw, doc_off[edges])
+    return out

@@ -123,8 +123,9 @@ def write_fielded_segments(
     ``base_dir/<field>/`` (delta-varint blocks, block-max metadata,
     segments_N manifest, kill-and-resume — everything write_segments
     gives the single-field path). With ``cache=True`` on the build, the
-    corpus was inverted once; each field's store writes from the cached
-    postings, field-pruned."""
+    corpus was inverted once; each field's store flushes the cached
+    postings, field-pruned, as partial runs into write_segments' one
+    shuffle-and-merge, then its stats-and-commit tail."""
     import os
 
     from .segments import write_segments

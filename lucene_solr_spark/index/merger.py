@@ -6,7 +6,7 @@ lucene/core/.../index/IndexWriter.java addIndexes — incoming segments
 are appended with their docIDs shifted by the running docBase.
 
 Spark shape: a posting block's docs_bin stores gaps RELATIVE to its
-first_doc (codec.py encode_term_blocks — gap[0] = 0), so rebasing a
+first_doc (codec.py encode_blocks — gap[0] = 0), so rebasing a
 whole source index is a METADATA-ONLY projection: first_doc/last_doc
 shift by the docBase, the encoded bytes are carried verbatim, and the
 doc store shifts its doc_id column. No block is ever decoded — the

@@ -8,6 +8,15 @@ Layout under ``index_dir``:
                                    mirroring prepareCommit/finishCommit,
                                    lucene/core/.../index/SegmentInfos.java:57-117)
 
+Writers: one block encoder (codec.encode_blocks) and one tail.
+  build_segment_store (tokenize) and write_segments (flat postings of an
+  InvertedIndex) each flush map-side partial runs, one per (term,
+  split), share one shuffle + merge into BLOCK_SIZE blocks
+  (_write_postings), and finish in _commit_store: terms_stats from block
+  metadata, collection stats, manifest commit. The splitter and
+  merge_stores (splitter._write_part_store) copy or re-encode blocks and
+  finish in the same _commit_store.
+
 Scale design:
   - postings are shuffled ONCE by (term, doc-range split): the split key
     ``doc_id // SPLIT_RANGE`` statically salts skewed high-df terms
@@ -43,7 +52,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
@@ -58,9 +67,14 @@ from pyspark.sql.types import (
 
 from ..functions.literals import sql_in
 from ..search.bm25 import avg_field_length
-from .norms import NORM_TABLE
 from .builder import CollectionStats, InvertedIndex
-from .codec import BLOCK_SIZE, decode_blocks, encode_term_blocks
+from .codec import (
+    BLOCK_SIZE,
+    decode_blocks,
+    encode_blocks,
+    encode_positions,
+    position_spans,
+)
 
 SPLIT_RANGE = 1 << 20  # doc-range salt width for skewed terms
 
@@ -110,139 +124,52 @@ def _bucket_col(term_col, n_buckets: int):
     return F.pmod(F.xxhash64(term_col), F.lit(n_buckets)).cast("int")
 
 
-def _pack_run(
-    term: str,
-    bucket: int,
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    norms: np.ndarray,
-    positions: list | None,
-    rows: list,
-) -> None:
-    """Pack one (term, split) posting run (sorted by doc_id) into block
-    rows, appended to ``rows``."""
-    blocks = encode_term_blocks(doc_ids, tfs, norms, positions)
-    s = 0
-    for blk in blocks:
-        e = s + blk["num_docs"]
-        nbs = norms[s:e].astype(np.int64)
-        # norm byte of the smallest quantized dl: minimizes the BM25
-        # denominator addend under ANY avgdl (NORM_TABLE is the decoded
-        # quantized dl; the cache is monotone in it)
-        min_nb = int(nbs[np.argmin(NORM_TABLE[nbs])])
-        rows.append(
-            (
-                bucket,
-                term,
-                blk["num_docs"],
-                blk["first_doc"],
-                blk["last_doc"],
-                blk["max_tf"],
-                min_nb,
-                int(tfs[s:e].sum()),
-                blk["docs_bin"],
-                blk["tfs_bin"],
-                blk["norms_bin"],
-                blk["pos_bin"],
-            )
-        )
-        s = e
+def _block_rows(
+    blocks: pd.DataFrame, term: np.ndarray, bucket: np.ndarray
+) -> pd.DataFrame:
+    """codec.encode_blocks rows as SEGMENT_SCHEMA rows, given each
+    group's ``term`` and ``bucket``."""
+    group = blocks.pop("group").to_numpy()
+    blocks.insert(0, "term", np.asarray(term, dtype=object)[group])
+    blocks.insert(0, "bucket", np.asarray(bucket)[group].astype(np.int32))
+    return blocks
 
 
-def _pack_frame(pdf: pd.DataFrame, keep_positions: bool, rows: list) -> None:
-    """Pack every (term, split) run of a sorted frame. Run boundaries are
-    found once with numpy (the frame is sorted by term, split, doc_id) —
-    no pandas groupby: its per-group sub-frame materialization costs
-    ~100µs × one group per RARE term, which dominates at Zipfian
-    vocabularies (most terms have df < block size)."""
-    terms_arr = pdf["term"].to_numpy()
-    splits_arr = pdf["split"].to_numpy()
-    n = len(pdf)
+def _partial_runs(
+    uniques: np.ndarray,
+    codes: np.ndarray,
+    doc: np.ndarray,
+    tf: np.ndarray,
+    nb: np.ndarray,
+    positions: np.ndarray | None,
+    split_range: int,
+) -> pd.DataFrame:
+    """Map-side flush of postings sorted by (term code, doc): one
+    partial run per (term, split) — the DWPT flush unit
+    (lucene/core/.../index/DocumentsWriterPerThread.java:44; ours are
+    per-partition partial runs merged after the term shuffle), in block
+    format so the merge decodes and re-blocks it with array ops.
+    ``positions``: every doc's positions, flat (tf each), or None. The
+    bucket is assigned by a Catalyst column afterwards."""
+    split = doc // split_range
     change = np.flatnonzero(
-        (terms_arr[1:] != terms_arr[:-1]) | (splits_arr[1:] != splits_arr[:-1])
+        (codes[1:] != codes[:-1]) | (split[1:] != split[:-1])
     ) + 1
-    bounds = np.concatenate(([0], change, [n]))
-    doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-    tfs = pdf["tf"].to_numpy(dtype=np.int64)
-    norms = pdf["norm_byte"].to_numpy(dtype=np.int64).astype(np.uint8)
-    buckets = pdf["bucket"].to_numpy(dtype=np.int64)
-    pos_arr = pdf["positions"].to_numpy() if keep_positions else None
-    for i in range(len(bounds) - 1):
-        s, e = int(bounds[i]), int(bounds[i + 1])
-        positions = (
-            [np.asarray(p, dtype=np.int64) for p in pos_arr[s:e]]
-            if pos_arr is not None
-            else None
-        )
-        _pack_run(
-            terms_arr[s],
-            int(buckets[s]),
-            doc_ids[s:e],
-            tfs[s:e],
-            norms[s:e],
-            positions,
-            rows,
-        )
-
-
-_PACKED_COLS = [
-    "bucket", "term", "num_docs", "first_doc", "last_doc", "max_tf",
-    "min_nb", "sum_tf", "docs_bin", "tfs_bin", "norms_bin", "pos_bin",
-]
-
-
-def _rows_frame(rows: list) -> pd.DataFrame:
-    out = pd.DataFrame(rows, columns=_PACKED_COLS)
-    out["bucket"] = out["bucket"].astype("int32")
-    out["num_docs"] = out["num_docs"].astype("int32")
-    out["max_tf"] = out["max_tf"].astype("int32")
-    out["min_nb"] = out["min_nb"].astype("int32")
-    out["sum_tf"] = out["sum_tf"].astype("int64")
-    return out
-
-
-def _pack_stream(keep_positions: bool):
-    """mapInPandas packer over a partition hash-partitioned by
-    (term, split) and sorted by (term, split, doc_id).
-
-    Replaces a per-group applyInPandas (one Spark group per (term, split)
-    — ruinous overhead at 10^4-10^8 tiny groups) with a streaming run
-    packer: thousands of groups per Arrow batch, one Python call each.
-    Groups can span Arrow batch boundaries, so the trailing incomplete
-    (term, split) run is carried into the next batch."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            n = len(pdf)
-            if n == 0:
-                continue
-            # trailing run of the last (term, split) may continue in the
-            # next batch — hold it back
-            last_t = pdf["term"].iloc[-1]
-            last_s = pdf["split"].iloc[-1]
-            tail_mask = (
-                (pdf["term"].to_numpy() == last_t)
-                & (pdf["split"].to_numpy() == last_s)
-            )
-            # count the contiguous trailing True run
-            flipped = tail_mask[::-1]
-            n_tail = int(np.argmin(flipped)) if not flipped.all() else n
-            head = pdf.iloc[: n - n_tail]
-            carry = pdf.iloc[n - n_tail :]
-            if len(head):
-                rows: list = []
-                _pack_frame(head, keep_positions, rows)
-                yield _rows_frame(rows)
-        if carry is not None and len(carry):
-            rows = []
-            _pack_frame(carry, keep_positions, rows)
-            yield _rows_frame(rows)
-
-    return run
+    bounds = np.concatenate(([0], change, [len(doc)]))
+    runs = encode_blocks(
+        doc,
+        tf,
+        nb,
+        bounds,
+        block_size=None,
+        positions=None if positions is None else encode_positions(
+            positions, tf
+        ),
+    )
+    starts = bounds[:-1]
+    return _block_rows(
+        runs, uniques[codes[starts]], np.full(len(starts), -1)
+    )
 
 
 FLUSH_POSTINGS = 2_000_000  # map-side flush threshold (16MB-RAM analogue)
@@ -262,27 +189,18 @@ def _invert_flush_partitions(split_range: int, keep_positions: bool):
 
     The whole path is FLAT-array vectorized end to end: tokenize_flat
     emits token-level numpy arrays (no per-doc Python), ONE lexsort
-    orders them (term, doc, pos), and the only Python loop is per
-    (term, split) RUN (~vocabulary-sized) — per-doc position lists are
-    never materialized, so flush cost is independent of doc count at
-    fixed token count. This is the hot kernel behind the north-rule
-    scaling numbers.
+    orders them (term, doc, pos), and codec.encode_blocks encodes every
+    run at once — per-doc position lists are never materialized, so
+    flush cost is independent of doc count at fixed token count.
     """
     from ..analysis.tokenizer import tokenize_flat
     from .norms import encode_norm
-    from .codec import encode_run
 
     def flush(parts: list[dict]) -> pd.DataFrame:
-        from .codec import varint_encode, varint_value_starts
-
-        if len(parts) > 1:
-            doc = np.concatenate([p["doc"] for p in parts])
-            term = np.concatenate([p["term"] for p in parts])
-            pos = np.concatenate([p["pos"] for p in parts])
-            nb = np.concatenate([p["nb"] for p in parts])
-        else:
-            p0 = parts[0]
-            doc, term, pos, nb = p0["doc"], p0["term"], p0["pos"], p0["nb"]
+        doc, term, pos, nb = (
+            np.concatenate([p[k] for p in parts])
+            for k in ("doc", "term", "pos", "nb")
+        )
         codes, uniques = pd.factorize(term, sort=False)
         # split = doc // split_range is monotone in doc, so sorting by
         # (code, doc, pos) makes every (term, split) run contiguous
@@ -290,89 +208,22 @@ def _invert_flush_partitions(split_range: int, keep_positions: bool):
         doc, pos, nb, codes = (
             doc[order], pos[order], nb[order], codes[order]
         )
-        splits = doc // split_range
-        n = len(doc)
-        # token-level run boundaries on (code, split)
-        run_change = np.flatnonzero(
-            (codes[1:] != codes[:-1]) | (splits[1:] != splits[:-1])
-        ) + 1
-        run_bounds = np.concatenate(([0], run_change, [n]))
-        # token-level doc boundaries (within runs; a doc never spans runs)
-        doc_change = np.flatnonzero(
-            (codes[1:] != codes[:-1]) | (doc[1:] != doc[:-1])
-        ) + 1
-        doc_starts = np.concatenate(([0], doc_change))
-        doc_ends = np.concatenate((doc_change, [n]))
-        tf_all = doc_ends - doc_starts  # per (doc, term) occurrence count
-        # doc-group-level arrays
-        dg_doc = doc[doc_starts]
-        dg_nb = nb[doc_starts]
-        n_dg = len(dg_doc)
-        # run boundaries in doc-group index space (runs align with
-        # doc-group boundaries by construction)
-        run_dg = np.searchsorted(doc_starts, run_bounds)
-        # BATCH ENCODE: varint streams concatenate, so ALL runs' gaps /
-        # tf / position deltas are encoded in ONE vectorized call each
-        # and sliced per run by value byte offsets — the Python loop
-        # below only slices bytes and assembles tuples (~2 us/run).
-        gaps = np.empty(n_dg, dtype=np.uint64)
-        if n_dg:
-            gaps[1:] = (dg_doc[1:] - dg_doc[:-1]).astype(np.uint64)
-        gaps[run_dg[:-1]] = 0
-        docs_stream = varint_encode(gaps)
-        d_off = np.append(
-            varint_value_starts(docs_stream), len(docs_stream)
-        )
-        tfs_stream = varint_encode((tf_all - 1).astype(np.uint64))
-        t_off = np.append(
-            varint_value_starts(tfs_stream), len(tfs_stream)
-        )
-        norms_stream = dg_nb.astype(np.uint8).tobytes()
-        if keep_positions:
-            deltas = np.empty(n, dtype=np.int64)
-            if n:
-                deltas[1:] = pos[1:] - pos[:-1]
-            deltas[doc_starts] = pos[doc_starts]  # absolute per doc
-            pos_stream = varint_encode(deltas.astype(np.uint64))
-            p_off = np.append(
-                varint_value_starts(pos_stream), len(pos_stream)
+        # one posting per (term, doc): its tokens are contiguous
+        starts = np.flatnonzero(
+            np.concatenate(
+                ([True], (codes[1:] != codes[:-1]) | (doc[1:] != doc[:-1]))
             )
-        # per-run metadata, vectorized
-        rs = run_dg[:-1]
-        first_doc = dg_doc[rs]
-        last_doc = dg_doc[run_dg[1:] - 1]
-        max_tf = np.maximum.reduceat(tf_all, rs)
-        sum_tf = np.add.reduceat(tf_all, rs)
-        min_nb = np.minimum.reduceat(dg_nb.astype(np.int64), rs)
-        num_docs = np.diff(run_dg)
-        terms_out = np.asarray(uniques, dtype=object)[
-            codes[run_bounds[:-1]]
-        ]
-        rows = []
-        for i in range(len(rs)):
-            ds, de = int(run_dg[i]), int(run_dg[i + 1])
-            if keep_positions:
-                ts, te = int(run_bounds[i]), int(run_bounds[i + 1])
-                pos_bin = pos_stream[int(p_off[ts]) : int(p_off[te])]
-            else:
-                pos_bin = None
-            rows.append(
-                (
-                    -1,  # bucket assigned by a Catalyst column afterwards
-                    terms_out[i],
-                    int(num_docs[i]),
-                    int(first_doc[i]),
-                    int(last_doc[i]),
-                    int(max_tf[i]),
-                    int(min_nb[i]),  # placeholder; final min_nb on merge
-                    int(sum_tf[i]),
-                    docs_stream[int(d_off[ds]) : int(d_off[de])],
-                    tfs_stream[int(t_off[ds]) : int(t_off[de])],
-                    norms_stream[ds:de],
-                    pos_bin,
-                )
-            )
-        return _rows_frame(rows)
+        )
+        tf = np.diff(np.append(starts, len(doc)))
+        return _partial_runs(
+            np.asarray(uniques, dtype=object),
+            codes[starts],
+            doc[starts],
+            tf,
+            nb[starts],
+            pos if keep_positions else None,
+            split_range,
+        )
 
     def run_udf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         accum: list = []
@@ -400,247 +251,94 @@ def _invert_flush_partitions(split_range: int, keep_positions: bool):
     return run_udf
 
 
-# rank of each norm byte's decoded quantized dl (ties by byte value):
-# min-rank within a block gives the byte that minimizes the BM25
-# denominator addend under ANY avgdl (same argument as _pack_run)
-_NB_RANK = np.argsort(np.argsort(NORM_TABLE, kind="stable"), kind="stable")
-_BYTE_OF_RANK = np.argsort(_NB_RANK, kind="stable")
+def _encode_flat_partitions(split_range: int, keep_positions: bool):
+    """Map side of write_segments: each Arrow batch of flat postings
+    (doc_id, term, tf, norm_byte, positions) sorted by (term, doc_id)
+    and flushed as partial runs, like a tokenize flush."""
+
+    def run_udf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            codes, uniques = pd.factorize(pdf["term"], sort=False)
+            doc = pdf["doc_id"].to_numpy(dtype=np.int64)
+            order = np.lexsort((doc, codes))
+            yield _partial_runs(
+                np.asarray(uniques, dtype=object),
+                codes[order],
+                doc[order],
+                pdf["tf"].to_numpy(dtype=np.int64)[order],
+                pdf["norm_byte"].to_numpy(dtype=np.int64)[order],
+                np.concatenate(pdf["positions"].to_numpy()[order])
+                if keep_positions
+                else None,
+                split_range,
+            )
+
+    return run_udf
 
 
-def _merge_partials_stream(
-    split_range: int, keep_positions: bool, stats_dir: str | None = None
-):
+def _merge_partials_stream(split_range: int, keep_positions: bool):
     """Reducer: rows hash-partitioned by (term, split) and sorted by
     (term, first_doc) — each (term, split) group's partial runs are
-    contiguous. BATCH re-block (SegmentMerger.mergeTerms analogue):
-    at Zipfian vocabularies most groups hold a handful of docs, so a
-    per-group numpy loop pays ~350 us of call overhead per TERM; here
-    the whole Arrow frame is decoded with ONE varint_decode per stream,
-    doc-sorted with ONE global in-group lexsort (only when map-task doc
-    ranges interleaved), and re-encoded with ONE varint_encode per
-    stream, sliced per block by value byte offsets. Positions are
-    byte-sliced per doc, never decoded (each doc's sub-stream starts
-    with an absolute position — encode_run).
+    contiguous. BATCH re-block (SegmentMerger.mergeTerms analogue,
+    lucene/core/.../index/SegmentMerger.java:91-115): at Zipfian
+    vocabularies most groups hold a handful of docs, so the whole Arrow
+    frame is decoded in one codec.decode_blocks call, doc-sorted with
+    ONE global in-group lexsort (only when map-task doc ranges
+    interleaved), and re-encoded into BLOCK_SIZE blocks by one
+    codec.encode_blocks call. Positions are byte-sliced per doc, never
+    decoded (each doc's sub-stream starts with an absolute position)."""
 
-    ``stats_dir``: when set, each reduce task ALSO writes its partial
-    (bucket, term, df, ttf) aggregate as a tiny parquet side file —
-    the Lucene shape, where the terms dict is written during segment
-    flush (lucene/core/.../index/FreqProxTermsWriter.java flush), not
-    by a post-pass re-reading the postings. The write is idempotent
-    under task retry/speculation: the task's input partition is
-    deterministic, the part is keyed by partitionId only, and it lands
-    via tmp-file + atomic rename (last writer wins with identical
-    bytes). Requires ``stats_dir`` on storage every executor can reach
-    — the same contract the manifest/doc-store paths already assume."""
-    from .codec import varint_decode, varint_encode, varint_value_starts
-
-    def pack_frame(
-        pdf: pd.DataFrame, rows: list, stats_acc: list | None = None
-    ) -> None:
+    def pack_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         terms_arr = pdf["term"].to_numpy()
         first_doc = pdf["first_doc"].to_numpy(dtype=np.int64)
         splits_arr = first_doc // split_range
         num_docs = pdf["num_docs"].to_numpy(dtype=np.int64)
-        buckets = pdf["bucket"].to_numpy(dtype=np.int64)
-        npart = len(pdf)
         change = np.flatnonzero(
             (terms_arr[1:] != terms_arr[:-1])
             | (splits_arr[1:] != splits_arr[:-1])
         ) + 1
-        p_bounds = np.concatenate(([0], change, [npart]))
+        p_starts = np.concatenate(([0], change))
 
         # ---- decode every partial in one shot ----
-        docs_cat = b"".join(pdf["docs_bin"])
-        tfs_cat = b"".join(pdf["tfs_bin"])
-        norms_cat = b"".join(pdf["norms_bin"])
-        total = int(num_docs.sum())
-        gaps = varint_decode(docs_cat, total).astype(np.int64)
-        tfs = varint_decode(tfs_cat, total).astype(np.int64) + 1
-        norms = np.frombuffer(norms_cat, dtype=np.uint8)
-        pd_starts = np.zeros(npart, dtype=np.int64)
-        np.cumsum(num_docs[:-1], out=pd_starts[1:])
-        pidx = np.repeat(np.arange(npart), num_docs)
-        g = np.cumsum(gaps)
-        docs = first_doc[pidx] + (g - g[pd_starts][pidx])
-
-        # group bounds in doc space
-        g_start_doc = pd_starts[p_bounds[:-1]]
-        g_bounds_doc = np.append(g_start_doc, total)
-        ngroups = len(g_start_doc)
-        grp_of_doc = np.repeat(
-            np.arange(ngroups), np.diff(g_bounds_doc)
-        )
-
+        decoded = decode_blocks(_arrow_blocks(pdf, _DECODE_COLUMNS), False)
+        docs = decoded["doc_id"].to_numpy()
+        tfs = decoded["tf"].to_numpy().astype(np.int64)
+        norms = decoded["norm_byte"].to_numpy().astype(np.uint8)
+        total = len(docs)
+        row_start = np.zeros(len(pdf) + 1, dtype=np.int64)
+        np.cumsum(num_docs, out=row_start[1:])
+        g_bounds = row_start[np.append(p_starts, len(pdf))]
+        positions = None
         if keep_positions:
             pos_cat = b"".join(x or b"" for x in pdf["pos_bin"])
-            tok_off = np.append(
-                varint_value_starts(pos_cat), len(pos_cat)
-            )
-            tf_cum = np.zeros(total + 1, dtype=np.int64)
-            np.cumsum(tfs, out=tf_cum[1:])
-            # per-doc position byte spans (relocatable)
-            span_lo = tok_off[tf_cum[:-1]]
-            span_hi = tok_off[tf_cum[1:]]
+            positions = (pos_cat, *position_spans(pos_cat, tfs))
 
         # ---- repair interleaved map-task doc ranges (one lexsort) ----
         inner = np.ones(total, dtype=bool)
-        inner[g_start_doc] = False  # group-start positions excluded
-        needs_sort = bool(
-            total > 1 and np.any((np.diff(docs) <= 0) & inner[1:])
-        )
-        if needs_sort:
+        inner[g_bounds[:-1]] = False  # group-start positions excluded
+        if total > 1 and np.any((np.diff(docs) <= 0) & inner[1:]):
+            grp_of_doc = np.repeat(
+                np.arange(len(p_starts)), np.diff(g_bounds)
+            )
             order = np.lexsort((docs, grp_of_doc))
-            docs = docs[order]
-            tfs = tfs[order]
-            norms = norms[order]
-            if keep_positions:
-                span_lo = span_lo[order]
-                span_hi = span_hi[order]
+            docs, tfs, norms = docs[order], tfs[order], norms[order]
+            if positions is not None:
+                pos_cat, lo, hi = positions
+                positions = (pos_cat, lo[order], hi[order])
 
-        # ---- re-block: every group cut into BLOCK_SIZE blocks ----
-        glen = np.diff(g_bounds_doc)
-        if stats_acc is not None:
-            # per-(term,split) group df/ttf — summed per task below, so
-            # terms_stats needs no post-pass over the postings store
-            stats_acc.append(
-                pd.DataFrame(
-                    {
-                        "bucket": buckets[p_bounds[:-1]],
-                        "term": terms_arr[p_bounds[:-1]],
-                        "df": glen,
-                        "ttf": np.add.reduceat(tfs, g_start_doc),
-                    }
-                )
-            )
-        nb_per_group = (glen + BLOCK_SIZE - 1) // BLOCK_SIZE
-        nblocks = int(nb_per_group.sum())
-        block_group = np.repeat(np.arange(ngroups), nb_per_group)
-        nb_excl = np.zeros(ngroups, dtype=np.int64)
-        np.cumsum(nb_per_group[:-1], out=nb_excl[1:])
-        within = np.arange(nblocks) - nb_excl[block_group]
-        b_start = g_start_doc[block_group] + within * BLOCK_SIZE
-        b_end = np.minimum(
-            b_start + BLOCK_SIZE, g_bounds_doc[1:][block_group]
+        blocks = encode_blocks(
+            docs, tfs, norms, g_bounds, BLOCK_SIZE, positions
         )
-
-        # ---- encode all blocks' streams in one call each ----
-        new_gaps = np.empty(total, dtype=np.int64)
-        if total > 1:
-            new_gaps[1:] = docs[1:] - docs[:-1]
-        new_gaps[b_start] = 0
-        docs_stream = varint_encode(new_gaps.astype(np.uint64))
-        d_off = np.append(
-            varint_value_starts(docs_stream), len(docs_stream)
+        return _block_rows(
+            blocks,
+            terms_arr[p_starts],
+            pdf["bucket"].to_numpy(dtype=np.int64)[p_starts],
         )
-        tfs_stream = varint_encode((tfs - 1).astype(np.uint64))
-        t_off = np.append(
-            varint_value_starts(tfs_stream), len(tfs_stream)
-        )
-        norms_stream = norms.tobytes()
-
-        # ---- per-block metadata, vectorized ----
-        first_b = docs[b_start]
-        last_b = docs[b_end - 1]
-        max_tf = np.maximum.reduceat(tfs, b_start)
-        sum_tf = np.add.reduceat(tfs, b_start)
-        min_rank = np.minimum.reduceat(
-            _NB_RANK[norms.astype(np.int64)], b_start
-        )
-        min_nb = _BYTE_OF_RANK[min_rank]
-        term_b = terms_arr[p_bounds[:-1]][block_group]
-        bucket_b = buckets[p_bounds[:-1]][block_group]
-        ndocs_b = b_end - b_start
-
-        if keep_positions and needs_sort:
-            # positions must follow the doc permutation: rebuild the
-            # buffer from permuted per-doc spans (Python slicing loop,
-            # only on interleaved frames)
-            pos_cat = b"".join(
-                pos_cat[int(a) : int(b)]
-                for a, b in zip(span_lo, span_hi)
-            )
-            lens = span_hi - span_lo
-            span_lo = np.zeros(total, dtype=np.int64)
-            np.cumsum(lens[:-1], out=span_lo[1:])
-            span_hi = span_lo + lens
-
-        for i in range(nblocks):
-            ds, de = int(b_start[i]), int(b_end[i])
-            pos_bin = None
-            if keep_positions:
-                pos_bin = pos_cat[
-                    int(span_lo[ds]) : int(span_hi[de - 1])
-                ]
-            rows.append(
-                (
-                    int(bucket_b[i]),
-                    term_b[i],
-                    int(ndocs_b[i]),
-                    int(first_b[i]),
-                    int(last_b[i]),
-                    int(max_tf[i]),
-                    int(min_nb[i]),
-                    int(sum_tf[i]),
-                    docs_stream[int(d_off[ds]) : int(d_off[de])],
-                    tfs_stream[int(t_off[ds]) : int(t_off[de])],
-                    norms_stream[ds:de],
-                    pos_bin,
-                )
-            )
-
-    def _flush_stats(stats_acc: list) -> None:
-        """Write this task's (bucket, term, df, ttf) partial aggregate
-        as one tiny parquet side file (tmp + atomic rename; content is
-        canonical-sorted so retries produce identical bytes)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        if stats_acc:
-            sdf = (
-                pd.concat(stats_acc, ignore_index=True)
-                .groupby(["bucket", "term"], as_index=False)
-                .sum()
-                .sort_values(["bucket", "term"], ignore_index=True)
-            )
-        else:
-            sdf = pd.DataFrame(
-                {
-                    "bucket": pd.Series([], dtype="int64"),
-                    "term": pd.Series([], dtype="object"),
-                    "df": pd.Series([], dtype="int64"),
-                    "ttf": pd.Series([], dtype="int64"),
-                }
-            )
-        # explicit schema: an empty object Series would otherwise be
-        # inferred as a `term: null` parquet column, which conflicts
-        # with populated parts' `term: string` at read time and crashes
-        # the multi-part stats read on any empty reduce partition
-        stats_schema = pa.schema(
-            [
-                ("bucket", pa.int64()),
-                ("term", pa.string()),
-                ("df", pa.int64()),
-                ("ttf", pa.int64()),
-            ]
-        )
-        os.makedirs(stats_dir, exist_ok=True)
-        tmp = os.path.join(
-            stats_dir, f".part-{pid:05d}-{os.getpid()}.tmp"
-        )
-        pq.write_table(
-            pa.Table.from_pandas(
-                sdf, schema=stats_schema, preserve_index=False
-            ),
-            tmp,
-        )
-        os.replace(tmp, os.path.join(stats_dir, f"part-{pid:05d}.parquet"))
 
     def run_udf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None
-        stats_acc: list | None = [] if stats_dir is not None else None
         for pdf in batches:
             if carry is not None and len(carry):
                 pdf = pd.concat([carry, pdf], ignore_index=True)
@@ -648,6 +346,8 @@ def _merge_partials_stream(
             n = len(pdf)
             if n == 0:
                 continue
+            # the last (term, split) group may continue in the next
+            # batch — hold it back
             last_t = pdf["term"].iloc[-1]
             last_s = int(pdf["first_doc"].iloc[-1]) // split_range
             tail_mask = (
@@ -660,19 +360,147 @@ def _merge_partials_stream(
             flipped = tail_mask[::-1]
             n_tail = int(np.argmin(flipped)) if not flipped.all() else n
             head = pdf.iloc[: n - n_tail]
-            carry = pdf.iloc[n - n_tail :]
+            carry = pdf.iloc[n - n_tail :].reset_index(drop=True)
             if len(head):
-                rows: list = []
-                pack_frame(head, rows, stats_acc)
-                yield _rows_frame(rows)
+                yield pack_frame(head)
         if carry is not None and len(carry):
-            rows = []
-            pack_frame(carry, rows, stats_acc)
-            yield _rows_frame(rows)
-        if stats_acc is not None:
-            _flush_stats(stats_acc)
+            yield pack_frame(carry)
 
     return run_udf
+
+
+def _new_manifest(
+    n_buckets: int, keep_positions: bool, split_range: int
+) -> dict:
+    """Generation 0 of a store: no bucket committed, stats filled in by
+    _commit_store."""
+    return {
+        "generation": 0,
+        "n_buckets": n_buckets,
+        "block_size": BLOCK_SIZE,
+        "split_range": split_range,
+        "keep_positions": keep_positions,
+        "max_doc": 0,
+        "sum_total_term_freq": 0,
+        "avgdl": 0.0,
+        "buckets": {},
+    }
+
+
+def _append_blocks(
+    blocks: DataFrame, index_dir: str, manifest: dict, buckets: list[int]
+) -> None:
+    """Append ``blocks`` (SEGMENT_SCHEMA, only ``buckets``) to the
+    bucket-partitioned postings store and record each bucket's block
+    count in ``manifest``, counted DURING the write job — no read-back
+    pass over the store."""
+    obs = Observation()
+    (
+        blocks.observe(
+            obs,
+            *[
+                F.sum(F.when(F.col("bucket") == b, 1).otherwise(0)).alias(
+                    f"b{b}"
+                )
+                for b in buckets
+            ],
+        )
+        .write.mode("append")
+        .partitionBy("bucket")
+        .parquet(f"{index_dir}/postings")
+    )
+    observed = obs.get
+    for b in buckets:
+        manifest["buckets"][str(b)] = {
+            "blocks": int(observed.get(f"b{b}") or 0),
+            "committed_at_gen": manifest["generation"] + 1,
+        }
+
+
+def _write_postings(
+    index_dir: str, manifest: dict, partials: DataFrame
+) -> bool:
+    """Merge ``partials`` (partial runs, SEGMENT_SCHEMA) into the store's
+    blocks for every bucket ``manifest`` has not committed; False when
+    none is left.
+
+    ONE full-width shuffle keyed by (term, split): the doc-range split
+    both salts skewed high-df terms across reducers AND keeps every
+    reducer's task count = spark.sql.shuffle.partitions. Buckets are
+    resumable: a crash may have left partial directories for unfinished
+    buckets (data files without a manifest entry), which are removed so
+    the rebuild is idempotent, like UpdateLog replay discarding an
+    uncommitted tlog tail."""
+    import shutil
+
+    n_buckets = manifest["n_buckets"]
+    split_range = manifest["split_range"]
+    todo = [b for b in range(n_buckets) if str(b) not in manifest["buckets"]]
+    if not todo:
+        return False
+    for b in todo:
+        shutil.rmtree(f"{index_dir}/postings/bucket={b}", ignore_errors=True)
+    partials = partials.withColumn(
+        "bucket", _bucket_col(F.col("term"), n_buckets)
+    )
+    if len(todo) < n_buckets:
+        partials = partials.where(F.col("bucket").isin(todo))
+    split_expr = (F.col("first_doc") / F.lit(split_range)).cast("long")
+    packed = (
+        partials.repartition(split_expr, F.col("term"))
+        .sortWithinPartitions("term", "first_doc")
+        .mapInPandas(
+            _merge_partials_stream(split_range, manifest["keep_positions"]),
+            SEGMENT_SCHEMA,
+        )
+    )
+    _append_blocks(packed, index_dir, manifest, todo)
+    return True
+
+
+def _commit_store(
+    spark: SparkSession,
+    index_dir: str,
+    manifest: dict,
+    phases: dict | None = None,
+) -> "SegmentIndex":
+    """The one tail of every store writer: ``terms_stats`` from the block
+    METADATA (df = Σ num_docs, ttf = Σ sum_tf per (term, bucket) —
+    parquet column pruning never touches the binary block columns),
+    ``max_doc`` from the doc store, ``sum_total_term_freq`` from those
+    stats (summed as they are written), then the two-phase manifest
+    commit. Stats cover every
+    committed bucket, resumed ones included. This is the Lucene shape:
+    stats live in the segment files, not in a separate corpus pass
+    (SegmentInfos / TermContext accumulation). ``phases`` (seconds per
+    build phase) is recorded with this tail's own two."""
+    phases = dict(phases or {})
+    t0 = time.perf_counter()
+    obs = Observation()
+    (
+        spark.read.parquet(f"{index_dir}/postings")
+        .groupBy("term", "bucket")
+        .agg(
+            F.sum("num_docs").cast("long").alias("df"),
+            F.sum("sum_tf").cast("long").alias("ttf"),
+        )
+        .select("term", "df", "ttf", "bucket")
+        .observe(obs, F.sum("ttf").alias("sum_ttf"))
+        .write.mode("overwrite")
+        .parquet(f"{index_dir}/terms_stats")
+    )
+    sum_ttf = int(obs.get.get("sum_ttf") or 0)
+    t1 = time.perf_counter()
+    phases["terms_stats"] = round(t1 - t0, 3)
+    max_doc = spark.read.parquet(f"{index_dir}/docs").count()
+    phases["stats"] = round(time.perf_counter() - t1, 3)
+    manifest["max_doc"] = int(max_doc)
+    manifest["sum_total_term_freq"] = sum_ttf
+    manifest["avgdl"] = float(avg_field_length(sum_ttf, max_doc))
+    manifest["build_phase_sec"] = phases  # north-rule metrics: per-phase
+    manifest["generation"] += 1
+    commit_manifest(index_dir, manifest)
+    return SegmentIndex.open(spark, index_dir)
 
 
 def write_segments(
@@ -680,103 +508,28 @@ def write_segments(
     index_dir: str,
     n_buckets: int = 16,
     keep_positions: bool = True,
-    resume: bool = True,
     split_range: int = SPLIT_RANGE,
 ) -> "SegmentIndex":
-    """Persist ``index`` as a segment store. With ``resume=True``, buckets
-    already recorded in the manifest are skipped (kill-and-resume)."""
+    """Persist ``index`` as a segment store. The flat postings are the
+    second source of partial runs (each Arrow batch sorted and flushed
+    map-side); from there it is build_segment_store's path: one shuffle
+    and merge into blocks, resumable per bucket (buckets already in the
+    manifest are skipped), and the shared stats-and-commit tail."""
     os.makedirs(index_dir, exist_ok=True)
-    spark = index.spark
     manifest = read_manifest(index_dir)
-    done: set[int] = set(manifest["buckets"]) if manifest else set()
-    avgdl = avg_field_length(
-        index.stats.sum_total_term_freq, index.stats.max_doc
-    )
-
     if manifest is None:
-        # doc store + stats written once up front (cheap vs postings)
         index.docs.write.mode("overwrite").parquet(f"{index_dir}/docs")
-        (
-            index.terms_stats.withColumn(
-                "bucket", _bucket_col(F.col("term"), n_buckets)
-            )
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/terms_stats")
-        )
-        manifest = {
-            "generation": 0,
-            "n_buckets": n_buckets,
-            "block_size": BLOCK_SIZE,
-            "split_range": split_range,
-            "keep_positions": keep_positions,
-            "max_doc": index.stats.max_doc,
-            "sum_total_term_freq": index.stats.sum_total_term_freq,
-            "avgdl": float(avgdl),
-            "buckets": {},
-        }
-    else:
-        n_buckets = manifest["n_buckets"]
-        keep_positions = manifest["keep_positions"]
-        split_range = manifest.get("split_range", SPLIT_RANGE)
-
-    todo = [b for b in range(n_buckets) if b not in done and str(b) not in done]
-    if todo:
-        # A crash may have left partial partition dirs for unfinished
-        # buckets (data files without a manifest entry) — remove them so
-        # the rebuild is idempotent, like UpdateLog replay discarding
-        # uncommitted tlog tail.
-        import shutil
-
-        for b in todo:
-            part_dir = f"{index_dir}/postings/bucket={b}"
-            if os.path.isdir(part_dir):
-                shutil.rmtree(part_dir)
-        flat = index.postings.withColumn(
-            "bucket", _bucket_col(F.col("term"), n_buckets)
-        )
-        if len(todo) < n_buckets:
-            flat = flat.where(F.col("bucket").isin(todo))
-        flat = flat.withColumn(
-            "split", (F.col("doc_id") / F.lit(split_range)).cast("long")
-        )
-        # ONE full-width shuffle keyed by (term, split): the doc-range
-        # split both salts skewed high-df terms across reducers AND keeps
-        # every reducer's task count = spark.sql.shuffle.partitions (the
-        # old per-bucket repartition capped parallelism at n_buckets).
-        shuffled = flat.repartition("term", "split").sortWithinPartitions(
-            "term", "split", "doc_id"
-        )
-        packed = shuffled.mapInPandas(
-            _pack_stream(keep_positions), SEGMENT_SCHEMA
-        )
-        # per-bucket block counts observed DURING the write job — no
-        # second read-back pass over the store
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        packed = packed.observe(
-            obs,
-            *[
-                F.sum(
-                    F.when(F.col("bucket") == b, 1).otherwise(0)
-                ).alias(f"b{b}")
-                for b in todo
-            ],
-        )
-        (
-            packed.write.mode("append")
-            .partitionBy("bucket")
-            .parquet(f"{index_dir}/postings")
-        )
-        observed = obs.get
-        for b in todo:
-            manifest["buckets"][str(b)] = {
-                "blocks": int(observed.get(f"b{b}") or 0),
-                "committed_at_gen": manifest["generation"] + 1,
-            }
-    manifest["generation"] += 1
-    commit_manifest(index_dir, manifest)
-    return SegmentIndex.open(spark, index_dir)
+        manifest = _new_manifest(n_buckets, keep_positions, split_range)
+    keep_positions = manifest["keep_positions"]
+    cols = ["doc_id", "term", "tf", "norm_byte"]
+    partials = index.postings.select(
+        *cols, *(["positions"] if keep_positions else [])
+    ).mapInPandas(
+        _encode_flat_partitions(manifest["split_range"], keep_positions),
+        SEGMENT_SCHEMA,
+    )
+    _write_postings(index_dir, manifest, partials)
+    return _commit_store(index.spark, index_dir, manifest)
 
 
 def build_segment_store(
@@ -791,27 +544,28 @@ def build_segment_store(
 ) -> "SegmentIndex":
     """End-to-end segment build with a SINGLE tokenize pass.
 
-    Contrast with build_index + write_segments (3 inversion passes:
-    stats agg, terms_stats write, pack): here the numbered doc store is
-    materialized first, the pack pass is the only inversion, and both
-    terms_stats and the collection stats are derived afterwards from
-    block METADATA only (df = Σ num_docs, ttf = Σ sum_tf per term —
-    parquet column pruning never touches the binary block columns).
-    This is the Lucene shape too: stats live in the segment files, not
-    in a separate corpus pass (SegmentInfos / TermContext accumulation).
+    The numbered doc store is materialized first; the tokenize flush
+    (map-side partial runs) feeding the merge is the only inversion, and
+    both terms_stats and the collection stats are derived afterwards
+    from block metadata by the shared _commit_store tail. Contrast with
+    build_index + write_segments, which inverts once for the flat
+    postings and flushes those.
 
     Resume-safe at bucket granularity like write_segments: stats are
     recomputed from the on-disk blocks, so they cover buckets committed
-    by a previous crashed run."""
-    import time as _time
-
+    by a previous crashed run. ``split_range`` None is SPLIT_RANGE, the
+    doc-range salt of the merge shuffle: partial runs are binary, so a
+    Zipf-head term's whole group is a cheap vectorized merge and the
+    salt only has to bound group size in memory."""
     phases: dict[str, float] = {}
+    t = time.perf_counter()
 
-    def _mark(name: str, t0: float) -> float:
-        phases[name] = round(_time.perf_counter() - t0, 3)
-        return _time.perf_counter()
+    def mark(name: str) -> None:
+        nonlocal t
+        now = time.perf_counter()
+        phases[name] = round(now - t, 3)
+        t = now
 
-    _t = _time.perf_counter()
     os.makedirs(index_dir, exist_ok=True)
     manifest = read_manifest(index_dir)
     if manifest is None:
@@ -821,183 +575,27 @@ def build_segment_store(
             docs = assign_doc_ids(
                 docs, order_cols or ["conv_id", "turn_idx"]
             )
-        _t = _mark("plan_docids", _t)
+        mark("plan_docids")
         docs.write.mode("overwrite").parquet(f"{index_dir}/docs")
-        _t = _mark("docs_write", _t)
-        manifest = {
-            "generation": 0,
-            "n_buckets": n_buckets,
-            "block_size": BLOCK_SIZE,
-            "split_range": split_range,
-            "keep_positions": keep_positions,
-            "max_doc": 0,  # filled from the doc store below
-            "sum_total_term_freq": 0,  # filled from block metadata below
-            "avgdl": 0.0,
-            "buckets": {},
-        }
-    else:
-        n_buckets = manifest["n_buckets"]
-        keep_positions = manifest["keep_positions"]
-        split_range = manifest.get("split_range", SPLIT_RANGE)
-    stored = spark.read.parquet(f"{index_dir}/docs")
-    n_docs = stored.count()  # parquet footer count — metadata-only
-
-    if split_range is None:
-        # Doc-range salt for the pack shuffle. With map-side flush the
-        # shuffle rows are binary partial RUNS (not per-posting rows), so
-        # a Zipf-head term's whole group is a cheap vectorized merge —
-        # the salt only has to bound group size in memory, hence the
-        # coarse default (2^20 docs ≈ one group few MB even at tf-heavy
-        # fields). Salt granularity is therefore independent of
-        # parallelism, and rare-term blocks never fragment.
-        split_range = SPLIT_RANGE
-        manifest["split_range"] = split_range
-
-    done: set[str] = set(manifest["buckets"])
-    todo = [b for b in range(n_buckets) if str(b) not in done]
-    # Fresh full build: reduce tasks side-write their partial term stats
-    # (see _merge_partials_stream) so terms_stats derives from a tiny
-    # parts scan instead of a post-pass over the whole postings store.
-    # A resumed build mixes generations in the parts dir, so it falls
-    # back to the metadata read-back (which covers resumed buckets).
-    full_build = len(todo) == n_buckets
-    stats_dir = f"{index_dir}/_term_stats_parts"
-    stats_from_parts = False
-    sum_ttf: int | None = None
-    if todo:
-        import shutil
-
-        for b in todo:
-            part_dir = f"{index_dir}/postings/bucket={b}"
-            if os.path.isdir(part_dir):
-                shutil.rmtree(part_dir)
-        if os.path.isdir(stats_dir):
-            shutil.rmtree(stats_dir)
-        src_df = stored.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col(text_col).cast("string").alias("text"),
+        mark("docs_write")
+        manifest = _new_manifest(
+            n_buckets,
+            keep_positions,
+            SPLIT_RANGE if split_range is None else split_range,
         )
-        # map-side DWPT flush: per-partition partial posting runs (binary,
-        # one row per (term, split) per flush) -> ~30x fewer, object-free
-        # shuffle rows vs per-(doc,term) postings
-        partials = src_df.mapInPandas(
-            _invert_flush_partitions(split_range, keep_positions),
-            SEGMENT_SCHEMA,
-        ).withColumn("bucket", _bucket_col(F.col("term"), n_buckets))
-        if len(todo) < n_buckets:
-            partials = partials.where(F.col("bucket").isin(todo))
-        split_expr = (
-            F.col("first_doc") / F.lit(split_range)
-        ).cast("long")
-        shuffled = partials.repartition(
-            split_expr, F.col("term")
-        ).sortWithinPartitions("term", "first_doc")
-        packed = shuffled.mapInPandas(
-            _merge_partials_stream(
-                split_range,
-                keep_positions,
-                stats_dir=stats_dir if full_build else None,
-            ),
-            SEGMENT_SCHEMA,
-        )
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        packed = packed.observe(
-            obs,
-            F.sum("num_docs").alias("nd_total"),
-            F.sum("sum_tf").alias("tf_total"),
-            *[
-                F.sum(
-                    F.when(F.col("bucket") == b, 1).otherwise(0)
-                ).alias(f"b{b}")
-                for b in todo
-            ],
-        )
-        (
-            packed.write.mode("append")
-            .partitionBy("bucket")
-            .parquet(f"{index_dir}/postings")
-        )
-        observed = obs.get
-        for b in todo:
-            manifest["buckets"][str(b)] = {
-                "blocks": int(observed.get(f"b{b}") or 0),
-                "committed_at_gen": manifest["generation"] + 1,
-            }
-        _t = _mark("pack_write", _t)
-
-        if full_build and os.path.isdir(stats_dir):
-            # validate the side parts against totals observed during
-            # the SAME write job; any mismatch (lost part file) falls
-            # back to the read-back path
-            parts = spark.read.parquet(stats_dir)
-            agg = parts.agg(
-                F.sum("df").alias("df"), F.sum("ttf").alias("ttf")
-            ).collect()[0]
-            if int(agg["df"] or 0) == int(
-                observed.get("nd_total") or 0
-            ) and int(agg["ttf"] or 0) == int(
-                observed.get("tf_total") or 0
-            ):
-                (
-                    parts.groupBy("term", "bucket")
-                    .agg(
-                        F.sum("df").alias("df"),
-                        F.sum("ttf").alias("ttf"),
-                    )
-                    .select(
-                        "term",
-                        "df",
-                        "ttf",
-                        F.col("bucket").cast("int").alias("bucket"),
-                    )
-                    .write.mode("overwrite")
-                    .parquet(f"{index_dir}/terms_stats")
-                )
-                sum_ttf = int(observed.get("tf_total") or 0)
-                stats_from_parts = True
-        # the parts only feed terms_stats: valid or not, they are dead
-        # bytes once it is written
-        shutil.rmtree(stats_dir, ignore_errors=True)
-
-    if not stats_from_parts:
-        # stats + terms_stats from block metadata (covers resumed buckets)
-        blocks_meta = spark.read.parquet(f"{index_dir}/postings").select(
-            "bucket", "term", "num_docs", "sum_tf"
-        )
-        (
-            blocks_meta.groupBy("term", "bucket")
-            .agg(
-                F.sum("num_docs").alias("df"),
-                F.sum("sum_tf").alias("ttf"),
-            )
-            .select("term", "df", "ttf", "bucket")
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/terms_stats")
-        )
-    _t = _mark("terms_stats", _t)
-    if sum_ttf is None:
-        ts = spark.read.parquet(f"{index_dir}/terms_stats")
-        sum_ttf = int(ts.agg(F.sum("ttf")).collect()[0][0] or 0)
-    max_doc = n_docs
-    _t = _mark("stats", _t)
-    manifest["max_doc"] = int(max_doc)
-    manifest["sum_total_term_freq"] = sum_ttf
-    manifest["avgdl"] = float(
-        avg_field_length(sum_ttf, max_doc)
+    src = spark.read.parquet(f"{index_dir}/docs").select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col(text_col).cast("string").alias("text"),
     )
-    manifest["generation"] += 1
-    # which path wrote terms_stats: the reduce tasks' validated side
-    # parts, or the read-back of the block metadata
-    manifest["terms_stats_from"] = (
-        "side_parts" if stats_from_parts else "block_metadata"
+    partials = src.mapInPandas(
+        _invert_flush_partitions(
+            manifest["split_range"], manifest["keep_positions"]
+        ),
+        SEGMENT_SCHEMA,
     )
-    manifest["build_phase_sec"] = phases  # north-rule metrics: per-phase
-    commit_manifest(index_dir, manifest)
-    if os.environ.get("LSS_BUILD_TIMINGS"):
-        print("BUILD_PHASES", json.dumps(phases))
-    return SegmentIndex.open(spark, index_dir)
+    if _write_postings(index_dir, manifest, partials):
+        mark("pack_write")
+    return _commit_store(spark, index_dir, manifest, phases)
 
 
 def commit_manifest(index_dir: str, manifest: dict) -> None:
@@ -1062,21 +660,27 @@ _DECODE_COLUMNS = ["term", "first_doc", "num_docs", "docs_bin", "tfs_bin",
                    "norms_bin"]
 
 
+_ARROW_SEGMENT_SCHEMA = to_arrow_schema(SEGMENT_SCHEMA)
+
+
+def _arrow_blocks(pdf: pd.DataFrame, cols: list[str]) -> pa.Table:
+    """The ``cols`` of a pandas batch of block rows as the Arrow table
+    codec.decode_blocks reads."""
+    return pa.Table.from_pandas(
+        pdf[cols],
+        schema=pa.schema([_ARROW_SEGMENT_SCHEMA.field(c) for c in cols]),
+        preserve_index=False,
+    )
+
+
 def _decode_partitions(want_positions: bool):
     """mapInPandas body: each batch of block rows decoded at once by
     codec.decode_blocks."""
     cols = _DECODE_COLUMNS + (["pos_bin"] if want_positions else [])
-    schema = to_arrow_schema(SEGMENT_SCHEMA)
-    schema = pa.schema([schema.field(c) for c in cols])
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield decode_blocks(
-                pa.Table.from_pandas(
-                    pdf[cols], schema=schema, preserve_index=False
-                ),
-                want_positions,
-            )
+            yield decode_blocks(_arrow_blocks(pdf, cols), want_positions)
 
     return decode
 

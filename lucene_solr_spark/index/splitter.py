@@ -26,6 +26,7 @@ over the same doc subset (pinned by tests/test_splitter.py).
 from __future__ import annotations
 
 import os
+import shutil
 from typing import Callable, Iterator
 
 import numpy as np
@@ -33,16 +34,17 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..search.bm25 import avg_field_length
-from .codec import BLOCK_SIZE, decode_block
+from .codec import BLOCK_SIZE, decode_blocks, encode_blocks, position_spans
 from .segments import (
+    _DECODE_COLUMNS,
     SEGMENT_SCHEMA,
     SPLIT_RANGE,
     SegmentIndex,
-    _bucket_col,
-    _pack_run,
-    _rows_frame,
-    commit_manifest,
+    _append_blocks,
+    _arrow_blocks,
+    _block_rows,
+    _commit_store,
+    _new_manifest,
 )
 
 # part-id column appended to SEGMENT_SCHEMA by the re-encode kernel.
@@ -56,44 +58,51 @@ _KERNEL_SCHEMA = StructType(
 )
 
 
-def _reencode_kernel(part_of_doc: Callable[[np.ndarray], np.ndarray]):
-    """mapInPandas kernel: decode each posting block, route its docs to
-    parts via ``part_of_doc`` (vectorized doc_id -> part id), re-encode
-    one run per (block, part). Block-at-a-time — bounded memory."""
+def _reencode_kernel(
+    part_of_doc: Callable[[np.ndarray], np.ndarray], keep_positions: bool
+):
+    """mapInPandas kernel: decode each batch of posting blocks at once
+    (codec.decode_blocks), route its docs to parts via ``part_of_doc``
+    (vectorized doc_id -> part id), and re-encode one run per
+    (block, part) with codec.encode_blocks. Positions move as per-doc
+    byte spans, never decoded. Batch-at-a-time — bounded memory."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: list = []
-            parts_out: list[int] = []
-            for r in pdf.itertuples(index=False):
-                doc_ids, tfs, norms, positions = decode_block(
-                    r.first_doc,
-                    r.num_docs,
-                    r.docs_bin,
-                    r.tfs_bin,
-                    r.norms_bin,
-                    r.pos_bin,
-                )
-                pids = part_of_doc(doc_ids)
-                for pid in np.unique(pids):
-                    m = pids == pid
-                    before = len(rows)
-                    _pack_run(
-                        r.term,
-                        int(r.bucket),
-                        doc_ids[m],
-                        tfs[m],
-                        norms[m].astype(np.uint8),
-                        [p for p, k in zip(positions, m) if k]
-                        if positions is not None
-                        else None,
-                        rows,
-                    )
-                    parts_out.extend([int(pid)] * (len(rows) - before))
-            if rows:
-                out = _rows_frame(rows)
-                out["part"] = pd.Series(parts_out, dtype="int32")
-                yield out
+            if not len(pdf):
+                continue
+            decoded = decode_blocks(_arrow_blocks(pdf, _DECODE_COLUMNS), False)
+            doc = decoded["doc_id"].to_numpy()
+            tf = decoded["tf"].to_numpy().astype(np.int64)
+            block = np.repeat(
+                np.arange(len(pdf)), pdf["num_docs"].to_numpy(dtype=np.int64)
+            )
+            part = part_of_doc(doc)
+            # stable: docs keep their order within each (block, part)
+            order = np.lexsort((part, block))
+            block, part = block[order], part[order]
+            change = (block[1:] != block[:-1]) | (part[1:] != part[:-1])
+            starts = np.flatnonzero(np.concatenate(([True], change)))
+            positions = None
+            if keep_positions:
+                pos_cat = b"".join(pdf["pos_bin"])
+                lo, hi = position_spans(pos_cat, tf)
+                positions = (pos_cat, lo[order], hi[order])
+            runs = encode_blocks(
+                doc[order],
+                tf[order],
+                decoded["norm_byte"].to_numpy()[order].astype(np.uint8),
+                np.append(starts, len(doc)),
+                BLOCK_SIZE,
+                positions,
+            )
+            runs["part"] = part[starts][runs["group"]].astype(np.int32)
+            src = block[starts]
+            yield _block_rows(
+                runs,
+                pdf["term"].to_numpy()[src],
+                pdf["bucket"].to_numpy(dtype=np.int64)[src],
+            )
 
     return run
 
@@ -105,54 +114,22 @@ def _write_part_store(
     docs: DataFrame,
     manifest_base: dict,
 ) -> SegmentIndex:
-    """Materialize one output store: postings (bucket-partitioned),
-    per-term stats re-aggregated from the part's own blocks, doc store,
-    recomputed collection stats, two-phase manifest."""
+    """Materialize one output store: postings (bucket-partitioned), the
+    doc store, then the shared stats-and-commit tail (per-term stats
+    re-aggregated from the part's own blocks, collection stats
+    recomputed, two-phase manifest)."""
     os.makedirs(out_dir, exist_ok=True)
-    (
-        blocks.write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{out_dir}/postings")
+    shutil.rmtree(f"{out_dir}/postings", ignore_errors=True)
+    manifest = _new_manifest(
+        manifest_base["n_buckets"],
+        manifest_base["keep_positions"],
+        manifest_base.get("split_range", SPLIT_RANGE),
     )
-    written = spark.read.parquet(f"{out_dir}/postings")
-    n_buckets = manifest_base["n_buckets"]
-    (
-        written.groupBy("term")
-        .agg(
-            F.sum("num_docs").cast("long").alias("df"),
-            F.sum("sum_tf").cast("long").alias("ttf"),
-        )
-        .withColumn("bucket", _bucket_col(F.col("term"), n_buckets))
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/terms_stats")
+    _append_blocks(
+        blocks, out_dir, manifest, list(range(manifest["n_buckets"]))
     )
     docs.write.mode("overwrite").parquet(f"{out_dir}/docs")
-    max_doc = spark.read.parquet(f"{out_dir}/docs").count()
-    sum_ttf = int(
-        spark.read.parquet(f"{out_dir}/terms_stats")
-        .agg(F.coalesce(F.sum("ttf"), F.lit(0)))
-        .first()[0]
-    )
-    per_bucket = {
-        str(r["bucket"]): {"blocks": int(r["n"]), "committed_at_gen": 1}
-        for r in written.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    manifest = {
-        "generation": 0,
-        "n_buckets": n_buckets,
-        "block_size": manifest_base.get("block_size", BLOCK_SIZE),
-        "split_range": manifest_base.get("split_range", SPLIT_RANGE),
-        "keep_positions": manifest_base["keep_positions"],
-        "max_doc": int(max_doc),
-        "sum_total_term_freq": sum_ttf,
-        "avgdl": float(avg_field_length(sum_ttf, max(int(max_doc), 1))),
-        "buckets": per_bucket,
-    }
-    manifest["generation"] = 1
-    commit_manifest(out_dir, manifest)
-    return SegmentIndex.open(spark, out_dir)
+    return _commit_store(spark, out_dir, manifest)
 
 
 def pk_split(
@@ -190,7 +167,7 @@ def pk_split(
         )
     re = straddle.mapInPandas(
         _reencode_kernel(
-            lambda d: (d >= mid).astype(np.int32)
+            lambda d: (d >= mid).astype(np.int32), man["keep_positions"]
         ),
         _KERNEL_SCHEMA,
     )
@@ -252,7 +229,9 @@ def multipass_split(
             return (col % F.lit(n)).cast("int")
 
     blocks = spark.read.parquet(f"{src_dir}/postings")
-    re = blocks.mapInPandas(_reencode_kernel(part_of), _KERNEL_SCHEMA)
+    re = blocks.mapInPandas(
+        _reencode_kernel(part_of, man["keep_positions"]), _KERNEL_SCHEMA
+    )
     re = re.localCheckpoint()  # one decode pass feeds all N writes
     docs = spark.read.parquet(f"{src_dir}/docs")
     seg_cols = [f.name for f in SEGMENT_SCHEMA.fields]

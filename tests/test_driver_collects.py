@@ -62,10 +62,8 @@ BOUNDED: dict[tuple[str, str], tuple[int, str]] = {
     ("index/segments.py", "DriverParquet.read"): (1, BOUNDED_FETCH),
     ("index/segments.py", "SegmentIndex._split_meta_rows"):
         (1, "block metadata of the query terms, memoized per term"),
-    ("index/segments.py", "build_segment_store"): (2, ONE_ROW),
     ("index/sorted_store.py", "build_sorted_store"):
         (1, "one row per sort bucket"),
-    ("index/splitter.py", "_write_part_store"): (1, "one row per bucket"),
     ("search/clustering.py", "_tfidf_vectors"): (1, "limit(n_vocab)"),
     ("search/complexphrase.py", "_slot_terms"):
         (1, "limit(MAX_BASIC_QUERIES + 1)"),

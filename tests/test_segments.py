@@ -267,6 +267,138 @@ def test_reblock_interleaved_runs_no_positions():
     _assert_batched_matches(_block_table(blocks), False)
 
 
+def _kernel_groups(rng, sizes, positions):
+    """One posting run per size: doc ids past 2^31 with gaps of 2^28 or
+    more (5+ varint bytes), tfs up to 300 (several bytes each, as are
+    the position deltas)."""
+    groups = []
+    for n in sizes:
+        docs = (1 << 31) + np.cumsum(
+            rng.integers(1 << 28, 1 << 30, size=n)
+        ).astype(np.int64)
+        tfs = rng.integers(1, 300, size=n).astype(np.int64)
+        norms = rng.integers(0, 256, size=n).astype(np.uint8)
+        poss = [
+            np.sort(rng.choice(1 << 20, size=int(t), replace=False))
+            for t in tfs
+        ] if positions else None
+        groups.append((docs, tfs, norms, poss))
+    return groups
+
+
+def _kernel_input(groups, positions):
+    from lucene_solr_spark.index.codec import encode_positions
+
+    def cat(i, dtype):
+        return np.concatenate(
+            [np.zeros(0, dtype)] + [g[i] for g in groups]
+        ).astype(dtype)
+
+    tf = cat(1, np.int64)
+    bounds = np.cumsum([0] + [len(g[0]) for g in groups])
+    pos = None
+    if positions:
+        flat = [p for g in groups for p in g[3]]
+        pos = encode_positions(
+            np.concatenate(flat) if flat else np.zeros(0, np.int64), tf
+        )
+    return cat(0, np.int64), tf, cat(2, np.uint8), bounds, pos
+
+
+_KERNEL_COLS = ["num_docs", "first_doc", "last_doc", "max_tf", "min_nb",
+                "sum_tf", "docs_bin", "tfs_bin", "norms_bin", "pos_bin"]
+
+
+@pytest.mark.parametrize("positions", [True, False])
+def test_encode_blocks_equals_references(positions):
+    """codec.encode_blocks, the one engine encoder, writes byte for
+    byte what the per-run references write: encode_term_blocks per
+    group at BLOCK_SIZE and reblock_runs (which adds min_nb and sum_tf)
+    over the group's partial runs, and encode_run per group when
+    unbounded. Groups of 1, 127, 128, 129 and 300 docs; its blocks
+    decode back through decode_blocks."""
+    from lucene_solr_spark.index.codec import (
+        encode_blocks,
+        encode_run,
+        reblock_runs,
+    )
+
+    rng = np.random.default_rng(31)
+    sizes = [1, 127, 128, 129, 300]
+    groups = _kernel_groups(rng, sizes, positions)
+    doc, tf, nb, bounds, pos = _kernel_input(groups, positions)
+    assert doc[0] > 2**31 and tf.max() > 127
+    got = encode_blocks(doc, tf, nb, bounds, 128, pos)
+    assert list(got["group"]) == [0, 1, 2, 3, 3, 4, 4, 4]
+    want = []
+    for g, (d, t, n, p) in enumerate(groups):
+        ref = encode_term_blocks(d, t, n, p)
+        # the same run dealt into two interleaved partials
+        partials = [
+            encode_run(
+                d[k::2], t[k::2], n[k::2],
+                np.concatenate(p[k::2]) if p else None,
+            )
+            for k in (0, 1) if len(d[k::2])
+        ]
+        merged = reblock_runs(sorted(partials, key=lambda r: r["first_doc"]),
+                              positions)
+        assert len(ref) == len(merged)
+        for a, b in zip(ref, merged):
+            assert {k: b[k] for k in a} == a
+            want.append(tuple(b[k] for k in _KERNEL_COLS))
+    rows = list(got[_KERNEL_COLS].itertuples(index=False, name=None))
+    assert rows == want
+    # unbounded: one row per group, each the group's encode_run
+    runs = encode_blocks(doc, tf, nb, bounds, None, pos)
+    assert len(runs) == len(sizes)
+    for (d, t, n, p), row in zip(
+        groups, runs.to_dict("records")
+    ):
+        ref = encode_run(d, t, n, np.concatenate(p) if p else None)
+        assert {k: row[k] for k in ref} == ref
+        assert row["sum_tf"] == int(t.sum())
+    # round trip
+    got["term"] = "t"
+    table = pa.Table.from_pandas(
+        got.drop(columns=["group"]), preserve_index=False
+    )
+    dec = decode_blocks(table, positions)
+    assert (dec["doc_id"].to_numpy() == doc).all()
+    assert (dec["tf"].to_numpy() == tf).all()
+    assert (dec["norm_byte"].to_numpy() == nb).all()
+    if positions:
+        for a, b in zip(dec["positions"], (p for g in groups for p in g[3])):
+            assert (a == b).all()
+    else:
+        assert dec["positions"].isna().all()
+
+
+def test_encode_blocks_zero_groups_and_moved_spans():
+    """No groups gives no rows; position spans handed over out of order
+    (as the merge hands them after repairing interleaved runs) are laid
+    end to end in row order."""
+    from lucene_solr_spark.index.codec import encode_blocks
+
+    empty = encode_blocks(
+        np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0, np.uint8),
+        np.zeros(1, np.int64), 128, (b"", np.zeros(0, np.int64),
+                                     np.zeros(0, np.int64)),
+    )
+    assert len(empty) == 0 and list(empty.columns) == ["group"] + _KERNEL_COLS
+    rng = np.random.default_rng(32)
+    [(d, t, n, p)] = _kernel_groups(rng, [200], True)
+    _, tf, _, bounds, (stream, lo, hi) = _kernel_input([(d, t, n, p)], True)
+    rev = np.arange(len(d))[::-1]
+    # the docs' spans listed backwards over a stream stored backwards
+    back = b"".join(bytes(stream[a:b]) for a, b in zip(lo[rev], hi[rev]))
+    lens = (hi - lo)[rev]
+    blo = np.concatenate(([0], np.cumsum(lens)[:-1]))[rev]
+    got = encode_blocks(d, t, n, bounds, 128, (back, blo, blo + (hi - lo)))
+    want = encode_term_blocks(d, t, n, p)
+    assert list(got["pos_bin"]) == [b["pos_bin"] for b in want]
+
+
 @pytest.fixture(scope="module")
 def seg_index(tiny_index, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("segidx"))
@@ -551,29 +683,23 @@ def test_batch_merge_equals_per_group_reference():
     assert got == want and len(want) > 100
 
 
-def test_terms_stats_side_parts_equal_postings_metadata(
-    spark, tiny_pdf, tmp_path
-):
-    """A fresh full build derives terms_stats from the reduce tasks' side
-    parts (_term_stats_parts), never re-reading the postings store, and
-    records that path in the manifest; the result must equal the
-    (term, bucket) -> (df, ttf) aggregation over the block metadata (the
-    fallback/read-back definition)."""
+def test_terms_stats_equal_postings_metadata(spark, tiny_pdf, tmp_path):
+    """A fresh full build writes terms_stats as the (term, bucket) ->
+    (df, ttf) aggregation over the block metadata, leaves no side
+    directory behind, and its collection stats agree."""
     import os
 
     import pyspark.sql.functions as F
 
     from lucene_solr_spark.index.segments import build_segment_store
 
-    d = str(tmp_path / "sideparts")
+    d = str(tmp_path / "metastats")
     sdf = spark.createDataFrame(
         tiny_pdf.drop(columns=["doc_id"])
     ).repartition(4, "conv_id")
     seg = build_segment_store(
         spark, sdf, d, n_buckets=8, order_cols=["conv_id", "turn_idx"]
     )
-    assert seg.manifest["terms_stats_from"] == "side_parts"
-    # the parts are dead bytes once terms_stats is written
     assert not os.path.exists(os.path.join(d, "_term_stats_parts"))
     got = {
         (r["term"], r["bucket"]): (int(r["df"]), int(r["ttf"]))
