@@ -29,7 +29,7 @@ from lucene_solr_spark.functions.text_analysis import (
     with_token_counts,
 )
 from lucene_solr_spark.index.builder import InvertedIndex, build_index
-from lucene_solr_spark.search.executor import Searcher
+from lucene_solr_spark.search.executor import Searcher, TopDocs
 from lucene_solr_spark.search.highlight import highlight
 from lucene_solr_spark.search.morelikethis import more_like_this
 from lucene_solr_spark.search.query import (
@@ -137,8 +137,10 @@ def _stream_reader(spark: SparkSession, sf_dir: str):
     return r
 
 
-def _topk_rounded(df: DataFrame) -> DataFrame:
-    return df.select("doc_id", F.round("score", 4).alias("score"))
+def _topk_rounded(hits: TopDocs | DataFrame) -> DataFrame:
+    if isinstance(hits, TopDocs):
+        hits = hits.df
+    return hits.select("doc_id", F.round("score", 4).alias("score"))
 
 
 def _bool(must=(), should=(), must_not=(), msm=0) -> BooleanQuery:
@@ -5515,7 +5517,7 @@ def entry(spark: SparkSession) -> DataFrame:
     sf_dir = "/root/testdata/sf0.001"
     idx = build_index(spark, _docs(spark, sf_dir), cache=True)
     s = Searcher(idx)
-    top = s.search(_bool(should=["scan", "merge", "key"]), 10)
+    top = s.search(_bool(should=["scan", "merge", "key"]), 10).df
     return top.join(idx.docs.select("doc_id", "lang", "text"), "doc_id").select(
         "doc_id", F.round("score", 4).alias("score"), "lang", "text"
     )

@@ -21,9 +21,14 @@ Physical shapes (SURVEY.md §2.4, §2.7-2.9):
     (TopScoreDocCollector.java:40-62, QueryComponent.java:747-800).
     A routed query whose postings fetch is within the driver-decode
     bound (wand.py) skips that plan: it scores, sums and takes the same
-    (score desc, doc_id asc) top-k in numpy on the driver and returns
-    the k hits as a local table (Searcher._hits), whose collect() runs
-    no Spark job.
+    (score desc, doc_id asc) top-k in numpy on the driver.
+  - result: every top-k path returns a TopDocs (IndexSearcher.search's
+    TopDocs{ScoreDoc[]}). A driver finish holds its k hits as a pyarrow
+    table, so reading them sends nothing over py4j; a Catalyst path
+    holds its lazy orderBy(...).limit(k) plan and pulls it once, as k
+    Arrow rows. ``TopDocs.df`` is the Spark DataFrame for join-back and
+    plan inspection: the plan itself, or a LocalTableScan of the driver
+    hits built only when asked for.
   - routing: every index that speaks the split read protocol
     (index/segments.py SplitIndex — a segment store, or the
     near-real-time reader as a one-split index) routes; the flat
@@ -36,7 +41,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
@@ -136,6 +141,60 @@ def arrow_frame(
     return spark.createDataFrame(table, schema)
 
 
+_HIT = Row("doc_id", "score")
+
+
+class TopDocs:
+    """A top-k result: at most k (doc_id, score) hits in (score desc,
+    doc_id asc) order, the HitQueue order (HitQueue.java:76-81).
+
+    It holds either the driver finish's hits as a pyarrow ``table`` of
+    the hits ``schema``, or ``df``, the lazy Catalyst top-k plan, which
+    to_arrow() pulls once as a k-row Arrow table. ``df`` is the Spark
+    DataFrame of the hits for callers that need one (join-back, plan
+    inspection); for driver hits it is built on first use."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        schema: StructType,
+        table: pa.Table | None = None,
+        df: DataFrame | None = None,
+    ):
+        self._spark = spark
+        self.schema = schema
+        self._table = table
+        self._df = df
+
+    def to_arrow(self) -> pa.Table:
+        if self._table is None:  # the plan ends in limit(k)
+            self._table = self._df.toArrow().cast(
+                to_arrow_schema(self.schema)
+            )
+        return self._table
+
+    def collect(self) -> list[Row]:
+        t = self.to_arrow()
+        return [
+            _HIT(d, s)
+            for d, s in zip(
+                t["doc_id"].to_pylist(), t["score"].to_pylist()
+            )
+        ]
+
+    def toPandas(self) -> pd.DataFrame:
+        return self.to_arrow().to_pandas()
+
+    def __len__(self) -> int:
+        return self.to_arrow().num_rows
+
+    @property
+    def df(self) -> DataFrame:
+        if self._df is None:
+            self._df = self._spark.createDataFrame(self._table, self.schema)
+        return self._df
+
+
 class Searcher:
     """Two precision modes:
 
@@ -168,8 +227,11 @@ class Searcher:
 
     # ---------- public API ----------
 
-    def search(self, q: Query, k: int = 10, prune: bool = True) -> DataFrame:
-        """TopDocs analogue: top-k (doc_id, score), HitQueue tie-break.
+    def search(self, q: Query, k: int = 10, prune: bool = True) -> TopDocs:
+        """IndexSearcher.search: the top-k (doc_id, score) hits as a
+        TopDocs, HitQueue tie-break. A routed query finished on the
+        driver holds its hits there, so collect() on it sends no py4j
+        command; ``.df`` is the hits as a Spark DataFrame, for join-back.
 
         On a SplitIndex (a segment store or the near-real-time reader),
         pure term conjunctions/disjunctions and phrases route to the
@@ -183,10 +245,7 @@ class Searcher:
             routed = self._wand_route(q, k)
             if routed is not None:
                 return routed
-        scored = self.score(q)
-        return scored.orderBy(
-            F.desc("score"), F.asc("doc_id")
-        ).limit(k)
+        return self._top_k(self.score(q), k)
 
     # The seed-then-prune walk (wand._split_topk) runs only on an index
     # of at least this many splits: with fewer, the seed job's fixed
@@ -198,7 +257,7 @@ class Searcher:
     # At the default 2^20-wide splits the walk needs >= ~7.3M docs.
     MIN_ROUTE_SPLITS = 8
 
-    def _wand_route(self, q: Query, k: int) -> DataFrame | None:
+    def _wand_route(self, q: Query, k: int) -> TopDocs | None:
         """Route top-k shapes the split-bound machinery covers to the
         pruned paths when the index speaks the split read protocol
         (SplitIndex: a segment store or the near-real-time reader);
@@ -248,8 +307,9 @@ class Searcher:
 
     def search_after(
         self, q: Query, after_score: float, after_doc: int, k: int = 10
-    ) -> DataFrame:
-        """Deep paging (IndexSearcher.searchAfter, :225-247)."""
+    ) -> TopDocs:
+        """Deep paging (IndexSearcher.searchAfter, :225-247): the k hits
+        after (after_score, after_doc) in HitQueue order, as a TopDocs."""
         scored = self.score(q)
         cur = scored.where(
             (F.col("score") < F.lit(after_score))
@@ -258,7 +318,7 @@ class Searcher:
                 & (F.col("doc_id") > F.lit(after_doc))
             )
         )
-        return cur.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._top_k(cur, k)
 
     def score(self, q: Query) -> DataFrame:
         """All matching docs: DataFrame(doc_id long, score float)."""
@@ -307,17 +367,27 @@ class Searcher:
             ]
         )
 
-    def _hits(self, doc_id=(), score=()) -> DataFrame:
-        """The one result frame built on the driver: the given
-        (doc_id, score) rows, in their order (none: an empty result),
-        as an arrow_frame, so collect() on it runs no Spark job."""
-        return arrow_frame(
-            self.index.spark,
-            self._hits_schema,
+    def _top_docs(self, doc_id=(), score=()) -> TopDocs:
+        """The given (doc_id, score) hits, in their order (none: an
+        empty result), held on the driver."""
+        schema = self._hits_schema
+        table = pa.table(
             {
                 "doc_id": np.asarray(doc_id, dtype=np.int64),
                 "score": np.asarray(score, dtype=self._score_dtype),
             },
+            schema=to_arrow_schema(schema),
+        )
+        return TopDocs(self.index.spark, schema, table=table)
+
+    def _top_k(self, scored: DataFrame, k: int) -> TopDocs:
+        """The top-k of ``scored`` (doc_id, score) rows as a lazy plan:
+        TakeOrderedAndProject, a bounded heap per partition and one
+        merge (TopScoreDocCollector.java:40-62)."""
+        return TopDocs(
+            self.index.spark,
+            self._hits_schema,
+            df=scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k),
         )
 
     def _term_scores(self, weight, tf, norm_byte) -> np.ndarray:
@@ -470,6 +540,10 @@ class Searcher:
         )
         return self._apply_score_col(df, weights)
 
+    def _no_hits(self) -> DataFrame:
+        """An empty score() result."""
+        return self._empty_scored().select("doc_id", "score")
+
     def _empty_scored(self) -> DataFrame:
         hits = self._hits_schema
         return arrow_frame(
@@ -515,7 +589,7 @@ class Searcher:
                 )
             )
         if not parts:
-            return self._hits()
+            return self._no_hits()
         unioned = parts[0]
         for p in parts[1:]:
             unioned = unioned.unionByName(p)
@@ -590,7 +664,7 @@ class Searcher:
         (BM25Similarity.idfExplain:185-196), freq = phrase frequency."""
         terms = list(q.terms)
         if any(t not in term_stats for t in terms):
-            return self._hits()
+            return self._no_hits()
         if q.slop > 0:
             return self._score_phrase_sloppy(q, term_stats)
         n = len(terms)
@@ -699,7 +773,7 @@ class Searcher:
         (MultiPhraseWeight ctor :135-160), zero-df terms included."""
         n = len(q.positions)
         if n == 0:
-            return self._hits()
+            return self._no_hits()
         flat = [t for arr in q.positions for t in arr]
         present = [
             sorted({t for t in arr if t in term_stats})
@@ -707,7 +781,7 @@ class Searcher:
         ]
         if any(not alts for alts in present):
             # a slot with no indexed alternative can never match
-            return self._hits()
+            return self._no_hits()
         if q.slop > 0:
             return self._score_multi_phrase_sloppy(q, present, flat, term_stats)
         parts = []
@@ -909,7 +983,7 @@ class Searcher:
                 .collect()
             )
             if not sample:
-                return self._hits()
+                return self._no_hits()
             if len(sample) <= MULTITERM_REWRITE_CAP:
                 src = self.index.postings_for_terms(
                     [r["term"] for r in sample]

@@ -44,8 +44,8 @@ a shuffle engine):
       finishes the query in numpy (_split_topk): score with the
       Searcher's BM25 kernel, sum per doc in a fixed term order (or
       count phrase occurrences), take top-k by (score desc, doc_id asc)
-      and return the k hits as a local table whose collect() starts no
-      job either, so a warm bounded query runs no Spark job at all;
+      and return the k hits as a driver-side TopDocs, so a warm bounded
+      query runs no Spark job and sends no py4j command at all;
     - above it, the Catalyst plan: the lazy fetch (mapInPandas decode of
       a segment store's blocks, a filter of the reader's flat
       postings), score, per-doc aggregate and TakeOrderedAndProject.
@@ -64,7 +64,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..index.segments import SplitIndex
-from .executor import Searcher, _clause_offsets
+from .executor import Searcher, TopDocs, _clause_offsets
 from .sloppy import clause_rows, sloppy_freqs
 
 # ---- cost model for the seed-then-prune engagement decision -----------
@@ -184,7 +184,7 @@ def _split_topk(
     finish,
     plan,
     stats_out: dict | None,
-) -> DataFrame:
+) -> TopDocs:
     """Top-k over the candidate splits ``cands`` = [(split, score upper
     bound, postings)], bound-desc: all at once, or the seed-then-prune
     walk when forced, or when the index has at least
@@ -194,18 +194,25 @@ def _split_topk(
     (decode_postings_local's frame, or None above the bound) — then
     ``finish(frame)``, the numpy (doc_id, score) arrays of every
     matching doc; an unbounded step is ``plan(splits)``, the Catalyst
-    plan of the same (doc_id, score) rows. A bounded seed gives θ and
-    merges with bounded survivors on the driver, so a query whose every
-    fetch is bounded returns a local table of its k hits."""
+    plan of the same (doc_id, score) rows. The walk's steps meet on the
+    driver: an unbounded step gives its top-k as a k-row pull, which
+    sets θ or merges with the other step's hits, so only a one-shot
+    unbounded query returns a lazy plan."""
 
     def score(splits: list[int]):
         frame = fetch(splits)
         return plan(splits) if frame is None else finish(frame)
 
-    def top(scored) -> DataFrame:
+    def top(scored) -> TopDocs:
         if isinstance(scored, tuple):
-            return searcher._hits(*_hits_topk(scored, k))
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            return searcher._top_docs(*_hits_topk(scored, k))
+        return searcher._top_k(scored, k)
+
+    def hits(scored) -> tuple[np.ndarray, np.ndarray]:
+        if isinstance(scored, tuple):
+            return _hits_topk(scored, k)
+        table = searcher._top_k(scored, k).to_arrow()
+        return table["doc_id"].to_numpy(), table["score"].to_numpy()
 
     if not force_prune and (
         searcher.index.n_splits < Searcher.MIN_ROUTE_SPLITS
@@ -217,17 +224,7 @@ def _split_topk(
 
     # -- seed threshold from the best-bounded split -----------------------
     seed_split = cands[0][0]
-    seed = score([seed_split])
-    if isinstance(seed, tuple):
-        seed = _hits_topk(seed, k)
-    else:
-        rows = top(seed).collect()
-        seed = (
-            np.asarray([r["doc_id"] for r in rows], dtype=np.int64),
-            np.asarray(
-                [r["score"] for r in rows], dtype=searcher._score_dtype
-            ),
-        )
+    seed = hits(score([seed_split]))
     theta = float(seed[1][-1]) if len(seed[0]) == k else float("-inf")
 
     # -- prune + score survivors ------------------------------------------
@@ -243,10 +240,8 @@ def _split_topk(
         stats_out["splits_decoded"] = 1 + len(survivors)
     if not survivors:
         return top(seed)
-    rest = score(survivors)
-    if isinstance(rest, tuple):
-        return top(tuple(np.concatenate(p) for p in zip(seed, rest)))
-    return top(rest.unionByName(searcher._hits(*seed)))
+    rest = hits(score(survivors))
+    return top(tuple(np.concatenate(p) for p in zip(seed, rest)))
 
 
 def _sum_finish(
@@ -433,7 +428,7 @@ def wand_or_search(
     terms: list[str],
     k: int = 10,
     force_prune: bool = False,
-) -> DataFrame:
+) -> TopDocs:
     """Top-k for OR(terms), rank-identical to
     ``searcher.search(Or(*terms), k)`` but decoding only splits whose
     block-max bound can beat the seed threshold."""
@@ -450,7 +445,7 @@ def wand_or_search(
             mult[t] = mult.get(t, 0) + 1
     present = list(mult)
     if not present:
-        return searcher._hits()
+        return searcher._top_docs()
     weights = {
         t: mult[t] * searcher._term_weight_value(t, term_stats, 1.0)
         for t in present
@@ -459,7 +454,7 @@ def wand_or_search(
     b = _split_bounds(searcher, present, weights)
     cands = _by_bound(b.split, b.tot, b.nd)
     if not cands:
-        return searcher._hits()
+        return searcher._top_docs()
 
     def plan(split_ids: list[int]) -> DataFrame:
         decoded = index.decode_postings(present, splits=split_ids).select(
@@ -490,7 +485,7 @@ def wand_and_search(
     k: int = 10,
     stats_out: dict | None = None,
     force_prune: bool = False,
-) -> DataFrame:
+) -> TopDocs:
     """Block-max pruned top-k for AND(terms) — rank-identical to
     ``searcher.search(BooleanQuery(MUST terms), k)``.
 
@@ -531,7 +526,7 @@ def wand_and_search(
             stats_out.update(
                 splits_any=0, splits_all=0, splits_decoded=0
             )
-        return searcher._hits()
+        return searcher._top_docs()
     weights = {
         t: searcher._term_weight_value(t, term_stats, 1.0) for t in musts
     }
@@ -548,7 +543,7 @@ def wand_and_search(
             splits_decoded=0,
         )
     if not cands:
-        return searcher._hits()
+        return searcher._top_docs()
 
     def plan(split_ids: list[int]) -> DataFrame:
         decoded = index.decode_postings(musts, splits=split_ids).select(
@@ -615,7 +610,7 @@ def wand_phrase_search(
     k: int = 10,
     stats_out: dict | None = None,
     force_prune: bool = False,
-) -> DataFrame:
+) -> TopDocs:
     """Block-max pruned top-k for a PhraseQuery — rank-identical to
     ``searcher.search(PhraseQuery(terms, slop), k)``.
 
@@ -651,7 +646,7 @@ def wand_phrase_search(
     if any(t not in term_stats for t in distinct):
         if stats_out is not None:
             stats_out.update(splits_any=0, splits_all=0, splits_decoded=0)
-        return searcher._hits()
+        return searcher._top_docs()
 
     # summed-idf weight, double path (mirrors _score_phrase_freqs)
     w = 0.0
@@ -678,7 +673,7 @@ def wand_phrase_search(
             splits_decoded=0,
         )
     if not candidates:
-        return searcher._hits()
+        return searcher._top_docs()
 
     q = PhraseQuery(list(terms), slop=slop)
 

@@ -1,9 +1,10 @@
-"""Driver memory stays bounded: every ``.collect()`` / ``.toPandas()``
-and every pyarrow read of table rows on the driver (``to_table``,
-``read_table``, ``read_row_group(s)``) in the package sits at a site
-whose result size is bounded by something other than the corpus (one
-aggregate row, a ``limit``, the query's own terms, a per-bucket /
-per-split / per-partition count, ...).
+"""Driver memory stays bounded: every Spark read of rows to the driver
+(``.collect()``, ``.toPandas()``, ``.toArrow()``, ``.toLocalIterator()``,
+a zero-argument ``.first()``) and every pyarrow read of table rows
+(``to_table``, ``read_table``, ``read_row_group(s)``) in the package
+sits at a site whose result size is bounded by something other than the
+corpus (one aggregate row, a ``limit``, the query's own terms, a
+per-bucket / per-split / per-partition count, ...).
 
 A new site fails this test until it is added to BOUNDED with the bound
 that makes it safe. Entries are exact counts per enclosing function, so
@@ -63,12 +64,14 @@ BOUNDED: dict[tuple[str, str], tuple[int, str]] = {
     ("index/segments.py", "SegmentIndex._split_meta_rows"):
         (1, "block metadata of the query terms, memoized per term"),
     ("index/sorted_store.py", "build_sorted_store"):
-        (1, "one row per sort bucket"),
+        (2, "one row per sort bucket; first(): one global aggregate row"),
     ("search/clustering.py", "_tfidf_vectors"): (1, "limit(n_vocab)"),
     ("search/complexphrase.py", "_slot_terms"):
         (1, "limit(MAX_BASIC_QUERIES + 1)"),
     ("search/executor.py", "Searcher._score_multiterm"):
         (1, "limit(MULTITERM_REWRITE_CAP + 1)"),
+    ("search/executor.py", "TopDocs.to_arrow"):
+        (1, "a top-k plan: limit(k), pulled once"),
     ("search/explain.py", "explain_doc"): (1, DOC_LOOKUP),
     ("search/funcquery.py", "_compile"): (1, ONE_ROW),
     ("search/fuzzylikethis.py", "_variants"):
@@ -98,8 +101,6 @@ BOUNDED: dict[tuple[str, str], tuple[int, str]] = {
     ("search/surround.py", "_expand_terms"):
         (1, "limit(MAX_BASIC_QUERIES + 1)"),
     ("search/termvectors.py", "term_vector"): (1, DOC_LOOKUP),
-    ("search/wand.py", "_split_topk"):
-        (1, "seed top-k of an unbounded seed fetch: limit(k)"),
     ("streaming/incremental.py", "IncrementalIndexWriter.add_versioned"):
         (1, "conflict sample: limit(5)"),
     ("streaming/incremental.py", "IncrementalIndexWriter.compact"):
@@ -121,8 +122,19 @@ KNOWN_UNBOUNDED: dict[tuple[str, str], tuple[int, str]] = {
 }
 
 
-DRIVER_READS = ("collect", "toPandas", "to_table", "read_table",
-                "read_row_group", "read_row_groups")
+DRIVER_READS = ("collect", "toPandas", "toArrow", "toLocalIterator",
+                "to_table", "read_table", "read_row_group",
+                "read_row_groups")
+
+
+def _is_driver_read(call: ast.Call) -> bool:
+    """A call of a DRIVER_READS method, or DataFrame.first() — which
+    takes no argument, unlike the aggregate F.first(col)."""
+    if not isinstance(call.func, ast.Attribute):
+        return False
+    if call.func.attr == "first":
+        return not call.args and not call.keywords
+    return call.func.attr in DRIVER_READS
 
 
 def _driver_pulls() -> Counter:
@@ -136,11 +148,7 @@ def _driver_pulls() -> Counter:
                 if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
                                       ast.ClassDef)):
                     inner = f"{scope}.{child.name}" if scope else child.name
-                if (
-                    isinstance(child, ast.Call)
-                    and isinstance(child.func, ast.Attribute)
-                    and child.func.attr in DRIVER_READS
-                ):
+                if isinstance(child, ast.Call) and _is_driver_read(child):
                     found[(rel, scope)] += 1
                 walk(child, inner)
 
@@ -158,3 +166,12 @@ def test_every_driver_pull_is_at_a_bounded_site():
     )
     stale = {k: n for k, n in allowed.items() if found.get(k, 0) != n}
     assert not stale, f"allow-list entries that no longer match: {stale}"
+
+
+def test_scanner_matches_zero_argument_first_only():
+    src = ("df.first()\nF.first('x')\nF.first(c, ignorenulls=True)\n"
+           "df.toArrow()\ndf.toLocalIterator()\ndf.limit(1)\n")
+    calls = [s.value for s in ast.parse(src).body]
+    assert [_is_driver_read(c) for c in calls] == [
+        True, False, False, True, True, False
+    ]

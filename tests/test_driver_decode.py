@@ -5,9 +5,9 @@ A fetch of at most ``wand.overhead_eq_postings()`` postings is decoded
 on the driver and returned as a local frame; a larger one keeps the
 distributed ``mapInPandas`` decode. A bounded sloppy phrase also runs
 its position walk on the driver, and a bounded routed query (wand.py)
-scores and takes its top-k there, returning a local table of its hits.
-The two sides must be indistinguishable in results, and the bounded
-side must leave no Python stage in the query plan."""
+scores and takes its top-k there, returning a TopDocs that holds its
+hits on the driver. The two sides must be indistinguishable in results,
+and the bounded side must leave no Python stage in the query plan."""
 
 from __future__ import annotations
 
@@ -142,9 +142,9 @@ def test_sloppy_at_bound_plus_minus_one(seg, monkeypatch, family):
     got = {}
     for delta in (-1, 0, 1):
         _set_bound(monkeypatch, n + delta)
-        df = s.search(q, 10, prune=False)
-        assert ("MapInPandas" in _plan(df)) == (delta < 0)
-        got[delta] = [(r["doc_id"], r["score"]) for r in df.collect()]
+        top = s.search(q, 10, prune=False)
+        assert ("MapInPandas" in _plan(top.df)) == (delta < 0)
+        got[delta] = [(r["doc_id"], r["score"]) for r in top.collect()]
     assert got[-1], family
     assert got[-1] == got[0] == got[1]
 
@@ -159,7 +159,7 @@ def test_bounded_search_plan_has_no_python_node(seg, family, prune):
     assert _fetch_size(seg, sorted(_collect_terms(q))) <= (
         W.overhead_eq_postings()
     )
-    plan = _plan(Searcher(seg).search(q, 10, prune=prune))
+    plan = _plan(Searcher(seg).search(q, 10, prune=prune).df)
     assert "LocalTableScan" in plan, plan
     assert not any(p in plan for p in PYTHON_NODES), plan
 
@@ -187,10 +187,11 @@ def _hits(df) -> list:
     return [(r["doc_id"], r["score"]) for r in df.collect()]
 
 
-def _finished_on_driver(df) -> bool:
-    """The result is a bare local table of hits: no sort, no scan."""
-    return _plan(df).lstrip().startswith("== Physical Plan ==\n"
-                                          "LocalTableScan")
+def _finished_on_driver(top) -> bool:
+    """The TopDocs holds its hits on the driver: its ``df`` is a bare
+    local table of them, with no sort and no scan."""
+    return _plan(top.df).lstrip().startswith("== Physical Plan ==\n"
+                                              "LocalTableScan")
 
 
 def _routed_fetch_size(seg, q) -> int:
@@ -218,11 +219,11 @@ def test_driver_finish_matches_every_reference(
     q = QUERIES[family]
     s = Searcher(seg, exact_float32=exact)
     finish = s.search(q, 10)
-    assert _finished_on_driver(finish), _plan(finish)
+    assert _finished_on_driver(finish), _plan(finish.df)
     got = _hits(finish)
     _set_bound(monkeypatch, 0.0)  # every fetch above the bound
     catalyst = s.search(q, 10)
-    assert "TakeOrderedAndProject" in _plan(catalyst)
+    assert "TakeOrderedAndProject" in _plan(catalyst.df)
     exhaustive = s.search(q, 10, prune=False)
     assert got, family
     assert got == _hits(catalyst) == _hits(exhaustive)
@@ -243,9 +244,11 @@ def test_driver_finish_at_bound_plus_minus_one(seg, monkeypatch, family):
     got = {}
     for delta in (-1, 0, 1):
         _set_bound(monkeypatch, n + delta)
-        df = s.search(q, 10)
-        assert _finished_on_driver(df) == (delta >= 0), (delta, _plan(df))
-        got[delta] = _hits(df)
+        top = s.search(q, 10)
+        assert _finished_on_driver(top) == (delta >= 0), (
+            delta, _plan(top.df)
+        )
+        got[delta] = _hits(top)
     assert got[-1], family
     assert got[-1] == got[0] == got[1]
 
@@ -271,14 +274,14 @@ def _jobs(spark, run, group: str) -> tuple[int, object]:
     ids=["no-match", "and-absent", "term-absent"],
 )
 def test_zero_hit_routed_query(spark, seg, q, exact):
-    """No hits: an empty local table of the result schema, whose
+    """No hits: an empty driver-side TopDocs of the result schema, whose
     collect() starts no Spark job."""
     s = Searcher(seg, exact_float32=exact)
-    df = s.search(q, 10)
-    assert _finished_on_driver(df), _plan(df)
-    jobs, rows = _jobs(spark, df.collect, f"zero-hit-{exact}")
+    top = s.search(q, 10)
+    assert _finished_on_driver(top), _plan(top.df)
+    jobs, rows = _jobs(spark, top.collect, f"zero-hit-{exact}")
     assert rows == [] and jobs == 0
-    assert df.schema == s.search(TermQuery("timeout"), 10).schema
+    assert top.schema == s.search(TermQuery("timeout"), 10).schema
     assert s.search(q, 10, prune=False).collect() == []
 
 
@@ -301,7 +304,8 @@ def test_seed_walk_bounded_seed_unbounded_survivors(
 ):
     """force_prune with a bound that admits the seed split alone: the
     seed finishes on the driver (θ from its numpy top-k), the survivors
-    take the Catalyst route, and the merged top-k equals prune=False."""
+    take the Catalyst route, whose k-row top-k merges with the seed's
+    hits on the driver, and the merged top-k equals prune=False."""
     q, walk = SEED_WALKS[family]
     s = Searcher(seg, exact_float32=exact)
     want = _hits(s.search(q, 10, prune=False))
@@ -321,14 +325,12 @@ def test_seed_walk_bounded_seed_unbounded_survivors(
         monkeypatch, _fetch_size(seg, sorted(_collect_terms(q)), seed)
     )
     fetches.clear()
-    df = walk(s)
+    top = walk(s)
     assert len(fetches) > 1, fetches
     assert fetches[0] == (seed, True), fetches
     assert not any(bounded for _, bounded in fetches[1:]), fetches
-    # survivors merge with the seed's hits in the Catalyst top-k (an
-    # empty seed table is optimized out of the union)
-    assert "TakeOrderedAndProject" in _plan(df)
-    assert _hits(df) == want
+    assert _finished_on_driver(top), _plan(top.df)
+    assert _hits(top) == want
 
 
 @pytest.mark.parametrize("slop", [0, 2])
@@ -349,5 +351,5 @@ def test_repeated_term_phrase_matches_oracle(
     assert_topk_equal(driver.collect(), want)
     _set_bound(monkeypatch, 0.0)
     distributed = s.search(q, 10, prune=False)
-    assert "MapInPandas" in _plan(distributed)
+    assert "MapInPandas" in _plan(distributed.df)
     assert_topk_equal(distributed.collect(), want)

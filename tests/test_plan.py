@@ -76,7 +76,7 @@ def test_topk_is_take_ordered_not_global_sort(seg):
     from lucene_solr_spark.search.query import Or
 
     top = s.search(Or("error", "timeout"), 10, prune=False)
-    plan = _plan(top)
+    plan = _plan(top.df)
     assert "TakeOrderedAndProject" in plan, plan
 
 

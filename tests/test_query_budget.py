@@ -3,14 +3,15 @@ driver sends to build and run it, and how many Spark jobs it starts.
 
 Every py4j command is a round trip over the Python/JVM bridge, and on a
 small store they, not Spark work, were most of a query's wall time. A
-warm query (its term metadata memoized by a first run) must stay within
-MAX_PY4J_COMMANDS commands per family. Its fetch is within the
-driver-decode bound, so it runs no Spark job: the postings of a segment
-store's bucket directories, or of a near-real-time reader's live
-segments, are read from parquet on the driver, and the query finishes
-there, leaves no Python node in its plan and never builds a
-one-partition local frame (segments.local_frame) — in both precision
-modes."""
+warm query (its term metadata memoized by a first run) sends none.
+Its fetch is within the driver-decode bound, so it runs no Spark job:
+the postings of a segment store's bucket directories, or of a
+near-real-time reader's live segments, are read from parquet on the
+driver, and the query finishes there. Its hits come back as a
+driver-side TopDocs, so search(q, k).collect() builds no DataFrame
+(SparkSession.createDataFrame), never builds a one-partition local
+frame (segments.local_frame), and its ``.df`` plan has no Python node
+— in both precision modes."""
 
 from __future__ import annotations
 
@@ -19,13 +20,14 @@ import threading
 
 import pandas as pd
 import pytest
+from pyspark.sql import SparkSession
 
 from lucene_solr_spark.search.executor import Searcher
 from lucene_solr_spark.search.query import And, Or, PhraseQuery, TermQuery
 from tests.test_driver_decode import PYTHON_NODES, _plan
 
 JOBS = 0
-MAX_PY4J_COMMANDS = 1000
+MAX_PY4J_COMMANDS = 0
 
 QUERIES = {
     "term": TermQuery("timeout"),
@@ -121,20 +123,26 @@ def _check_budget(spark, monkeypatch, index, family: str) -> None:
             W, name,
             lambda *a, _inner=inner, **kw: routed.append(1) or _inner(*a, **kw),
         )
+
+    def no_frame(*a, **kw):
+        pytest.fail("a bounded routed query built a DataFrame")
+
     for exact in (False, True):
         searcher = Searcher(index, exact_float32=exact)
         warm = searcher.search(q, 10).collect()  # memoizes term metadata
         assert routed, f"{family} query was not routed"
-        commands, jobs, rows = _cost(
-            spark, monkeypatch, lambda: searcher.search(q, 10).collect(),
-            f"budget-{type(index).__name__}-{family}-{exact}",
-        )
+        with monkeypatch.context() as m:
+            m.setattr(SparkSession, "createDataFrame", no_frame)
+            commands, jobs, rows = _cost(
+                spark, monkeypatch, lambda: searcher.search(q, 10).collect(),
+                f"budget-{type(index).__name__}-{family}-{exact}",
+            )
         assert rows == warm and rows, family
         assert jobs == JOBS, f"{family}, exact={exact}: {jobs} Spark jobs"
         assert commands <= MAX_PY4J_COMMANDS, (
             f"{family}, exact={exact}: {commands} py4j commands"
         )
-        plan = _plan(searcher.search(q, 10))
+        plan = _plan(searcher.search(q, 10).df)
         assert not any(p in plan for p in PYTHON_NODES), plan
 
 

@@ -128,7 +128,7 @@ def test_reader_route_matches_every_reference(
     s = Searcher(reader, exact_float32=exact)
     finish = s.search(q, 10)
     assert routed, f"{family} was not routed"
-    assert _finished_on_driver(finish), _plan(finish)
+    assert _finished_on_driver(finish), _plan(finish.df)
     got = _hits(finish)
     exhaustive = s.search(q, 10, prune=False)
     flat = Searcher(_flat(reader), exact_float32=exact).search(q, 10)
@@ -210,9 +210,11 @@ def test_reader_fetch_at_bound_plus_minus_one(
     got = {}
     for delta in (-1, 0, 1):
         _set_bound(monkeypatch, n + delta)
-        df = s.search(q, 10)
-        assert _finished_on_driver(df) == (delta >= 0), (delta, _plan(df))
-        got[delta] = _hits(df)
+        top = s.search(q, 10)
+        assert _finished_on_driver(top) == (delta >= 0), (
+            delta, _plan(top.df)
+        )
+        got[delta] = _hits(top)
     assert got[-1], family
     assert got[-1] == got[0] == got[1]
 
@@ -230,11 +232,11 @@ def test_reader_fetch_at_bound_plus_minus_one(
 def test_zero_hit_reader_query(spark, readers, q, exact):
     reader, _ = readers["compacted"]
     s = Searcher(reader, exact_float32=exact)
-    df = s.search(q, 10)
-    assert _finished_on_driver(df), _plan(df)
-    jobs, rows = _jobs(spark, df.collect, f"reader-zero-hit-{exact}")
+    top = s.search(q, 10)
+    assert _finished_on_driver(top), _plan(top.df)
+    jobs, rows = _jobs(spark, top.collect, f"reader-zero-hit-{exact}")
     assert rows == [] and jobs == 0
-    assert df.schema == s.search(TermQuery("timeout"), 10).schema
+    assert top.schema == s.search(TermQuery("timeout"), 10).schema
     assert s.search(q, 10, prune=False).collect() == []
 
 

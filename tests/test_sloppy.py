@@ -74,7 +74,7 @@ def test_sloppy_rank_identity(tiny_searcher, tiny_oracle, terms, slop):
 def test_repeated_terms_now_supported(tiny_searcher):
     """hasRpts phrases no longer raise; they score via the repeat walk."""
     out = tiny_searcher.search(PhraseQuery(["error", "error"], 2), 10)
-    assert out.columns == ["doc_id", "score"]
+    assert out.schema.names == ["doc_id", "score"]
     out.collect()  # must execute without NotImplementedError
 
 

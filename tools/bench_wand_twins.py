@@ -2,10 +2,10 @@
 """Prove the WAND cost model never makes a query slower than its
 exhaustive twin: time, on the SAME persisted segment store,
 
-  exhaustive  — searcher.search(q, prune=False) (full decode)
-  auto        — searcher.search(q) (cost-model routed: one-shot
-                candidate decode or seed-then-prune walk, whichever
-                the block metadata predicts wins)
+  exhaustive  — searcher.search(q, prune=False).collect() (full decode)
+  auto        — searcher.search(q).collect() (cost-model routed:
+                one-shot candidate decode or seed-then-prune walk,
+                whichever the block metadata predicts wins)
 
 for the headline OR / AND / phrase shapes. The round-4 verdict's
 done-criterion: no auto-routed WAND query slower than its exhaustive
@@ -44,11 +44,13 @@ def main() -> None:
         ("phrase", PhraseQuery(["merge", "commit"])),
     ]
 
-    def t(fn):
+    def t(q, prune: bool) -> float:
+        """Median wall time of search(q, 10).collect(): building the
+        top-k and reading its rows, as perfbench times a query."""
         xs = []
         for _ in range(reps):
             t0 = time.perf_counter()
-            fn().count()
+            s.search(q, 10, prune=prune).collect()
             xs.append(time.perf_counter() - t0)
         return statistics.median(xs)
 
@@ -56,10 +58,10 @@ def main() -> None:
     worst = 0.0
     for name, q in shapes:
         # warm both paths once so neither pays first-run JIT/cache
-        s.search(q, 10, prune=False).count()
-        s.search(q, 10).count()
-        ex = t(lambda: s.search(q, 10, prune=False))
-        au = t(lambda: s.search(q, 10))
+        s.search(q, 10, prune=False).collect()
+        s.search(q, 10).collect()
+        ex = t(q, prune=False)
+        au = t(q, prune=True)
         ratio = au / ex if ex > 0 else float("inf")
         worst = max(worst, ratio)
         print(
