@@ -21,8 +21,9 @@ array<long>, n_terms, saturated)``. A query term's hash is computed
 once on the driver (the term is a plan-time constant) and tested
 against every split's words either
 
-  - driver-side over a one-time collected numpy cache when the whole
-    bloom table is small (a few MB — zero extra Spark jobs per query), or
+  - driver-side over a numpy cache read once with pyarrow when the
+    whole bloom table is small (its parquet footers say how small), so
+    opening the blooms and every lookup start no Spark job, or
   - as ONE narrow Catalyst scan over the blooms parquet (element_at +
     bit ops, no shuffle) when it is not — metadata-scale, far below the
     postings/blocks table it saves decoding.
@@ -47,8 +48,11 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from .segments import DriverParquet
 
 _SEED = 0x9747B28C
 _M = 0x5BD1E995
@@ -228,7 +232,10 @@ def build_blooms(
     the BloomFilteringPostingsFormat write path (size for 10%
     saturation over the split's distinct terms, downsize(0.1) before
     serializing, retire >90%-saturated filters). One applyInPandas
-    group per split; hashing is the vectorized numpy kernel."""
+    group per split over the (term, split) of each block; a term with
+    several blocks in a split is de-duplicated in its group, so the
+    build is one shuffle. Hashing is the vectorized numpy kernel.
+    Returns the persisted blooms, read with BLOOM_SCHEMA."""
     split_range = seg.split_range
 
     def _one_split(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -263,61 +270,66 @@ def build_blooms(
         (F.col("first_doc") / F.lit(split_range))
         .cast("long")
         .alias("split"),
-    ).distinct()
-    out = pairs.groupBy("split").applyInPandas(_one_split, BLOOM_SCHEMA)
-    out.coalesce(1).write.mode("overwrite").parquet(
-        f"{seg.index_dir}/blooms"
     )
-    return seg.spark.read.parquet(f"{seg.index_dir}/blooms")
+    out = pairs.groupBy("split").applyInPandas(_one_split, BLOOM_SCHEMA)
+    path = f"{seg.index_dir}/blooms"
+    out.coalesce(1).write.mode("overwrite").parquet(path)
+    return seg.spark.read.schema(BLOOM_SCHEMA).parquet(path)
 
 
 # Above this the whole bloom table stays distributed and each lookup is
-# one narrow metadata scan; below it we collect once to numpy and every
-# lookup afterwards costs zero Spark jobs.
+# one narrow metadata scan; below it the table is read once to numpy on
+# the driver and every lookup afterwards costs zero Spark jobs.
 _DRIVER_CACHE_MAX_BYTES = 64 * 1024 * 1024
 
 
 class BloomIndex:
-    """Query-side view over the persisted blooms — the FuzzySet
-    ``contains`` path, answering "which splits might contain this
-    term" (NO answers prune; MAYBE/saturated/null keep)."""
+    """Query-side view over the blooms persisted under ``index_dir`` —
+    the FuzzySet ``contains`` path, answering "which splits might
+    contain this term" (NO answers prune; MAYBE/saturated/null keep).
 
-    def __init__(self, spark: SparkSession, blooms: DataFrame):
+    Opening one starts no Spark job. The parquet footers price the
+    table (the uncompressed bytes of its row groups) against
+    _DRIVER_CACHE_MAX_BYTES; a table within it is read with pyarrow on
+    the driver, one (split, bloom_size, words) per row. A larger one
+    stays a lazy scan read with BLOOM_SCHEMA. Its footers are read
+    fresh, not from a store view's cache: the blooms of a generation
+    can be rebuilt."""
+
+    def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
-        self.blooms = blooms
+        path = f"{index_dir}/blooms"
+        self.blooms = spark.read.schema(BLOOM_SCHEMA).parquet(path)
         self._term_cache: dict[str, frozenset[int]] = {}
-        rows = blooms.select(
-            "split", "bloom_size", "words", "saturated"
-        ).collect() if self._small_enough(blooms) else None
-        if rows is not None:
+        footers = DriverParquet(index_dir).footers("blooms")
+        nbytes = sum(
+            meta.row_group(i).total_byte_size
+            for _, meta in footers
+            for i in range(meta.num_row_groups)
+        )
+        self._driver_rows = None
+        if nbytes <= _DRIVER_CACHE_MAX_BYTES:
             self._driver_rows = []
-            for r in rows:
-                w = (
-                    None
-                    if r["words"] is None
-                    else np.asarray(r["words"], dtype=np.int64).view(
-                        np.uint64
-                    )
+            for p, meta in footers:
+                t = pq.ParquetFile(p, metadata=meta).read(
+                    columns=["split", "bloom_size", "words"]
                 )
-                self._driver_rows.append(
-                    (int(r["split"]), int(r["bloom_size"]), w)
-                )
-        else:
-            self._driver_rows = None
-
-    @staticmethod
-    def _small_enough(blooms: DataFrame) -> bool:
-        est = blooms.agg(
-            F.sum(
-                F.coalesce(F.size("words"), F.lit(0)).cast("long") * 8
-            ).alias("b"),
-        ).collect()[0]["b"]
-        return (est or 0) <= _DRIVER_CACHE_MAX_BYTES
+                for split, size, words in zip(
+                    t.column("split").to_pylist(),
+                    t.column("bloom_size").to_pylist(),
+                    t.column("words"),
+                ):
+                    self._driver_rows.append((
+                        split,
+                        size,
+                        words.values.to_numpy().view(np.uint64)
+                        if words.is_valid
+                        else None,
+                    ))
 
     @classmethod
     def open(cls, seg) -> "BloomIndex":
-        blooms = seg.spark.read.parquet(f"{seg.index_dir}/blooms")
-        return cls(seg.spark, blooms)
+        return cls(seg.spark, seg.index_dir)
 
     def _splits_one(self, term: str) -> frozenset[int]:
         cached = self._term_cache.get(term)

@@ -16,6 +16,13 @@ Writers: one block encoder (codec.encode_blocks) and one tail.
   metadata, collection stats, manifest commit. The splitter and
   merge_stores (splitter._write_part_store) copy or re-encode blocks and
   finish in the same _commit_store.
+  Like Lucene's IndexWriter, which records a segment's doc count and
+  field schema when it flushes (SegmentInfo, FieldInfos), a writer never
+  reads back what it wrote to learn either: ``max_doc`` and each
+  bucket's block count are counted by Observations on the write jobs,
+  and every table is read with a schema the engine already has
+  (SEGMENT_SCHEMA, TERMS_STATS_SCHEMA, and the doc store's schema from
+  its own parquet footer), so no read starts a schema-inference job.
 
 Scale design:
   - postings are shuffled ONCE by (term, doc-range split): the split key
@@ -92,6 +99,17 @@ SEGMENT_SCHEMA = StructType(
         StructField("tfs_bin", BinaryType(), False),
         StructField("norms_bin", BinaryType(), False),
         StructField("pos_bin", BinaryType(), True),
+    ]
+)
+
+# (term, df, ttf, bucket): _commit_store's per-term aggregate of the
+# block metadata
+TERMS_STATS_SCHEMA = StructType(
+    [
+        StructField("term", StringType(), False),
+        StructField("df", LongType(), False),
+        StructField("ttf", LongType(), False),
+        StructField("bucket", IntegerType(), False),
     ]
 )
 
@@ -370,21 +388,42 @@ def _merge_partials_stream(split_range: int, keep_positions: bool):
 
 
 def _new_manifest(
-    n_buckets: int, keep_positions: bool, split_range: int
+    n_buckets: int, keep_positions: bool, split_range: int, max_doc: int
 ) -> dict:
-    """Generation 0 of a store: no bucket committed, stats filled in by
-    _commit_store."""
+    """Generation 0 of a store whose doc store holds ``max_doc`` docs:
+    no bucket committed, term stats filled in by _commit_store."""
     return {
         "generation": 0,
         "n_buckets": n_buckets,
         "block_size": BLOCK_SIZE,
         "split_range": split_range,
         "keep_positions": keep_positions,
-        "max_doc": 0,
+        "max_doc": max_doc,
         "sum_total_term_freq": 0,
         "avgdl": 0.0,
         "buckets": {},
     }
+
+
+def _write_docs(docs: DataFrame, path: str) -> int:
+    """Write the doc store to ``path`` and return its doc count, counted
+    DURING the write job (an Observation, as _append_blocks counts
+    blocks): no read-back pass over the doc store."""
+    obs = Observation()
+    (
+        docs.observe(obs, F.count(F.lit(1)).alias("n"))
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+    return int(obs.get["n"])
+
+
+def _read_blocks(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The store's postings blocks, read with SEGMENT_SCHEMA (``bucket``
+    the partition column, last, as partition discovery puts it)."""
+    return spark.read.schema(SEGMENT_SCHEMA).parquet(
+        f"{index_dir}/postings"
+    )
 
 
 def _append_blocks(
@@ -467,18 +506,20 @@ def _commit_store(
     """The one tail of every store writer: ``terms_stats`` from the block
     METADATA (df = Σ num_docs, ttf = Σ sum_tf per (term, bucket) —
     parquet column pruning never touches the binary block columns),
-    ``max_doc`` from the doc store, ``sum_total_term_freq`` from those
-    stats (summed as they are written), then the two-phase manifest
-    commit. Stats cover every
-    committed bucket, resumed ones included. This is the Lucene shape:
-    stats live in the segment files, not in a separate corpus pass
-    (SegmentInfos / TermContext accumulation). ``phases`` (seconds per
-    build phase) is recorded with this tail's own two."""
+    ``sum_total_term_freq`` from those stats (summed as they are
+    written), then the two-phase manifest commit. ``max_doc`` is the
+    manifest's: the count the writer observed while writing the doc
+    store, or, for a resumed build that did not rewrite it, the
+    committed one. Stats cover every committed bucket, resumed ones
+    included. This is the Lucene shape: stats live in the segment
+    files, not in a separate corpus pass (SegmentInfos / TermContext
+    accumulation). ``phases`` (seconds per build phase) is recorded
+    with this tail's own, ``terms_stats``."""
     phases = dict(phases or {})
     t0 = time.perf_counter()
     obs = Observation()
     (
-        spark.read.parquet(f"{index_dir}/postings")
+        _read_blocks(spark, index_dir)
         .groupBy("term", "bucket")
         .agg(
             F.sum("num_docs").cast("long").alias("df"),
@@ -490,13 +531,11 @@ def _commit_store(
         .parquet(f"{index_dir}/terms_stats")
     )
     sum_ttf = int(obs.get.get("sum_ttf") or 0)
-    t1 = time.perf_counter()
-    phases["terms_stats"] = round(t1 - t0, 3)
-    max_doc = spark.read.parquet(f"{index_dir}/docs").count()
-    phases["stats"] = round(time.perf_counter() - t1, 3)
-    manifest["max_doc"] = int(max_doc)
+    phases["terms_stats"] = round(time.perf_counter() - t0, 3)
     manifest["sum_total_term_freq"] = sum_ttf
-    manifest["avgdl"] = float(avg_field_length(sum_ttf, max_doc))
+    manifest["avgdl"] = float(
+        avg_field_length(sum_ttf, manifest["max_doc"])
+    )
     manifest["build_phase_sec"] = phases  # north-rule metrics: per-phase
     manifest["generation"] += 1
     commit_manifest(index_dir, manifest)
@@ -518,8 +557,10 @@ def write_segments(
     os.makedirs(index_dir, exist_ok=True)
     manifest = read_manifest(index_dir)
     if manifest is None:
-        index.docs.write.mode("overwrite").parquet(f"{index_dir}/docs")
-        manifest = _new_manifest(n_buckets, keep_positions, split_range)
+        manifest = _new_manifest(
+            n_buckets, keep_positions, split_range,
+            _write_docs(index.docs, f"{index_dir}/docs"),
+        )
     keep_positions = manifest["keep_positions"]
     cols = ["doc_id", "term", "tf", "norm_byte"]
     partials = index.postings.select(
@@ -553,7 +594,9 @@ def build_segment_store(
 
     Resume-safe at bucket granularity like write_segments: stats are
     recomputed from the on-disk blocks, so they cover buckets committed
-    by a previous crashed run. ``split_range`` None is SPLIT_RANGE, the
+    by a previous crashed run, and ``max_doc`` is the committed
+    manifest's (a resumed build does not rewrite the doc store).
+    ``split_range`` None is SPLIT_RANGE, the
     doc-range salt of the merge shuffle: partial runs are binary, so a
     Zipf-head term's whole group is a cheap vectorized merge and the
     salt only has to bound group size in memory."""
@@ -576,14 +619,15 @@ def build_segment_store(
                 docs, order_cols or ["conv_id", "turn_idx"]
             )
         mark("plan_docids")
-        docs.write.mode("overwrite").parquet(f"{index_dir}/docs")
+        max_doc = _write_docs(docs, f"{index_dir}/docs")
         mark("docs_write")
         manifest = _new_manifest(
             n_buckets,
             keep_positions,
             SPLIT_RANGE if split_range is None else split_range,
+            max_doc,
         )
-    src = spark.read.parquet(f"{index_dir}/docs").select(
+    src = _read_docs(spark, DriverParquet(index_dir)).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col(text_col).cast("string").alias("text"),
     )
@@ -722,6 +766,15 @@ class DriverParquet:
             self._footers[sub] = got
         return got
 
+    def spark_schema(self, sub: str) -> StructType:
+        """The Spark schema of the table Spark wrote to ``root/sub``: the
+        row metadata its parquet writer stores in every footer, which
+        is what Spark's own schema inference reads, so a read with it
+        starts no inference job."""
+        (_, meta), *_ = self.footers(sub)
+        key = b"org.apache.spark.sql.parquet.row.metadata"
+        return StructType.fromJson(json.loads(meta.metadata[key]))
+
     def row_groups(
         self, subs: list[str], terms: list[str], columns: list[str]
     ) -> "tuple[list[tuple[str, pq.FileMetaData, list[int]]], int]":
@@ -777,6 +830,14 @@ class DriverParquet:
         return table.filter(
             pc.is_in(table["term"], value_set=pa.array(terms, pa.string()))
         )
+
+
+def _read_docs(spark: SparkSession, parquet: DriverParquet) -> DataFrame:
+    """The doc store under ``parquet.root``, read with the schema in its
+    own footer (its columns are the caller's)."""
+    return spark.read.schema(parquet.spark_schema("docs")).parquet(
+        f"{parquet.root}/docs"
+    )
 
 
 SPLIT_META_COLUMNS = ["term", "split", "max_tf", "min_nb", "nd", "sum_tf"]
@@ -975,8 +1036,9 @@ class SegmentIndex(SplitIndex):
     lazily behind a term-pruned scan. Its splits are the doc ranges
     ``first_doc // split_range``, and split_meta has one row per
     block. A view is one immutable store generation, so the file
-    listings and footers of its bucket directories are read once
-    (DriverParquet)."""
+    listings and footers of its doc store and bucket directories are
+    read once (DriverParquet). Opening one starts no Spark job: every
+    table is read with a schema the engine already has."""
 
     def __init__(
         self,
@@ -987,9 +1049,12 @@ class SegmentIndex(SplitIndex):
         self.spark = spark
         self.index_dir = index_dir
         self.manifest = manifest
-        self.docs = spark.read.parquet(f"{index_dir}/docs")
-        self.terms_stats = spark.read.parquet(f"{index_dir}/terms_stats")
-        self.blocks = spark.read.parquet(f"{index_dir}/postings")
+        self._parquet = DriverParquet(index_dir)
+        self.docs = _read_docs(spark, self._parquet)
+        self.terms_stats = spark.read.schema(TERMS_STATS_SCHEMA).parquet(
+            f"{index_dir}/terms_stats"
+        )
+        self.blocks = _read_blocks(spark, index_dir)
         self.stats = CollectionStats(
             max_doc=manifest["max_doc"],
             sum_total_term_freq=manifest["sum_total_term_freq"],
@@ -998,7 +1063,6 @@ class SegmentIndex(SplitIndex):
         self.split_range = int(manifest.get("split_range", SPLIT_RANGE))
         self._bucket_cache: dict[str, int] = {}
         self._split_meta_cache: "dict[str, pd.DataFrame]" = {}
-        self._parquet = DriverParquet(f"{index_dir}/postings")
 
     @property
     def n_splits(self) -> int:
@@ -1106,7 +1170,8 @@ class SegmentIndex(SplitIndex):
 
         cols = _DECODE_COLUMNS + (["pos_bin"] if want_positions else [])
         table = self._parquet.read(
-            [f"bucket={b}" for b in self.buckets_of(terms)], terms, cols,
+            [f"postings/bucket={b}" for b in self.buckets_of(terms)],
+            terms, cols,
             overhead_eq_bytes(),
         )
         if table is None:

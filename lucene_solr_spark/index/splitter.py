@@ -45,6 +45,7 @@ from .segments import (
     _block_rows,
     _commit_store,
     _new_manifest,
+    _write_docs,
 )
 
 # part-id column appended to SEGMENT_SCHEMA by the re-encode kernel.
@@ -114,22 +115,34 @@ def _write_part_store(
     docs: DataFrame,
     manifest_base: dict,
 ) -> SegmentIndex:
-    """Materialize one output store: postings (bucket-partitioned), the
-    doc store, then the shared stats-and-commit tail (per-term stats
-    re-aggregated from the part's own blocks, collection stats
-    recomputed, two-phase manifest)."""
+    """Materialize one output store: the doc store (its doc count
+    observed by the write), postings (bucket-partitioned), then the
+    shared stats-and-commit tail (per-term stats re-aggregated from the
+    part's own blocks, collection stats recomputed, two-phase
+    manifest)."""
     os.makedirs(out_dir, exist_ok=True)
     shutil.rmtree(f"{out_dir}/postings", ignore_errors=True)
     manifest = _new_manifest(
         manifest_base["n_buckets"],
         manifest_base["keep_positions"],
         manifest_base.get("split_range", SPLIT_RANGE),
+        _write_docs(docs, f"{out_dir}/docs"),
     )
     _append_blocks(
         blocks, out_dir, manifest, list(range(manifest["n_buckets"]))
     )
-    docs.write.mode("overwrite").parquet(f"{out_dir}/docs")
     return _commit_store(spark, out_dir, manifest)
+
+
+def _open_source(spark: SparkSession, src_dir: str) -> SegmentIndex:
+    """The committed store to split (its blocks and doc store are read
+    with the schemas the engine has: no inference job)."""
+    from .segments import read_manifest
+
+    man = read_manifest(src_dir)
+    if man is None:
+        raise ValueError(f"no committed manifest under {src_dir}")
+    return SegmentIndex(spark, src_dir, man)
 
 
 def pk_split(
@@ -145,12 +158,8 @@ def pk_split(
     entirely on one side copy verbatim; only straddling blocks decode.
     ``stats_out`` receives blocks_total / blocks_copied /
     blocks_reencoded — the metadata-speed-reshard proof hook."""
-    from .segments import read_manifest
-
-    man = read_manifest(src_dir)
-    if man is None:
-        raise ValueError(f"no committed manifest under {src_dir}")
-    blocks = spark.read.parquet(f"{src_dir}/postings")
+    src = _open_source(spark, src_dir)
+    man, blocks = src.manifest, src.blocks
     mid = int(mid_doc)
     lo_whole = blocks.where(F.col("last_doc") < mid)
     hi_whole = blocks.where(F.col("first_doc") >= mid)
@@ -174,19 +183,18 @@ def pk_split(
     seg_cols = [f.name for f in SEGMENT_SCHEMA.fields]
     re_lo = re.where(F.col("part") == 0).select(*seg_cols)
     re_hi = re.where(F.col("part") == 1).select(*seg_cols)
-    docs = spark.read.parquet(f"{src_dir}/docs")
     lo = _write_part_store(
         spark,
         out_lo,
         lo_whole.unionByName(re_lo),
-        docs.where(F.col("doc_id") < mid),
+        src.docs.where(F.col("doc_id") < mid),
         man,
     )
     hi = _write_part_store(
         spark,
         out_hi,
         hi_whole.unionByName(re_hi),
-        docs.where(F.col("doc_id") >= mid),
+        src.docs.where(F.col("doc_id") >= mid),
         man,
     )
     return lo, hi
@@ -202,11 +210,8 @@ def multipass_split(
     (doc_id % N, the reference default) or sequential doc ranges.
     Round-robin interleaves every block, so every block re-encodes —
     use pk_split when ranges suffice."""
-    from .segments import read_manifest
-
-    man = read_manifest(src_dir)
-    if man is None:
-        raise ValueError(f"no committed manifest under {src_dir}")
+    src = _open_source(spark, src_dir)
+    man = src.manifest
     n = len(out_dirs)
     max_doc = int(man["max_doc"])
     if sequential:
@@ -228,12 +233,10 @@ def multipass_split(
         def doc_part(col):
             return (col % F.lit(n)).cast("int")
 
-    blocks = spark.read.parquet(f"{src_dir}/postings")
-    re = blocks.mapInPandas(
+    re = src.blocks.mapInPandas(
         _reencode_kernel(part_of, man["keep_positions"]), _KERNEL_SCHEMA
     )
     re = re.localCheckpoint()  # one decode pass feeds all N writes
-    docs = spark.read.parquet(f"{src_dir}/docs")
     seg_cols = [f.name for f in SEGMENT_SCHEMA.fields]
     out = []
     for i, d in enumerate(out_dirs):
@@ -242,7 +245,7 @@ def multipass_split(
                 spark,
                 d,
                 re.where(F.col("part") == i).select(*seg_cols),
-                docs.where(doc_part(F.col("doc_id")) == i),
+                src.docs.where(doc_part(F.col("doc_id")) == i),
                 man,
             )
         )

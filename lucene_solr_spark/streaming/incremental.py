@@ -46,7 +46,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from ..functions.literals import sql_in
 from ..index.builder import (
@@ -60,6 +60,7 @@ from ..index.segments import (
     DriverParquet,
     SplitIndex,
     _empty_decoded,
+    _write_docs,
 )
 
 MANIFEST = "streaming_manifest.json"
@@ -120,7 +121,21 @@ class IncrementalIndexWriter:
 
     # -- sink --------------------------------------------------------------
 
+    @staticmethod
+    def _write_postings(postings: DataFrame, path: str) -> int:
+        """Write flat postings to ``path`` and return their Σ tf, summed
+        DURING the write job (an Observation): no read-back pass."""
+        obs = Observation()
+        (
+            postings.observe(obs, F.sum("tf").alias("sttf"))
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+        return int(obs.get["sttf"] or 0)
+
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        """Index one micro-batch as a delta segment. Its doc count and
+        Σ tf are counted by the two write jobs themselves."""
         man = _read(self.index_dir)
         key = str(batch_id)
         if key in man["segments"]:
@@ -132,28 +147,24 @@ class IncrementalIndexWriter:
         ).drop("local_id")
         docs = docs.persist()
 
-        seg_docs = f"{self.index_dir}/docs/seg={key}"
-        seg_post = f"{self.index_dir}/postings/seg={key}"
-        docs.write.mode("overwrite").parquet(seg_docs)
+        n_docs = _write_docs(docs, f"{self.index_dir}/docs/seg={key}")
         flat = docs.select(
             F.col("doc_id"),
             F.col(self.text_col).cast("string").alias("text"),
         ).mapInPandas(_invert_partitions, POSTINGS_FLAT_SCHEMA)
-        flat.write.mode("overwrite").parquet(seg_post)
-
-        written = self.spark.read.parquet(seg_post)
-        n_docs = docs.count()
-        sttf = written.agg(F.sum("tf")).collect()[0][0] or 0
+        sttf = self._write_postings(
+            flat, f"{self.index_dir}/postings/seg={key}"
+        )
         docs.unpersist()
 
         man["segments"][key] = {
             "doc_base": offset,
-            "max_doc": int(n_docs),
-            "sum_total_term_freq": int(sttf),
+            "max_doc": n_docs,
+            "sum_total_term_freq": sttf,
         }
-        man["next_doc_id"] = offset + int(n_docs)
-        man["n_docs"] = man.get("n_docs", 0) + int(n_docs)
-        man["sum_total_term_freq"] += int(sttf)
+        man["next_doc_id"] = offset + n_docs
+        man["n_docs"] = man.get("n_docs", 0) + n_docs
+        man["sum_total_term_freq"] += sttf
         man["generation"] += 1
         _commit(self.index_dir, man)
 
@@ -442,8 +453,9 @@ class IncrementalIndexWriter:
         PURGING tombstoned docs physically (merge-time delete
         reclamation, lucene/core/.../index/SegmentMerger.java skipping
         deleted docs via liveDocs) and refreshing collection stats from
-        the surviving postings — after a merge, df/sumTTF/N no longer
-        count deleted docs, exactly the reference's behavior.
+        the surviving postings (counted by the two write jobs) — after a
+        merge, df/sumTTF/N no longer count deleted docs, exactly the
+        reference's behavior.
         Returns True if a merge happened. Crash-safe: the merged segment
         is fully written before the manifest swap; old dirs are removed
         after commit (dead segments, like un-referenced .si files)."""
@@ -471,27 +483,18 @@ class IncrementalIndexWriter:
             ).select("doc_id").distinct()
             post = post.join(F.broadcast(tomb), "doc_id", "left_anti")
             docs = docs.join(F.broadcast(tomb), "doc_id", "left_anti")
-        post.write.mode("overwrite").parquet(
-            f"{self.index_dir}/postings/seg={merged_key}"
+        sttf = self._write_postings(
+            post, f"{self.index_dir}/postings/seg={merged_key}"
         )
-        docs.write.mode("overwrite").parquet(
-            f"{self.index_dir}/docs/seg={merged_key}"
-        )
-        merged_post = self.spark.read.parquet(
-            f"{self.index_dir}/postings/seg={merged_key}"
-        )
-        n_docs = self.spark.read.parquet(
-            f"{self.index_dir}/docs/seg={merged_key}"
-        ).count()
-        sttf = int(merged_post.agg(F.sum("tf")).collect()[0][0] or 0)
+        n_docs = _write_docs(docs, f"{self.index_dir}/docs/seg={merged_key}")
         man["segments"] = {
             merged_key: {
                 "doc_base": 0,
-                "max_doc": int(n_docs),
+                "max_doc": n_docs,
                 "sum_total_term_freq": sttf,
             }
         }
-        man["n_docs"] = int(n_docs)
+        man["n_docs"] = n_docs
         man["sum_total_term_freq"] = sttf
         old_deletes = man["deletes"]
         man["deletes"] = []

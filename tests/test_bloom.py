@@ -14,6 +14,7 @@ import numpy as np
 import pytest
 
 from lucene_solr_spark.index.bloom import (
+    BLOOM_SCHEMA,
     USABLE_BITSET_SIZES,
     BloomIndex,
     build_blooms,
@@ -230,7 +231,7 @@ def test_saturated_split_is_maybe_for_everything(spark, tmp_path):
     # contract directly through BloomIndex.
     import pandas as pd
 
-    blooms = spark.createDataFrame(
+    spark.createDataFrame(
         pd.DataFrame(
             {
                 "split": [0, 1],
@@ -239,9 +240,10 @@ def test_saturated_split_is_maybe_for_everything(spark, tmp_path):
                 "n_terms": [10, 10],
                 "saturated": [True, False],
             }
-        )
-    )
-    bi = BloomIndex(spark, blooms)
+        ),
+        BLOOM_SCHEMA,
+    ).coalesce(1).write.parquet(str(tmp_path / "blooms"))
+    bi = BloomIndex(spark, str(tmp_path))
     # split 0 (saturated) is MAYBE for any term; split 1 (all-zero
     # bloom) is NO for everything
     assert bi.splits_for(["anything"]) == frozenset({0})

@@ -1,7 +1,9 @@
 """Driver memory stays bounded: every Spark read of rows to the driver
 (``.collect()``, ``.toPandas()``, ``.toArrow()``, ``.toLocalIterator()``,
 a zero-argument ``.first()``) and every pyarrow read of table rows
-(``to_table``, ``read_table``, ``read_row_group(s)``) in the package
+(``to_table``, ``read_table``, ``read_row_group(s)``, and ``read``,
+``read_pandas`` or ``iter_batches`` of a ``ParquetFile`` /
+``ParquetDataset`` or of the ``pyarrow.parquet`` module) in the package
 sits at a site whose result size is bounded by something other than the
 corpus (one aggregate row, a ``limit``, the query's own terms, a
 per-bucket / per-split / per-partition count, ...).
@@ -50,8 +52,8 @@ BOUNDED: dict[tuple[str, str], tuple[int, str]] = {
         (1, "distinct n-grams of the eval set, never of the corpus"),
     ("datapipe/training.py", "domain_mix"): (1, "one row per domain"),
     ("index/bloom.py", "BloomIndex.__init__"):
-        (1, "only when _small_enough: <= _DRIVER_CACHE_MAX_BYTES"),
-    ("index/bloom.py", "BloomIndex._small_enough"): (1, ONE_ROW),
+        (1, "only when the footers' row-group bytes are <= "
+            "_DRIVER_CACHE_MAX_BYTES (64 MB); one row per split"),
     ("index/bloom.py", "BloomIndex._splits_one"): (1, "one row per split"),
     ("index/builder.py", "InvertedIndex.term_stats"): (1, QUERY_TERMS),
     ("index/builder.py", "build_index"): (1, ONE_ROW),
@@ -103,10 +105,6 @@ BOUNDED: dict[tuple[str, str], tuple[int, str]] = {
     ("search/termvectors.py", "term_vector"): (1, DOC_LOOKUP),
     ("streaming/incremental.py", "IncrementalIndexWriter.add_versioned"):
         (1, "conflict sample: limit(5)"),
-    ("streaming/incremental.py", "IncrementalIndexWriter.compact"):
-        (1, ONE_ROW),
-    ("streaming/incremental.py", "IncrementalIndexWriter.process_batch"):
-        (1, ONE_ROW),
     ("streaming/incremental.py", "StreamingIndexReader.__post_init__"):
         (1, "tombstone ids pending compaction: one int64 per deleted doc, "
             "read once per reader"),
@@ -125,15 +123,38 @@ KNOWN_UNBOUNDED: dict[tuple[str, str], tuple[int, str]] = {
 DRIVER_READS = ("collect", "toPandas", "toArrow", "toLocalIterator",
                 "to_table", "read_table", "read_row_group",
                 "read_row_groups")
+# names too common to match alone: they count only on a pyarrow receiver
+PYARROW_READS = ("read", "read_pandas", "iter_batches")
+PYARROW_READERS = ("ParquetFile", "ParquetDataset")
+PYARROW_MODULES = ("pq", "parquet")
+
+
+def _name(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return None
+
+
+def _is_pyarrow_receiver(node: ast.AST) -> bool:
+    """``pq.ParquetFile(...)`` / ``ParquetDataset(...)`` (any spelling
+    of the constructor), or the ``pyarrow.parquet`` module itself."""
+    if isinstance(node, ast.Call):
+        return _name(node.func) in PYARROW_READERS
+    return _name(node) in PYARROW_MODULES
 
 
 def _is_driver_read(call: ast.Call) -> bool:
-    """A call of a DRIVER_READS method, or DataFrame.first() — which
-    takes no argument, unlike the aggregate F.first(col)."""
+    """A call of a DRIVER_READS method, a PYARROW_READS method of a
+    pyarrow parquet reader, or DataFrame.first() — which takes no
+    argument, unlike the aggregate F.first(col)."""
     if not isinstance(call.func, ast.Attribute):
         return False
     if call.func.attr == "first":
         return not call.args and not call.keywords
+    if call.func.attr in PYARROW_READS:
+        return _is_pyarrow_receiver(call.func.value)
     return call.func.attr in DRIVER_READS
 
 
@@ -174,4 +195,25 @@ def test_scanner_matches_zero_argument_first_only():
     calls = [s.value for s in ast.parse(src).body]
     assert [_is_driver_read(c) for c in calls] == [
         True, False, False, True, True, False
+    ]
+
+
+def test_scanner_matches_pyarrow_reads_on_their_receiver_only():
+    src = (
+        "pq.ParquetFile(p).read()\n"
+        "pq.ParquetFile(p, metadata=m).read(columns=c)\n"
+        "ParquetFile(p).iter_batches()\n"
+        "pq.ParquetDataset(p).read()\n"
+        "pyarrow.parquet.ParquetDataset(p).read_pandas()\n"
+        "pq.read_pandas(p)\n"
+        "open(p).read()\n"
+        "f.read()\n"
+        "json.load(f).read()\n"
+        "pq.read_metadata(p)\n"
+        "reader.iter_batches()\n"
+    )
+    calls = [s.value for s in ast.parse(src).body]
+    assert [_is_driver_read(c) for c in calls] == [
+        True, True, True, True, True, True,
+        False, False, False, False, False,
     ]

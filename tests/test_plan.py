@@ -39,7 +39,8 @@ def test_block_scan_is_bucket_and_term_pruned(seg, monkeypatch):
     pf = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert pf and "term" in pf[0], plan
     # and the bounded pull on the driver prunes the same way: it opens
-    # only the query term's bucket directory
+    # only the query term's bucket directory (opening the view read the
+    # doc store's footer, for its schema)
     from lucene_solr_spark.index.segments import DriverParquet, SegmentIndex
 
     opened = []
@@ -53,7 +54,9 @@ def test_block_scan_is_bucket_and_term_pruned(seg, monkeypatch):
     fresh = SegmentIndex.open(seg.spark, seg.index_dir)
     assert fresh.postings_for_terms_local(["error"]) is not None
     assert len(fresh.buckets_of(["error"])) == 1
-    assert opened == [f"bucket={b}" for b in fresh.buckets_of(["error"])]
+    assert opened == ["docs"] + [
+        f"postings/bucket={b}" for b in fresh.buckets_of(["error"])
+    ]
 
 
 def test_doc_store_predicate_pushdown(spark):

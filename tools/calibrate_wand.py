@@ -143,7 +143,7 @@ def main() -> None:
     # -- 4. driver parquet read rate -------------------------------------
     cols = ["term", "first_doc", "num_docs", "docs_bin", "tfs_bin",
             "norms_bin", "pos_bin"]
-    subs = [f"bucket={b}" for b in index.buckets_of(terms)]
+    subs = [f"postings/bucket={b}" for b in index.buckets_of(terms)]
     _, nbytes = index._parquet.row_groups(subs, terms, cols)  # footers
     reads = []
     for _ in range(7):
